@@ -71,7 +71,9 @@ def main(argv: list[str] | None = None) -> int:
         emitter = StatsdEmitter(
             cfg.monitoring.statsd_host, cfg.monitoring.statsd_port, cfg.monitoring.statsd_prefix
         )
-        periodic_report(state, emitter, cfg.monitoring.metrics_period_seconds, stop)
+        periodic_report(
+            state, emitter, cfg.monitoring.metrics_period_seconds, stop, pipeline.actions
+        )
 
     if cfg.input.kind == "kinesis":
         source = kinesis_stream(spark, cfg.input)

@@ -107,7 +107,12 @@ def serialize_with_max_size(bad_row: Column, timestamp: Column, max_record_size:
     actualSizeBytes, with the original serialization trimmed to
     max_record_size/10 characters.
     """
-    serialized = F.to_json(bad_row)
+    return cap_serialized_size(F.to_json(bad_row), timestamp, max_record_size)
+
+
+def cap_serialized_size(serialized: Column, timestamp: Column, max_record_size: int) -> Column:
+    """The size rule of serialize_with_max_size over an already-serialized
+    bad row, so one capped column can pick between envelope types."""
     trimmed = F.substring(serialized, 1, max_record_size // 10)
     size_violation = F.to_json(
         F.struct(

@@ -7,17 +7,20 @@ reference-style filenames `<prefix><yyyy-MM-dd-HHmmss>-<uuid>.gz`.
 
 Spark-first design: a single distributed write job (partitionBy on the
 resolved partition string, gzip codec on the text sink, maxRecordsPerFile
-for the byte-cap soft limit), then an EXECUTOR-SIDE rename pass to the
-reference's layout: the driver only lists the staged files and fans the
-moves out via sc.parallelize — each task performs its own rename (on S3A a
-server-side metadata copy), mirroring the reference's parallel one-PutObject-
-per-file uploaders (Processing.scala:287-289). Only (path, bytes) metadata
-returns to the driver; nothing serializes through it.
+for the byte-cap soft limit), then a DRIVER-SIDE rename pass to the
+reference's layout: the driver lists the staged files and runs the moves on
+a thread pool sharing one S3 client — the reference's in-process parallel
+one-PutObject-per-file uploaders (Processing.scala:287-289), and what
+Hadoop's own commitJob does. On S3 a rename is a server-side CopyObject, so
+no data passes through the driver, and no Spark job is paid for it.
 
 The byte cap mirrors the reference's *soft* maxBytes semantics
 (Processing.scala:249 checks after exceeding; config comment calls it a soft
 limit): we translate maxBytes to a record-count cap using the batch's
 average compressed-line estimate rather than tracking exact compressed bytes.
+Both that estimate and the hot-partition salt plan come from one
+per-partition (rows, bytes) sizing aggregate, which the pipeline supplies
+from its own stats collect.
 """
 
 from __future__ import annotations
@@ -25,8 +28,10 @@ from __future__ import annotations
 import os
 import shutil
 import uuid as uuid_mod
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
+from functools import partial
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame
@@ -72,41 +77,45 @@ def _strip_file_scheme(p: str) -> str:
     return p
 
 
-def _move_one(
-    job: tuple[str, str],
-    s3_client: object | None = None,
-    client_factory: str | None = None,
-) -> tuple[str, int]:
-    """Executor-side rename of one staged file.
+def _s3_client(client_factory: str | None = None):
+    """The S3 client for one promotion: `client_factory` ("module:callable"
+    or "module:callable:arg") builds an injected fake, the default is boto3
+    (env-gated). boto3 clients are thread-safe, so one is shared by every
+    rename of the batch."""
+    if client_factory:
+        import importlib
+
+        mod_name, _, rest = client_factory.partition(":")
+        attr, _, arg = rest.partition(":")
+        fn = getattr(importlib.import_module(mod_name), attr)
+        return fn(arg) if arg else fn()
+    try:
+        import boto3  # optional — not in the base image
+    except ImportError as e:  # pragma: no cover - env gate
+        raise NotImplementedError(
+            "s3 blob rename requires boto3 (or run with a local "
+            "output path / keep part-file names)"
+        ) from e
+    return boto3.client("s3")
+
+
+def _is_s3(path: str) -> bool:
+    return path.startswith(("s3://", "s3a://"))
+
+
+def _move_one(job: tuple[str, str], s3_client: object | None = None) -> tuple[str, int]:
+    """Rename one staged file.
 
     Local paths (including file:// URIs): an actual filesystem move
-    (exist_ok makes the mkdir race-safe across concurrent tasks).
+    (exist_ok makes the mkdir race-safe across concurrent renames).
     s3://-style paths: S3 has no rename, so server-side CopyObject +
-    DeleteObject — one API call pair per file from each task in parallel,
-    exactly the reference's one-PutObject-per-file uploader shape
-    (Processing.scala:287-289). `s3_client` is injectable for tests;
-    `client_factory` ("module:callable") travels with the serialized task
-    so the parallelized path can build a fake client executor-side;
-    default is boto3 (env-gated)."""
+    DeleteObject — one API call pair per file, exactly the reference's
+    one-PutObject-per-file uploader shape (Processing.scala:287-289).
+    `s3_client` is injectable; default is a fresh boto3 client."""
     src, dst = job
-    if dst.startswith(("s3://", "s3a://")):
-        if s3_client is None and client_factory:
-            import importlib
-
-            # "module:callable" or "module:callable:arg"
-            mod_name, _, rest = client_factory.partition(":")
-            attr, _, arg = rest.partition(":")
-            fn = getattr(importlib.import_module(mod_name), attr)
-            s3_client = fn(arg) if arg else fn()
+    if _is_s3(dst):
         if s3_client is None:
-            try:
-                import boto3  # optional — not in the base image
-            except ImportError as e:  # pragma: no cover - env gate
-                raise NotImplementedError(
-                    "s3 blob rename requires boto3 (or run with a local "
-                    "output path / keep part-file names)"
-                ) from e
-            s3_client = boto3.client("s3")
+            s3_client = _s3_client()
         src_b, src_k = _parse_s3_uri(src)
         dst_b, dst_k = _parse_s3_uri(dst)
         s3_client.copy_object(
@@ -210,7 +219,9 @@ def promote_staging(
     client_factory: str | None = None,
 ) -> BlobWriteResult:
     """List the staged write, rename every part file into the reference
-    layout (executor-side moves), then drop the staging dir. `list_fn` /
+    layout, then drop the staging dir. The renames run on a driver thread
+    pool as wide as the session's default parallelism (capped at the file
+    count) and share one S3 client — no Spark job. `list_fn` /
     `cleanup_fn` / `client_factory` are injection seams for store fakes."""
     if list_fn is not None:
         staged, qualified = list_fn(staging), staging
@@ -221,14 +232,10 @@ def promote_staging(
     )
     result = BlobWriteResult()
     if jobs:
-        sc = spark.sparkContext
-        n_slices = min(len(jobs), sc.defaultParallelism)
-        factory = client_factory
-        moved = (
-            sc.parallelize(jobs, n_slices)
-            .map(lambda job: _move_one(job, client_factory=factory))
-            .collect()
-        )
+        client = _s3_client(client_factory) if any(_is_s3(d) for _, d in jobs) else None
+        width = min(len(jobs), spark.sparkContext.defaultParallelism)
+        with ThreadPoolExecutor(width) as pool:
+            moved = list(pool.map(partial(_move_one, s3_client=client), jobs))
         result.files = [WrittenFile(path=p, n_bytes=b) for p, b in moved]
     if cleanup_fn is not None:
         cleanup_fn(staging)
@@ -247,8 +254,7 @@ def write_batch(
     max_bytes: int = 67_108_864,
     now: datetime | None = None,
     deterministic_uuids: bool = False,
-    row_count: int | None = None,
-    avg_line_bytes: float | None = None,
+    sizes: dict[str | None, tuple[int, int]] | None = None,
     list_fn=None,
     cleanup_fn=None,
     client_factory: str | None = None,
@@ -256,9 +262,11 @@ def write_batch(
     """Write one batch: rows carry their resolved partition path in
     `partition_col` ('' for unpartitioned). Returns the written files.
 
-    Callers that already ran a stats job (the pipeline does) pass row_count /
-    avg_line_bytes so the byte-cap estimate costs NO extra Spark action;
-    otherwise one small agg computes them here.
+    `sizes` maps each partition value to its (rows, value bytes). One
+    sizing aggregate decides everything before the write: the byte cap's
+    row estimate and which hot partitions get salted. Callers that already
+    ran it (the pipeline folds it into its stats collect) pass it in, so the
+    write pays no sizing job; otherwise the same aggregate runs here, once.
     """
     now = now or datetime.now(timezone.utc)
     staging = base_dir.rstrip("/") + "/_staging_" + uuid_mod.uuid4().hex[:8]
@@ -268,15 +276,21 @@ def write_batch(
         F.regexp_replace(F.coalesce(F.col(partition_col), F.lit("")), "/", _SLASH).alias(_PP),
     )
 
-    # soft byte cap -> row cap from the batch's average line size estimate
-    if row_count is None or avg_line_bytes is None:
-        est = staged.select(
-            F.avg(F.octet_length("value")).alias("avg_len"), F.count("*").alias("n")
-        ).first()
-        row_count, avg_line_bytes = est["n"], est["avg_len"]
+    if sizes is None:
+        rows = staged.groupBy(_PP).agg(F.count("*"), F.sum(F.octet_length("value")))
+        sizes = {pp: (n, b or 0) for pp, n, b in rows.collect()}
+    # keyed like the staged column: None -> '', '/' -> '~'
+    part_counts: dict[str, int] = {}
+    n_bytes = 0
+    for pp, (n, b) in sizes.items():
+        key = (pp or "").replace("/", _SLASH)
+        part_counts[key] = part_counts.get(key, 0) + n
+        n_bytes += b
+    row_count = sum(part_counts.values())
     if not row_count:
         return BlobWriteResult()
-    avg_compressed = max(1.0, float(avg_line_bytes or 1.0) * GZIP_RATIO_ESTIMATE)
+    # soft byte cap -> row cap from the batch's average line size estimate
+    avg_compressed = max(1.0, n_bytes / row_count * GZIP_RATIO_ESTIMATE)
     max_records_per_file = max(1, int(max_bytes / avg_compressed))
 
     # Hot-partition salting: repartition(pp) alone funnels EVERY row of a
@@ -285,49 +299,40 @@ def write_batch(
     # work). When any partition needs more than one output file, spread it
     # over exactly that many tasks — salt modulus == needed file count, so
     # the hot partition parallelizes with ZERO extra files, and cold
-    # partitions (salt 1) keep one file. The per-partition count job only
-    # runs when the batch is big enough that some partition COULD exceed
-    # one file.
+    # partitions (salt 1) keep one file.
     shuffle_keys = [F.col(_PP)]
     n_write_tasks: int | None = None
-    if row_count > max_records_per_file:
-        part_counts = {
-            r[_PP]: r["n"]
-            for r in staged.groupBy(_PP).agg(F.count("*").alias("n")).collect()
-        }
-        salts = {
-            pp: -(-n // max_records_per_file)  # ceil
-            for pp, n in part_counts.items()
-            if n > max_records_per_file
-        }
-        if salts:
-            modulus = F.coalesce(
-                F.element_at(
-                    F.create_map(
-                        *[F.lit(x) for pp_n in salts.items() for x in pp_n]
-                    ),
-                    F.col(_PP),
-                ),
-                F.lit(1),
-            )
-            shuffle_keys.append(
-                F.pmod(F.xxhash64(F.col("value")), modulus).alias("__salt")
-            )
-            # pin the shuffle width EXPLICITLY when salting: a plain
-            # repartition(cols) is AQE-coalescible, and on a small batch
-            # AQE merges the salted groups back into ONE task — exactly
-            # the serial-gzip funnel the salt exists to break (caught by
-            # the round-5 task-spread plan gate). The session width is
-            # the right pin: the salted groups hash across it (a hot
-            # partition's k groups land on <= min(k, width) tasks), and
-            # it matches the un-coalesced width the write used before —
-            # pinning to the total FILE estimate instead was measurably
-            # slower at sf0.1 (hundreds of under-filled write tasks).
-            spark = staged.sparkSession
-            try:
-                n_write_tasks = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            except (TypeError, ValueError):
-                n_write_tasks = spark.sparkContext.defaultParallelism
+    salts = {
+        pp: -(-n // max_records_per_file)  # ceil
+        for pp, n in part_counts.items()
+        if n > max_records_per_file
+    }
+    if salts:
+        modulus = F.coalesce(
+            F.element_at(
+                F.create_map(*[F.lit(x) for pp_n in salts.items() for x in pp_n]),
+                F.col(_PP),
+            ),
+            F.lit(1),
+        )
+        shuffle_keys.append(
+            F.pmod(F.xxhash64(F.col("value")), modulus).alias("__salt")
+        )
+        # pin the shuffle width EXPLICITLY when salting: a plain
+        # repartition(cols) is AQE-coalescible, and on a small batch
+        # AQE merges the salted groups back into ONE task — exactly
+        # the serial-gzip funnel the salt exists to break (caught by
+        # the round-5 task-spread plan gate). The session width is
+        # the right pin: the salted groups hash across it (a hot
+        # partition's k groups land on <= min(k, width) tasks), and
+        # it matches the un-coalesced width the write used before —
+        # pinning to the total FILE estimate instead was measurably
+        # slower at sf0.1 (hundreds of under-filled write tasks).
+        spark = staged.sparkSession
+        try:
+            n_write_tasks = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        except (TypeError, ValueError):
+            n_write_tasks = spark.sparkContext.defaultParallelism
 
     writer = (
         staged.repartition(n_write_tasks, *shuffle_keys)
@@ -344,7 +349,7 @@ def write_batch(
 
     # List the staging dir (scheme-aware: os.walk locally, Hadoop FS for
     # any URI — the round-2 os.walk-only listing silently stranded s3://
-    # batches), build the rename jobs, execute the moves on the executors.
+    # batches), build the rename jobs, run the moves on the driver.
     return promote_staging(
         df.sparkSession,
         staging,

@@ -70,15 +70,22 @@ class LoaderQueryListener(StreamingQueryListener):
 
 
 class StatsdEmitter:
-    """Plain-UDP StatsD datagrams: '<prefix>.<name>:<value>|<type>'."""
+    """Plain-UDP StatsD datagrams: '<prefix>.<name>:<value>|<type>'.
+
+    StatsD `|c` counters are additive on the server, so `count` goes out as
+    the delta since this emitter's previous emit, not the running total."""
 
     def __init__(self, host: str, port: int = 8125, prefix: str = "snowplow.blob.loader.spark"):
         self.addr = (host, port)
         self.prefix = prefix
         self.sock = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
+        self._emitted_count = 0
 
     def emit(self, state: MetricsState) -> None:
         snap = state.snapshot()
+        total = snap["count"]
+        snap["count"] = total - self._emitted_count
+        self._emitted_count = total
         for name, mtype in (
             ("count", "c"),
             ("e2e_latency_millis", "g"),
@@ -96,11 +103,16 @@ def periodic_report(
     emitter: StatsdEmitter,
     period_seconds: float,
     stop_event: threading.Event,
+    actions: ActionLog | None = None,
 ) -> threading.Thread:
-    """Reference's concurrent metrics.report loop (Run.scala:76)."""
+    """Reference's concurrent metrics.report loop (Run.scala:76). The
+    pipeline's action log, when given, is absorbed before every emit, so
+    the report does not depend on anything scraping /metrics."""
 
     def _loop():
         while not stop_event.wait(period_seconds):
+            if actions is not None:
+                state.absorb_actions(actions)
             emitter.emit(state)
 
     t = threading.Thread(target=_loop, daemon=True)

@@ -19,6 +19,13 @@ Stage mapping (SURVEY.md SS2.1):
     O11 metrics                          -> streaming/metrics + action log
     O12 bad rows                         -> badrows + sinks/bad_sink
     O13 ack/checkpoint                   -> option("checkpointLocation", ...)
+
+Fixed per-batch cost is kept to the work itself: one sizing aggregate over
+the cached classified rows yields the good count, the e2e-latency
+timestamp and the per-partition (rows, bytes) the blob sink sizes its write
+from; the blob sink promotes its files on the driver (no Spark job); and the
+bad-row projection is built once per pipeline, reading the flush time from a
+per-batch `__now` column.
 """
 
 from __future__ import annotations
@@ -27,7 +34,7 @@ from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from snowplow_s3_loader_spark import badrows
@@ -60,6 +67,7 @@ class LoaderPipeline:
         if self.bad_sink is None:
             bad_dir = self.config.bad.path or (self.config.good.path.rstrip("/") + "-bad")
             self.bad_sink = FileBadSink(bad_dir)
+        self._bad_row = _bad_row_column(self.config.bad.max_record_size)
 
     # ---------------- the foreachBatch body (O5..O13) ----------------
 
@@ -84,47 +92,51 @@ class LoaderPipeline:
         else:
             lines = batch_df.withColumn("decompress_error", F.lit(None).cast("string"))
 
-        classified = classify(lines, cfg.purpose).persist()
-        try:
-            good = classified.filter(
-                F.col("bad_message").isNull() & F.col("decompress_error").isNull()
+        # O8: resolve the partition template — schema tokens per row
+        # (template stays literal for the atomic schema), time tokens from
+        # the flush time; null on bad rows
+        template = cfg.good.partition_format or ""
+        if cfg.purpose == "ENRICHED_EVENTS":
+            pp = F.lit(get_partition(template, ATOMIC_SCHEMA, now))
+        else:
+            pp = partition_path(
+                template,
+                F.col("schema_key"),
+                F.lit(now.strftime("%Y-%m-%d %H:%M:%S")).cast("timestamp"),
             )
-
-            # O8: resolve the partition template — schema tokens per row
-            # (template stays literal for the atomic schema), time tokens
-            # from the flush time
-            template = cfg.good.partition_format or ""
-            if cfg.purpose == "ENRICHED_EVENTS":
-                resolved = get_partition(template, ATOMIC_SCHEMA, now)
-                pp = F.lit(resolved)
-            else:
-                pp = partition_path(
-                    template,
-                    F.col("schema_key"),
-                    F.lit(now.strftime("%Y-%m-%d %H:%M:%S")).cast("timestamp"),
+        is_good = F.col("bad_message").isNull() & F.col("decompress_error").isNull()
+        classified = (
+            classify(lines, cfg.purpose).withColumn("__partition", F.when(is_good, pp)).persist()
+        )
+        try:
+            # the batch's one sizing aggregate: the count metric, the
+            # latency metric and the blob sink's byte cap and salt plan
+            rows = (
+                classified.groupBy(is_good, "__partition")
+                .agg(
+                    F.count("*"),
+                    F.sum(F.octet_length("value")),
+                    F.min("collector_tstamp"),
                 )
-
-            # one stats job feeds the count metric, the latency metric AND
-            # the blob sink's byte-cap estimate (no second .first() action)
-            stats = good.agg(
-                F.count("*").alias("n"),
-                F.min("collector_tstamp").alias("earliest"),
-                F.avg(F.octet_length("value")).alias("avg_len"),
-            ).first()
-            n_good = stats["n"]
+                .collect()
+            )
+            sizes = {part: (n, n_bytes or 0) for good, part, n, n_bytes, _ in rows if good}
+            earliest = min(
+                (first for good, *_, first in rows if good and first is not None), default=None
+            )
+            n_good = sum(n for n, _ in sizes.values())
 
             # 1) good writes (O7/O10)
             if n_good:
                 result = write_batch(
-                    good.withColumn("__partition", pp),
+                    classified.filter(is_good),
                     cfg.good.path,
                     "__partition",
                     prefix=cfg.good.prefix,
                     max_bytes=cfg.batching.max_bytes,
                     now=now,
                     deterministic_uuids=self.deterministic_uuids,
-                    row_count=n_good,
-                    avg_line_bytes=stats["avg_len"],
+                    sizes=sizes,
                 )
                 for wf in result.files:
                     self.actions.record("WroteFile", wf.path, wf.n_bytes)
@@ -132,40 +144,24 @@ class LoaderPipeline:
 
             # 2) metrics (O11): count, then e2e latency vs earliest tstamp
             self.actions.record("AddedCountMetric", n_good)
-            if stats["earliest"] is not None:
-                earliest = stats["earliest"]
+            if earliest is not None:
                 if earliest.tzinfo is None:
                     earliest = earliest.replace(tzinfo=timezone.utc)
                 latency_ms = int((now - earliest).total_seconds() * 1000)
                 self.actions.record("SetE2ELatencyMetric", max(0, latency_ms))
 
-            # 3) bad rows (O12), size-capped (BadRowsSerializer.scala:24-44)
-            # a real instant literal (aware datetime): badrows renders it as
-            # ISO-8601 UTC with millis correctly under any session timezone
-            ts_lit = F.lit(now)
-            parse_bad = classified.filter(
-                F.col("bad_message").isNotNull() & F.col("decompress_error").isNull()
-            ).select(
-                badrows.serialize_with_max_size(
-                    badrows.generic_error(F.col("value"), F.col("bad_message"), ts_lit),
-                    ts_lit,
-                    cfg.bad.max_record_size,
-                ).alias("row")
-            )
-            decomp_bad = classified.filter(F.col("decompress_error").isNotNull()).select(
-                badrows.serialize_with_max_size(
-                    badrows.loader_parsing_error(
-                        F.col("value"), F.col("decompress_error"), ts_lit
-                    ),
-                    ts_lit,
-                    cfg.bad.max_record_size,
-                ).alias("row")
-            )
+            # 3) bad rows (O12), size-capped (BadRowsSerializer.scala:24-44).
             # Distributed emission (Processing.scala:315-331 parallel sink
             # pipe): rows leave from the executors; only (count, bytes) come
             # back to the driver — a poison batch where bad ≈ all rows never
-            # materializes driver-side.
-            n_bad, bad_bytes = self.bad_sink.send_df(parse_bad.union(decomp_bad))
+            # materializes driver-side. `__now` is a real instant literal
+            # (aware datetime): badrows renders it as ISO-8601 UTC with
+            # millis under any session timezone.
+            n_bad, bad_bytes = self.bad_sink.send_df(
+                classified.filter(~is_good)
+                .withColumn("__now", F.lit(now))
+                .select(self._bad_row)
+            )
             if n_bad:
                 self.actions.record("SentToBad", n_bad, bad_bytes)
                 self.health.bad_sink_ok = True
@@ -197,7 +193,7 @@ class LoaderPipeline:
         enable_rocksdb_state_store(source.sparkSession)
         writer = (
             source.writeStream.foreachBatch(self.load_batch)
-            .trigger(processingTime=f"{int(self.config.batching.max_delay_seconds)} seconds")
+            .trigger(processingTime=trigger_interval(self.config.batching.max_delay_seconds))
             .outputMode("append")
         )
         ckpt = checkpoint or self.config.checkpoint_location
@@ -206,3 +202,21 @@ class LoaderPipeline:
         query = writer.start()
         self.health.setup_ok = True
         return query
+
+
+def trigger_interval(max_delay_seconds: float) -> str:
+    """maxDelay as a processing-time trigger interval, in milliseconds so a
+    sub-second or fractional delay is kept rather than truncated."""
+    return f"{round(max_delay_seconds * 1000)} milliseconds"
+
+
+def _bad_row_column(max_record_size: int) -> Column:
+    """One size-capped bad-row column for both failure kinds: decompression
+    failures as LoaderParsingError, parse failures as GenericError
+    (Processing.scala:156-165, 189-204). Reads the flush time from the
+    batch's `__now` column."""
+    value, err, now = F.col("value"), F.col("decompress_error"), F.col("__now")
+    serialized = F.when(
+        err.isNotNull(), F.to_json(badrows.loader_parsing_error(value, err, now))
+    ).otherwise(F.to_json(badrows.generic_error(value, F.col("bad_message"), now)))
+    return badrows.cap_serialized_size(serialized, now, max_record_size).alias("row")

@@ -1,12 +1,11 @@
 """File-backed fake of the S3 client surface used by sinks/blob._move_one
 (copy_object / head_object / delete_object / put_object).
 
-Objects live as plain files under ``<root>/<bucket>/<key>`` so the fake
-works across Spark's separate python worker processes: the driver seeds
-objects on disk, executor-side `_move_one` tasks build their own client
-via the ``client_factory`` string ``"...testing.fake_s3:factory:<root>"``
-and operate on the same store, and the test asserts on the files left
-behind — the same seeding pattern as testing/fake_kinesis.py.
+Objects live as plain files under ``<root>/<bucket>/<key>``: the test seeds
+objects on disk, the blob sink's promotion builds its client via the
+``client_factory`` string ``"...testing.fake_s3:factory:<root>"`` and
+operates on the same store, and the test asserts on the files left behind
+— the same seeding pattern as testing/fake_kinesis.py.
 """
 
 from __future__ import annotations

@@ -19,3 +19,31 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """`spark_jobs(fn)` runs fn under a fresh job group and returns fn's
+    result with the Spark jobs it started, one list of stage names per job
+    — a job census that host noise cannot fake."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = "census-" + uuid.uuid4().hex
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # job events reach the status store through the async listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        st = sc.statusTracker()
+        return result, [
+            [st.getStageInfo(s).name for s in st.getJobInfo(j).stageIds]
+            for j in sorted(st.getJobIdsForGroup(group))
+        ]
+
+    return run

@@ -8,7 +8,8 @@ botocore's full request/response machinery instead of the in-repo fakes.
 
 moto mocks botocore IN-PROCESS, so these tests drive the driver-side
 components directly (Spark executor workers are separate processes the
-mock cannot reach); the Spark-distributed paths stay covered by the
+mock cannot reach): the blob sink's promotion runs on the driver and is
+covered end to end; the Spark-distributed paths stay covered by the
 fake_kinesis / fake_s3 e2e tests. Partial-failure PutRecords retry is
 covered here too, via botocore Stubber (moto never emits
 FailedRecordCount>0): the stubbed responses ride botocore's real
@@ -159,6 +160,48 @@ def test_s3_rename_copy_delete_against_moto(aws):
     )
     with pytest.raises(Exception):
         s3.head_object(Bucket="moto-blob", Key="stage/part-00000.txt.gz")
+
+
+def test_promote_staging_against_moto_with_default_client(aws, spark):
+    """promote_staging end to end on s3:// paths with NO client_factory:
+    the renames run in-process on the driver, so the default boto3 client
+    they share is the one moto intercepts. Every staged object lands at its
+    reference-layout key with its bytes, and none is left in staging."""
+    from snowplow_s3_loader_spark.sinks.blob import promote_staging
+
+    s3 = aws.client("s3", region_name=REGION)
+    s3.create_bucket(Bucket="moto-blob")
+    staged = {
+        "out/_staging_ab/__pp=com.example.event1/part-00000.gz": b"a" * 10,
+        "out/_staging_ab/__pp=com.example.event1/part-00001.gz": b"b" * 20,
+        "out/_staging_ab/__pp=com.example.event2/part-00000.gz": b"c" * 30,
+    }
+    for key, body in staged.items():
+        s3.put_object(Bucket="moto-blob", Key=key, Body=body)
+
+    def keys(prefix):
+        resp = s3.list_objects_v2(Bucket="moto-blob", Prefix=prefix)
+        return sorted(o["Key"] for o in resp.get("Contents", []))
+
+    res = promote_staging(
+        spark,
+        "s3://moto-blob/out/_staging_ab",
+        "s3://moto-blob/out",
+        deterministic_uuids=True,
+        list_fn=lambda staging: [f"s3://moto-blob/{k}" for k in keys("out/_staging_ab/")],
+        cleanup_fn=lambda staging: None,
+    )
+    assert [(f.path.rsplit("/", 2)[1], f.n_bytes) for f in res.files] == [
+        ("com.example.event1", 10),
+        ("com.example.event1", 20),
+        ("com.example.event2", 30),
+    ]
+    assert keys("out/_staging_ab/") == []
+    final = keys("out/com.example")
+    assert len(final) == 3
+    assert sorted(
+        s3.get_object(Bucket="moto-blob", Key=k)["Body"].read() for k in final
+    ) == sorted(staged.values())
 
 
 # ---------------------------------------------------------------------------

@@ -99,7 +99,7 @@ def test_build_rename_jobs_s3_uris():
 
 def test_write_batch_end_to_end_over_file_uri(spark, tmp_path):
     """Drives the full write through the HADOOP FileSystem branch (file://
-    scheme): distributed gzip write -> JVM listing -> executor renames ->
+    scheme): distributed gzip write -> JVM listing -> driver-side renames ->
     staging cleanup. This is the exact code path an s3a:// deployment
     takes, modulo scheme."""
     base = "file://" + str(tmp_path / "out")
@@ -266,13 +266,44 @@ def test_write_batch_salt_modulus_and_task_spread(spark, tmp_path):
     assert lines == sorted(v for v, _ in hot + cold)
 
 
-def test_write_batch_small_batch_skips_salt_job(spark, tmp_path):
-    """Batches that cannot exceed one file per partition must not pay the
-    per-partition count job (no behavior change below the threshold)."""
-    base = str(tmp_path / "small")
+def test_write_batch_with_sizes_runs_no_sizing_job(spark, tmp_path, spark_jobs):
+    """Callers that pass the per-partition (rows, bytes) sizes (the pipeline
+    folds them into its stats collect) pay only the write: no sizing job.
+    Without sizes the same aggregate runs once inside write_batch."""
     df = spark.createDataFrame(
         [("a", "p1"), ("b", "p1"), ("c", "p2")], "value string, pp string"
     )
-    res = write_batch(df, base, "pp", deterministic_uuids=True)
-    dirs = {os.path.dirname(f.path) for f in res.files}
-    assert len(res.files) == 2 and len(dirs) == 2
+
+    def write(name, sizes):
+        return write_batch(df, str(tmp_path / name), "pp", deterministic_uuids=True, sizes=sizes)
+
+    supplied_res, supplied = spark_jobs(lambda: write("supplied", {"p1": (2, 2), "p2": (1, 1)}))
+    computed_res, computed = spark_jobs(lambda: write("computed", None))
+
+    def collects(jobs):
+        return [n for stages in jobs for n in stages if n.startswith("collect at")]
+
+    assert supplied and not collects(supplied), supplied
+    assert collects(computed), computed
+    assert len(computed) > len(supplied)
+    for res in (supplied_res, computed_res):
+        dirs = {os.path.dirname(f.path) for f in res.files}
+        assert len(res.files) == 2 and len(dirs) == 2
+
+
+def test_promote_staging_runs_no_spark_job(spark, tmp_path, spark_jobs):
+    """The renames run on a driver thread pool: promotion starts no Spark
+    job, and every staged file lands in the reference layout."""
+    staging = tmp_path / "out" / "_staging_ab"
+    for part in ("__pp=p1/part-00000.gz", "__pp=p1/part-00001.gz", "__pp=p2/part-00000.gz"):
+        (staging / part).parent.mkdir(parents=True, exist_ok=True)
+        (staging / part).write_bytes(gzip.compress(part.encode()))
+    out = str(tmp_path / "out")
+    res, jobs = spark_jobs(
+        lambda: promote_staging(spark, str(staging), out, deterministic_uuids=True)
+    )
+    assert jobs == []
+    paths = [os.path.relpath(f.path, out) for f in res.files]
+    assert [os.path.dirname(p) for p in paths] == ["p1", "p1", "p2"]
+    assert all(f.n_bytes > 0 for f in res.files)
+    assert not staging.exists()

@@ -76,3 +76,34 @@ def test_statsd_datagrams():
     assert "test.loader.e2e_latency_millis:450|g" in got
     assert any(d.startswith("test.loader.latency_collector_to_load:") for d in got)
     recv.close()
+
+
+def test_periodic_report_absorbs_actions_without_scrape():
+    """The StatsD loop absorbs the action log itself (no /metrics scrape
+    needed) and sends `count` as the delta since its previous emit."""
+    import threading
+
+    from snowplow_s3_loader_spark.streaming.metrics import periodic_report
+
+    recv = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
+    recv.bind(("127.0.0.1", 0))
+    recv.settimeout(5)
+    port = recv.getsockname()[1]
+
+    log = ActionLog()
+    log.record("AddedCountMetric", 5)
+    log.record("AddedCountMetric", 4)
+    stop = threading.Event()
+    emitter = StatsdEmitter("127.0.0.1", port, prefix="t")
+    thread = periodic_report(MetricsState(), emitter, 0.05, stop, actions=log)
+    try:
+        counts = []
+        while len(counts) < 3:
+            d = recv.recvfrom(1024)[0].decode()
+            if d.startswith("t.count:"):
+                counts.append(d)
+    finally:
+        stop.set()
+        thread.join(5)
+        recv.close()
+    assert counts == ["t.count:9|c", "t.count:0|c", "t.count:0|c"]

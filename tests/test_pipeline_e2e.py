@@ -247,6 +247,18 @@ def test_e4_streaming_flush(spark, tmp_path):
     assert p2.actions.of_kind("WroteFile") == []
 
 
+@pytest.mark.parametrize("seconds, ms", [(0.5, 500), (1.5, 1500), (120, 120_000)])
+def test_trigger_interval_keeps_fractional_max_delay(spark, seconds, ms):
+    """maxDelay reaches the processing-time trigger in milliseconds, as
+    Spark parses it: 0.5 s is not truncated to a zero-interval trigger."""
+    from snowplow_s3_loader_spark.streaming.pipeline import trigger_interval
+
+    trigger = spark._jvm.org.apache.spark.sql.streaming.Trigger.ProcessingTime(
+        trigger_interval(seconds)
+    )
+    assert trigger.intervalMs() == ms
+
+
 # ---- oversize payload guard --------------------------------------------------
 
 
@@ -344,3 +356,44 @@ def test_health_probe(spark, tmp_path):
         assert exc.value.code == 503
     finally:
         probe.stop()
+
+
+# ---- job census: the fixed per-batch cost -----------------------------------
+
+
+def test_sdj_batch_with_salted_hot_partition_runs_at_most_6_jobs(spark, tmp_path, spark_jobs):
+    """One SDJ batch whose hot partition is salted over several files, with
+    bad rows: one sizing aggregate, the staged write, the bad-row send and a
+    driver-side promotion add up to at most 6 Spark jobs."""
+    cfg = _cfg(tmp_path, purpose="SELF_DESCRIBING", batching={"maxBytes": 2000})
+    p = _pipeline(spark, cfg)
+    hot = [
+        f'{{"schema": "iglu:com.example/hot/jsonschema/1-0-0", "data": {{"n": {i}}}}}'
+        for i in range(600)
+    ]
+    cold = ['{"schema": "iglu:com.example/cold/jsonschema/1-0-0", "data": {}}']
+    bad = ['{"data": {}}', "not json"]
+    _, jobs = spark_jobs(lambda: p.run_batch(_lines_df(spark, hot + cold + bad)))
+    assert len(jobs) <= 6, jobs
+
+    files = _read_gz_files(cfg.good.path)
+    hot_files = [k for k in files if k.startswith("com.example.hot/")]
+    assert len(hot_files) > 1  # the salted path ran
+    assert sorted(l for c in files.values() for l in c.splitlines()) == sorted(hot + cold)
+    assert p.actions.of_kind("SentToBad")[0].detail[0] == 2
+
+
+def test_enriched_batch_runs_at_most_6_jobs(spark, tmp_path, spark_jobs):
+    """An ENRICHED batch with no bad row still sends (an empty) bad-row
+    frame, and the whole batch runs at most 6 Spark jobs."""
+    cfg = _cfg(tmp_path)
+    p = _pipeline(spark, cfg)
+    lines = [_enriched(app=f"app-{i}") for i in range(20)]
+    _, jobs = spark_jobs(lambda: p.run_batch(_lines_df(spark, lines)))
+    assert len(jobs) <= 6, jobs
+    assert p.actions.kinds() == [
+        "WroteFile",
+        "AddedCountMetric",
+        "SetE2ELatencyMetric",
+        "Checkpointed",
+    ]
