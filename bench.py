@@ -188,6 +188,7 @@ def main() -> None:
         shuffle_partitions=int(cpus),
         extra_conf={"spark.ui.enabled": "false"},
     )
+    from snowplow_s3_loader_spark.operators.dedup import sweep_checkpoint_blocks
     from snowplow_s3_loader_spark.plans.queries import QUERIES
 
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -195,20 +196,6 @@ def main() -> None:
         sf_num = float(sf)
     except ValueError:
         sf_num = None
-
-    def sweep_checkpoint_blocks() -> None:
-        """Per-query isolation: drop localCheckpoint blocks left by
-        materializing operators (jaccard pair results, ranking offsets) so
-        one query's residue never taxes the next — the round-2 bench ran a
-        single uncleaned session and its numbers were impossible to
-        attribute. Table-level SQL caches are deliberately KEPT (shared
-        corpus across the battery is the engine's operating mode)."""
-        jsc = spark.sparkContext._jsc.sc()
-        lst = jsc.getPersistentRDDs().toList()
-        for i in range(lst.size()):
-            rdd = lst.apply(i)._2()
-            if "localCheckpoint" in rdd.toString():
-                rdd.unpersist(False)
 
     attempts = int(os.environ.get("SPARK_GRAFT_ATTEMPTS", "2"))
     timings: dict[str, float] = {}
@@ -219,7 +206,7 @@ def main() -> None:
     # main source of the q83 driver-reading variance (r8 verdict #4)
     for warm in ("q03_broadcast_join", "q49_grouped_percentiles", "q83_pagerank"):
         QUERIES[warm](spark, sf_dir).write.mode("overwrite").format("noop").save()
-    sweep_checkpoint_blocks()
+    sweep_checkpoint_blocks(spark)
 
     for name, fn in sorted(QUERIES.items()):
         best = None
@@ -235,7 +222,7 @@ def main() -> None:
                 print(f"bench error in {name}: {e}", file=sys.stderr)
                 break
             finally:
-                sweep_checkpoint_blocks()
+                sweep_checkpoint_blocks(spark)
         timings[name] = round(best, 3)
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)

@@ -21,6 +21,14 @@ import sys
 from pyspark.sql import functions as F
 
 from snowplow_s3_loader_spark.engine import Engine
+from snowplow_s3_loader_spark.operators.profile import (
+    calibration_bins,
+    survival_curve,
+    two_proportion_z,
+)
+from snowplow_s3_loader_spark.operators.sampling import quality_budget_select
+from snowplow_s3_loader_spark.operators.text import hashed_linear_score, token_count
+from snowplow_s3_loader_spark.operators.timeseries import kleinberg_bursts
 from snowplow_s3_loader_spark.session import get_spark
 
 
@@ -33,7 +41,8 @@ def main() -> None:
 
     # 1) calibration: squash the raw score into a micro-probability and
     # bin it against the independent lang='en' ground truth
-    scored = eng.quality_scores(docs, "doc_id", "text")
+    score, label = hashed_linear_score(F.col("text"))
+    scored = docs.select(F.col("doc_id").alias("id"), score, label)
     squashed = (
         scored.join(docs.select("doc_id", "lang"), scored["id"] == F.col("doc_id"))
         .select(
@@ -51,17 +60,15 @@ def main() -> None:
             (F.col("lang") == "en").cast("long").alias("y"),
         )
     )
-    cal = eng.calibration_bins(squashed, "p_micro", "y", k=10).collect()
+    cal = calibration_bins(squashed, "p_micro", "y", k=10).collect()
     ece = cal[0]["ece_num"] / max(1, sum(r["n"] for r in cal)) / 1e6
 
     # 2) budget cut: keep the best-scored documents to a 12k-token budget
-    from snowplow_s3_loader_spark.operators.text import token_count
-
     base = docs.select(
         "doc_id",
         token_count(F.col("text")).cast("long").alias("n_tok"),
     ).join(scored.withColumnRenamed("id", "doc_id"), "doc_id")
-    cut = eng.budget_select(base, "doc_id", "score_micro", "n_tok", 12_000)
+    cut = quality_budget_select(base, "doc_id", "score_micro", "n_tok", 12_000)
     kept = cut.where("kept").agg(
         F.count("*").alias("docs"), F.sum("n_tokens").alias("toks")
     ).collect()[0]
@@ -78,7 +85,7 @@ def main() -> None:
         (F.col("user_id") % 2 == 0).alias("variant"),
         F.coalesce("__c", F.lit(0)).alias("success"),
     )
-    ab = eng.ab_test(ab_in, "variant", "success", True, False).collect()[0]
+    ab = two_proportion_z(ab_in, "variant", "success", True, False).collect()[0]
 
     # 4) churn curves per cohort (event = made a purchase, censored at
     # last activity otherwise)
@@ -100,7 +107,7 @@ def main() -> None:
         .alias("dur"),
         F.col("lp").isNotNull().cast("int").alias("event"),
     )
-    km = eng.survival_curve(subjects, "cohort", "dur", "event")
+    km = survival_curve(subjects, "cohort", "dur", "event")
     km_tail = km.groupBy("group").agg(
         F.max("t").alias("horizon"),
         F.min("cum_ln_micro").alias("final_ln_micro"),
@@ -108,7 +115,7 @@ def main() -> None:
 
     # 5) bursts per event type (4x thinned stream keeps the oracle-fast
     # shape; thinning preserves the rate ratio)
-    bursts = eng.bursts(
+    bursts = kleinberg_bursts(
         ev.where(F.col("event_id") % 4 == 0), "event_type", "ts", "event_id"
     ).collect()
 

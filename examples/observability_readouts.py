@@ -23,6 +23,17 @@ import sys
 from pyspark.sql import functions as F
 
 from snowplow_s3_loader_spark.engine import Engine
+from snowplow_s3_loader_spark.operators.profile import (
+    benford_profile,
+    isotonic_calibration,
+    mutual_information,
+)
+from snowplow_s3_loader_spark.operators.text import hashed_linear_score
+from snowplow_s3_loader_spark.operators.timeseries import (
+    cusum_changepoint,
+    kleinberg_burst_intervals,
+    kleinberg_bursts_multi,
+)
 from snowplow_s3_loader_spark.session import get_spark
 
 
@@ -38,19 +49,19 @@ def main() -> None:
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
     print("== changepoint location per event type ==")
-    eng.changepoint(series, "event_type", ["ts", "event_id"],
-                    "cents").show(truncate=False)
+    cusum_changepoint(series, "event_type", ["ts", "event_id"],
+                      "cents").show(truncate=False)
 
     # 2) burst windows + hierarchy on the per-user-bucket streams
     keyed = ev.select(
         (F.col("user_id") % 40).alias("ukey"), "ts", "event_id"
     )
     print("== burst windows (first 10) ==")
-    eng.burst_intervals(keyed, "ukey", "ts", "event_id",
-                        gamma_micro=300_000).show(10, truncate=False)
+    kleinberg_burst_intervals(keyed, "ukey", "ts", "event_id",
+                              gamma_micro=300_000).show(10, truncate=False)
     print("== burst hierarchy (how deep) ==")
-    eng.burst_hierarchy(keyed, "ukey", "ts", "event_id", n_states=3,
-                        gamma_micro=300_000).show(10)
+    kleinberg_bursts_multi(keyed, "ukey", "ts", "event_id", n_states=3,
+                           gamma_micro=300_000).show(10)
 
     # 3) Benford audit of order totals
     orders = eng.table("orders").select(
@@ -58,19 +69,20 @@ def main() -> None:
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
     print("== Benford first-digit deviations ==")
-    eng.benford(orders, ["priority"], "cents").where(
+    benford_profile(orders, ["priority"], "cents").where(
         F.col("priority") == "1-URGENT"
     ).show()
 
     # 4) mutual information: does return flag pin down line status?
     print("== mutual information (micro-nats) ==")
-    eng.mutual_information(
+    mutual_information(
         eng.table("lineitem"), "l_returnflag", "l_linestatus"
     ).show()
 
     # 5) isotonic recalibration of the quality classifier's diagram
     docs = eng.table("documents")
-    scored = eng.quality_scores(docs, "doc_id", "text")
+    score, label = hashed_linear_score(F.col("text"))
+    scored = docs.select(F.col("doc_id").alias("id"), score, label)
     squashed = scored.join(
         docs.select("doc_id", "lang"), scored["id"] == F.col("doc_id")
     ).select(
@@ -88,7 +100,7 @@ def main() -> None:
         (F.col("lang") == "en").cast("long").alias("y"),
     )
     print("== isotonic recalibration (monotone fit) ==")
-    eng.isotonic_calibration(squashed, "p_micro", "y", k=10).show()
+    isotonic_calibration(squashed, "p_micro", "y", k=10).show()
 
     spark.stop()
 

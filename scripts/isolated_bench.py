@@ -45,6 +45,7 @@ def main() -> None:
         shuffle_partitions=int(cpus),
         extra_conf={"spark.ui.enabled": "false"},
     )
+    from snowplow_s3_loader_spark.operators.dedup import sweep_checkpoint_blocks
     from snowplow_s3_loader_spark.plans.queries import QUERIES
 
     names = []
@@ -53,14 +54,6 @@ def main() -> None:
         if not hits:
             raise SystemExit(f"no query matches prefix {a!r}")
         names.extend(hits)
-
-    def sweep_checkpoint_blocks() -> None:
-        jsc = spark.sparkContext._jsc.sc()
-        lst = jsc.getPersistentRDDs().toList()
-        for i in range(lst.size()):
-            rdd = lst.apply(i)._2()
-            if "localCheckpoint" in rdd.toString():
-                rdd.unpersist(False)
 
     # same warmups as bench.py: JVM/codegen + Python/Arrow worker pool
     for warm in ("q03_broadcast_join", "q49_grouped_percentiles"):
@@ -72,7 +65,7 @@ def main() -> None:
             t0 = time.perf_counter()
             QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
             samples.append(round(time.perf_counter() - t0, 3))
-            sweep_checkpoint_blocks()
+            sweep_checkpoint_blocks(spark)
         print(json.dumps({"query": name, "samples": samples, "min": min(samples)}))
         sys.stdout.flush()
 

@@ -45,6 +45,7 @@ def main() -> None:
         shuffle_partitions=int(cpus),
         extra_conf={"spark.ui.enabled": "false"},
     )
+    from snowplow_s3_loader_spark.operators.dedup import sweep_checkpoint_blocks
     from snowplow_s3_loader_spark.plans.queries import QUERIES
 
     names = []
@@ -57,19 +58,11 @@ def main() -> None:
     sc = spark.sparkContext
     tracker = sc.statusTracker()
 
-    def sweep() -> None:
-        jsc = sc._jsc.sc()
-        lst = jsc.getPersistentRDDs().toList()
-        for i in range(lst.size()):
-            rdd = lst.apply(i)._2()
-            if "localCheckpoint" in rdd.toString():
-                rdd.unpersist(False)
-
     # warm the session the bench's way so the census is not dominated by
     # one-time JVM/Python-worker startup jobs
     for warm in ("q03_broadcast_join", "q49_grouped_percentiles", "q83_pagerank"):
         QUERIES[warm](spark, sf_dir).write.mode("overwrite").format("noop").save()
-    sweep()
+    sweep_checkpoint_blocks(spark)
 
     records = []
     for name in names:
@@ -100,7 +93,7 @@ def main() -> None:
         }
         records.append(rec)
         print(json.dumps(rec))
-        sweep()
+        sweep_checkpoint_blocks(spark)
 
     from snowplow_s3_loader_spark.tables import clear_table_cache
 

@@ -148,6 +148,7 @@ def _knob_variants(factor: int = 10):
 def run(out_dir: str, names: list[str], factor: int = 10) -> None:
     import math
 
+    from snowplow_s3_loader_spark.operators.dedup import sweep_checkpoint_blocks
     from snowplow_s3_loader_spark.plans import queries as Q
     from snowplow_s3_loader_spark.session import get_spark
     from snowplow_s3_loader_spark.tables import clear_table_cache
@@ -155,24 +156,11 @@ def run(out_dir: str, names: list[str], factor: int = 10) -> None:
     spark = get_spark(app_name="sf-scale", extra_conf={"spark.ui.enabled": "false"})
     variants = _knob_variants(factor)
 
-    def sweep_checkpoint_blocks() -> None:
-        # same per-run isolation as bench.py: materializing operators
-        # (jaccard pairs, CC labels, semantic-dedup results) leave
-        # localCheckpoint blocks; uncollected residue skews later timings
-        # enough to INVERT a 10x ratio (observed: q65 at 1x slower than
-        # at 10x until the sweep was added)
-        jsc = spark.sparkContext._jsc.sc()
-        lst = jsc.getPersistentRDDs().toList()
-        for i in range(lst.size()):
-            rdd = lst.apply(i)._2()
-            if "localCheckpoint" in rdd.toString():
-                rdd.unpersist(False)
-
     def timed(fn) -> float:
         t0 = time.perf_counter()
         fn()
         t = time.perf_counter() - t0
-        sweep_checkpoint_blocks()
+        sweep_checkpoint_blocks(spark)
         return t
 
     for name in names:

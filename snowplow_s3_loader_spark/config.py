@@ -2,10 +2,12 @@
 (Config.scala:28-123, Run.scala:35-65, core reference.conf defaults).
 
 Defaulting ladder mirrors the reference: built-in defaults (the reference's
-reference.conf values) <- user config file (JSON; HOCON via pyhocon when
-available) <- environment-variable overrides. Validation hooks run at decode
-time, including the partition-format rule (Config.scala:122 ->
-DynamicPath.validatePartitionFormat).
+reference.conf values) <- user config file (JSON, or HOCON via the bundled
+parser in hocon.py) <- environment-variable overrides. Validation hooks run
+at decode time, including the partition-format rule (Config.scala:122 ->
+DynamicPath.validatePartitionFormat). The reference's cpuParallelismFactor,
+uploadParallelismFactor and compressionType keys are accepted and ignored:
+Spark sizes its own tasks and gzip is the only blob codec.
 """
 
 from __future__ import annotations
@@ -28,7 +30,7 @@ class ConfigError(ValueError):
 class InputConfig:
     """Source config (reference config.aws.reference.hocon:7-64)."""
 
-    kind: str = "file"  # file | kinesis | rate
+    kind: str = "file"  # file | kinesis
     stream_name: str | None = None
     app_name: str = "snowplow-s3-loader-spark"
     initial_position: str = "TRIM_HORIZON"  # TRIM_HORIZON | LATEST | AT_TIMESTAMP
@@ -48,7 +50,6 @@ class GoodOutputConfig:
     path: str = ""
     prefix: str = ""
     partition_format: str | None = None
-    compression: str = "gzip"  # reference.conf output.good.compressionType
 
 
 @dataclass
@@ -104,8 +105,6 @@ class LoaderConfig:
     batching: BatchingConfig = field(default_factory=BatchingConfig)
     decompression: DecompressionConfig = field(default_factory=DecompressionConfig)
     monitoring: MonitoringConfig = field(default_factory=MonitoringConfig)
-    cpu_parallelism_factor: float = 1.0  # reference.conf:24
-    upload_parallelism_factor: float = 2.0  # reference.conf:25
     checkpoint_location: str | None = None
     license_accept: bool = False
 
@@ -209,7 +208,6 @@ def from_dict(raw: dict) -> LoaderConfig:
         # accept our shorter alias too
         prefix=good.get("filenamePrefix", good.get("prefix", "")),
         partition_format=good.get("partitionFormat"),
-        compression=good.get("compressionType", "gzip"),
     )
     bad = raw.get("output", {}).get("bad", {})
     cfg.bad = BadOutputConfig(
@@ -244,8 +242,6 @@ def from_dict(raw: dict) -> LoaderConfig:
             unhealthy_latency_seconds=_duration_seconds(hp.get("unhealthyLatency", 120.0)),
         ),
     )
-    cfg.cpu_parallelism_factor = float(raw.get("cpuParallelismFactor", 1.0))
-    cfg.upload_parallelism_factor = float(raw.get("uploadParallelismFactor", 2.0))
     cfg.checkpoint_location = raw.get("checkpointLocation")
     return cfg.validate()
 
@@ -276,10 +272,3 @@ def load_config(path: str) -> LoaderConfig:
             node[keys[-1]] = v
     raw = _merge(raw, env_over)
     return from_dict(raw)
-
-
-def cpu_parallelism(cores: int, factor: float) -> int:
-    """ceil(cores x factor), min 1 (reference Environment.scala:106-117)."""
-    import math
-
-    return max(1, math.ceil(cores * factor))

@@ -1,24 +1,21 @@
-"""User-facing engine facade — the thin `engine.sql()` / DataFrame surface
-over the synthetic tables plus the loader operators (SURVEY.md SS7.7).
+"""User-facing engine entry point — the `engine.sql()` / DataFrame surface
+over the synthetic tables (SURVEY.md SS7.7).
 
 A user of the reference gets a streaming loader; a user of this engine
 additionally gets the full Spark SQL surface over their data:
 
-    eng = Engine.at(spark, "/root/testdata/sf0.01")
+    eng = Engine.at(spark, sf_dir)  # a directory of <table>.parquet files
     eng.sql("SELECT l_returnflag, count(*) FROM lineitem GROUP BY 1")
     eng.table("events").groupBy("event_type").count()
-    eng.classify_sdj(lines_df)          # loader parse stage as a library call
+
+Everything else is a plain function over DataFrames: import it from its
+module (`operators.parse.classify`, `operators.profile.*`, ...).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from snowplow_s3_loader_spark.operators.parse import (
-    PURPOSE_ENRICHED,
-    PURPOSE_SDJ,
-    classify,
-)
 from snowplow_s3_loader_spark.session import tune_session
 from snowplow_s3_loader_spark.tables import register_tables
 
@@ -38,629 +35,3 @@ class Engine:
 
     def table(self, name: str) -> DataFrame:
         return self.tables[name]
-
-    def classify_sdj(self, lines: DataFrame, value_col: str = "value") -> DataFrame:
-        return classify(lines, PURPOSE_SDJ, value_col)
-
-    def classify_enriched(self, lines: DataFrame, value_col: str = "value") -> DataFrame:
-        return classify(lines, PURPOSE_ENRICHED, value_col)
-
-    # ---- training-data curation surface (SURVEY.md SS7.8) ----
-    # thin delegations so the curation operators are discoverable from the
-    # facade; each docstring names the module with the full knob set.
-
-    def near_dup_pairs(
-        self, docs: DataFrame, id_col: str, text_col: str,
-        block_cols: list[str], threshold: float = 0.8,
-    ) -> DataFrame:
-        """Token-Jaccard near-duplicate pairs (operators.dedup)."""
-        from snowplow_s3_loader_spark.operators.dedup import token_jaccard_pairs
-
-        return token_jaccard_pairs(docs, id_col, text_col, block_cols, threshold)
-
-    def dedup_clusters(self, pairs: DataFrame) -> DataFrame:
-        """Connected components over a near-dup pair graph (operators.graph)."""
-        from snowplow_s3_loader_spark.operators.graph import connected_components
-
-        return connected_components(pairs)
-
-    def keep_canonical(self, docs: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
-        """Drop every non-canonical member of each dup cluster (operators.graph)."""
-        from snowplow_s3_loader_spark.operators.graph import dedup_keep_canonical
-
-        return dedup_keep_canonical(docs, pairs, id_col)
-
-    def decontaminate(
-        self, docs: DataFrame, benchmark: DataFrame, id_col: str, text_col: str, n: int = 8
-    ) -> DataFrame:
-        """Benchmark n-gram contamination flags (operators.hygiene)."""
-        from snowplow_s3_loader_spark.operators.hygiene import ngram_contamination
-
-        return ngram_contamination(docs, benchmark, id_col, text_col, n=n)
-
-    def redact(self, docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-        """PII redaction report (operators.hygiene)."""
-        from snowplow_s3_loader_spark.operators.hygiene import redaction_report
-
-        return redaction_report(docs, id_col, text_col)
-
-    def remove_repeated_spans(
-        self, docs: DataFrame, id_col: str, text_col: str, k: int = 50
-    ) -> DataFrame:
-        """ExactSubstr-style repeated-span removal (operators.hygiene)."""
-        from snowplow_s3_loader_spark.operators.hygiene import remove_repeated_spans
-
-        return remove_repeated_spans(docs, id_col, text_col, k=k)
-
-    def lm_scores(self, docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-        """Bigram-LM cross-entropy quality signal (operators.lm)."""
-        from snowplow_s3_loader_spark.operators.lm import bigram_lm_scores
-
-        return bigram_lm_scores(docs, id_col, text_col)
-
-    def split(
-        self, docs: DataFrame, id_col: str, splits: dict[str, float]
-    ) -> DataFrame:
-        """Deterministic named-split assignment (operators.sampling)."""
-        from snowplow_s3_loader_spark.operators.sampling import deterministic_split
-
-        return deterministic_split(docs, id_col, splits)
-
-    def temperature_resample(
-        self, docs: DataFrame, id_col: str, class_col: str,
-        alpha: float = 0.7, target_frac: float = 0.3,
-    ) -> DataFrame:
-        """Corpus-mix rebalancing by n^alpha (operators.sampling)."""
-        from snowplow_s3_loader_spark.operators.sampling import temperature_resample
-
-        return temperature_resample(docs, id_col, class_col, alpha, target_frac)
-
-    def semi_join_filtered(
-        self, big: DataFrame, keys: DataFrame, on, bits_per_key: int = 16
-    ) -> DataFrame:
-        """Exact big-big semi join with a blocked-bloom runtime prefilter
-        (operators.bloom) — the shuffle only moves bloom survivors."""
-        from snowplow_s3_loader_spark.operators.bloom import bloom_prefilter_semi_join
-
-        return bloom_prefilter_semi_join(big, keys, on, bits_per_key=bits_per_key)
-
-    def heavy_hitters(
-        self, docs: DataFrame, text_col: str, capacity: int = 1024, k: int = 20
-    ) -> DataFrame:
-        """Corpus-frequent tokens via mergeable Misra-Gries summaries
-        (operators.sketches) — bounded executor state on open
-        vocabularies; est_count <= true <= est_count + err_bound."""
-        from snowplow_s3_loader_spark.operators.sketches import heavy_hitters
-
-        return heavy_hitters(docs, text_col, capacity, k)
-
-    def zorder(
-        self, df: DataFrame, specs, num_partitions: int, bits: int = 10
-    ) -> DataFrame:
-        """Z-order (Morton) layout rewrite for multi-column file skipping
-        (operators.layout); specs = [(column, modulus), ...] with moduli
-        matched to the occupied value domains."""
-        from snowplow_s3_loader_spark.operators.layout import zorder_repartition
-
-        return zorder_repartition(df, specs, num_partitions, bits)
-
-    def quality_scores(
-        self, docs: DataFrame, id_col: str, text_col: str,
-        dim: int = 4096, seed: int = 0,
-    ) -> DataFrame:
-        """Hashed bag-of-words linear classifier scoring (operators.text
-        hashed_linear_score): (id, score_micro, label)."""
-        from pyspark.sql import functions as F
-
-        from snowplow_s3_loader_spark.operators.text import hashed_linear_score
-
-        score, label = hashed_linear_score(F.col(text_col), dim=dim, seed=seed)
-        return docs.select(F.col(id_col).alias("id"), score, label)
-
-    def build_mixture(
-        self, docs: DataFrame, id_col: str, class_col: str, token_count,
-        weights: dict[str, float], budget_tokens: int,
-    ) -> DataFrame:
-        """Token-budget training-mix assembly (operators.sampling
-        token_budget_mixture): deterministic per-source sampling at
-        min(1, w*budget/tokens)."""
-        from snowplow_s3_loader_spark.operators.sampling import token_budget_mixture
-
-        return token_budget_mixture(
-            docs, id_col, class_col, token_count, weights, budget_tokens
-        )
-
-    def pack_ffd(
-        self, docs: DataFrame, id_col: str, token_count_col: str,
-        budget: int, group_cols: list[str] | None = None,
-    ) -> DataFrame:
-        """First-fit-decreasing token-budget packing (operators.text
-        pack_sequences_ffd)."""
-        from snowplow_s3_loader_spark.operators.text import pack_sequences_ffd
-
-        return pack_sequences_ffd(docs, id_col, token_count_col, budget, group_cols)
-
-    def robust_outliers(
-        self, df: DataFrame, keys: list[str], value_col: str, z: float = 3.5
-    ) -> DataFrame:
-        """Median/MAD outlier statistics per group (operators.timeseries
-        robust_outliers)."""
-        from snowplow_s3_loader_spark.operators.timeseries import robust_outliers
-
-        return robust_outliers(df, keys, value_col, z)
-
-    def pca(self, emb: DataFrame, vec_col: str, k: int, whiten: bool = False):
-        """Fit + project PCA over an embedding column (operators.similarity
-        pca_fit/pca_project); returns (projected_df, (mean, components,
-        eigenvalues))."""
-        from snowplow_s3_loader_spark.operators.similarity import pca_fit, pca_project
-
-        mean, comps, evals = pca_fit(emb, vec_col, k)
-        out = pca_project(
-            emb, vec_col, mean, comps, eigenvalues=evals if whiten else None
-        )
-        return out, (mean, comps, evals)
-
-    def pagerank(
-        self, edges: DataFrame, src: str = "src", dst: str = "dst",
-        iterations: int = 3, seeds: DataFrame | None = None,
-    ) -> DataFrame:
-        """Exact-integer (optionally personalized) PageRank over a link
-        graph (operators.graph pagerank); returns (node, rank_micro),
-        caller releases."""
-        from snowplow_s3_loader_spark.operators.graph import pagerank
-
-        return pagerank(edges, src, dst, iterations, seeds=seeds)
-
-    def apply_changelog(
-        self, snapshot: DataFrame, changes: DataFrame, keys: list[str],
-        seq_col: str, broadcast_changes: bool = False,
-    ) -> DataFrame:
-        """CDC merge: last-writer-wins changelog application
-        (operators.cdc apply_changelog)."""
-        from snowplow_s3_loader_spark.operators.cdc import apply_changelog
-
-        return apply_changelog(
-            snapshot, changes, keys, seq_col, broadcast_changes=broadcast_changes
-        )
-
-    def gopher_rules(
-        self, docs: DataFrame, text_col: str = "text",
-        group_cols: list[str] | None = None,
-    ) -> DataFrame:
-        """Gopher quality-rule audit per group (operators.text
-        gopher_rule_summary); per-document flags via gopher_quality_flags."""
-        from snowplow_s3_loader_spark.operators.text import gopher_rule_summary
-
-        return gopher_rule_summary(docs, text_col, group_cols)
-
-    def agg_state(
-        self, df: DataFrame, keys: list[str], sum_cols: tuple[str, ...] = (),
-        min_cols: tuple[str, ...] = (), max_cols: tuple[str, ...] = (),
-    ) -> DataFrame:
-        """Build keyed count/sum/min/max aggregate state
-        (operators.incremental agg_state)."""
-        from snowplow_s3_loader_spark.operators.incremental import agg_state
-
-        return agg_state(df, keys, sum_cols, min_cols, max_cols)
-
-    def update_agg_state(
-        self, state: DataFrame, delta: DataFrame, keys: list[str],
-        sum_cols: tuple[str, ...] = (), min_cols: tuple[str, ...] = (),
-        max_cols: tuple[str, ...] = (),
-    ) -> DataFrame:
-        """Merge an insert-only delta into aggregate state without
-        rescanning the corpus (operators.incremental update_agg_state)."""
-        from snowplow_s3_loader_spark.operators.incremental import update_agg_state
-
-        return update_agg_state(state, delta, keys, sum_cols, min_cols, max_cols)
-
-    # ---- analytics surface (round 6) ----
-
-    def funnel(
-        self, events: DataFrame, user_col: str, ts_col: str, type_col: str,
-        steps: list[str], max_gap_seconds: int | None = None,
-    ) -> DataFrame:
-        """Ordered conversion funnel (operators.behavior funnel_steps)."""
-        from snowplow_s3_loader_spark.operators.behavior import funnel_steps
-
-        return funnel_steps(events, user_col, ts_col, type_col, steps, max_gap_seconds)
-
-    def cohort_retention(
-        self, events: DataFrame, user_col: str, ts_col: str, unit: str = "week"
-    ) -> DataFrame:
-        """Cohort retention matrix (operators.behavior cohort_retention)."""
-        from snowplow_s3_loader_spark.operators.behavior import cohort_retention
-
-        return cohort_retention(events, user_col, ts_col, unit)
-
-    def frequent_pairs(
-        self, df: DataFrame, basket_col: str, item_col: str, min_support: int
-    ) -> DataFrame:
-        """Apriori-pruned market-basket pair mining (operators.behavior)."""
-        from snowplow_s3_loader_spark.operators.behavior import frequent_pairs
-
-        return frequent_pairs(df, basket_col, item_col, min_support)
-
-    def profile(
-        self, df: DataFrame, cols: list[str] | None = None, exact: bool = True
-    ) -> DataFrame:
-        """Per-column table profile (operators.profile profile_table)."""
-        from snowplow_s3_loader_spark.operators.profile import profile_table
-
-        return profile_table(df, cols, exact)
-
-    def equi_depth_histogram(
-        self, df: DataFrame, value_col: str, k: int,
-        tie_cols: list[str] | None = None,
-    ) -> DataFrame:
-        """Equal-count histogram without a global window
-        (operators.profile equi_depth_histogram)."""
-        from snowplow_s3_loader_spark.operators.profile import equi_depth_histogram
-
-        return equi_depth_histogram(df, value_col, k, tie_cols)
-
-    def exact_moments(
-        self, df: DataFrame, keys: list[str], x_col: str, y_col: str
-    ) -> DataFrame:
-        """Integer-exact covariance/correlation moments
-        (operators.profile exact_moments)."""
-        from snowplow_s3_loader_spark.operators.profile import exact_moments
-
-        return exact_moments(df, keys, x_col, y_col)
-
-    def interval_overlap_join(
-        self, left: DataFrame, right: DataFrame,
-        left_bounds: tuple[str, str], right_bounds: tuple[str, str],
-        bucket_width: int, on: list[str] | None = None,
-    ) -> DataFrame:
-        """Grid-bucketed interval overlap join (operators.joins)."""
-        from snowplow_s3_loader_spark.operators.joins import interval_overlap_join
-
-        return interval_overlap_join(
-            left, right, left_bounds, right_bounds, bucket_width, on
-        )
-
-    def triangle_count(
-        self, pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
-    ) -> DataFrame:
-        """Degree-oriented triangle counting (operators.graph)."""
-        from snowplow_s3_loader_spark.operators.graph import triangle_count
-
-        return triangle_count(pairs, id_a, id_b)
-
-    def quantize_embeddings(
-        self, emb: DataFrame, vec_col: str, out_col: str = "codes"
-    ) -> DataFrame:
-        """Fit global int8 bounds and quantize in one call
-        (operators.similarity quantization_bounds + quantize_embeddings)."""
-        from snowplow_s3_loader_spark.operators.similarity import (
-            quantization_bounds,
-            quantize_embeddings,
-        )
-
-        mins, maxs = quantization_bounds(emb, vec_col)
-        return quantize_embeddings(emb, vec_col, mins, maxs, out_col)
-
-    def check_suite(self, df: DataFrame, checks: list) -> DataFrame:
-        """Declarative data-quality constraint suite (operators.checks):
-        build the list with checks.not_null/unique/in_set/in_range/
-        matches/ref; one scan for all non-referential checks."""
-        from snowplow_s3_loader_spark.operators.checks import check_suite
-
-        return check_suite(df, checks)
-
-    def bpe_train(
-        self, df: DataFrame, text_col: str, n_merges: int
-    ) -> tuple:
-        """Learn BPE merges from a corpus (operators.bpe): returns
-        (merges, vocab frame); encode with bpe_encode."""
-        from snowplow_s3_loader_spark.operators.bpe import bpe_train
-
-        return bpe_train(df, text_col, n_merges)
-
-    def bpe_encode(
-        self, df: DataFrame, id_col: str, text_col: str, vocab: DataFrame
-    ) -> DataFrame:
-        """Encode a corpus with a trained BPE vocabulary
-        (operators.bpe): tokenize + broadcast-join segmentation."""
-        from snowplow_s3_loader_spark.operators.bpe import bpe_encode
-
-        return bpe_encode(df, id_col, text_col, vocab)
-
-    def random_walks(
-        self, edges: DataFrame, src: str = "src", dst: str = "dst",
-        walk_length: int = 3, seed: int = 0,
-    ) -> DataFrame:
-        """Deterministic hash-seeded random walks (operators.graph) —
-        graph sampling for embedding corpora."""
-        from snowplow_s3_loader_spark.operators.graph import random_walks
-
-        return random_walks(edges, src, dst, walk_length, seed)
-
-    def attribution(
-        self, events: DataFrame, user_col: str, ts_col: str, type_col: str,
-        conversion: str, touch_types: list, window_seconds: int | None = None,
-    ) -> DataFrame:
-        """First/last-touch conversion attribution (operators.behavior)."""
-        from snowplow_s3_loader_spark.operators.behavior import attribution
-
-        return attribution(
-            events, user_col, ts_col, type_col, conversion, touch_types,
-            window_seconds,
-        )
-
-    def pq_train(self, emb: DataFrame, m: int = 8, k: int = 16,
-                 vec_col: str = "embedding", id_col: str = "vec_id") -> list:
-        """Train product-quantization codebooks (operators.similarity)."""
-        from snowplow_s3_loader_spark.operators.similarity import pq_train
-
-        return pq_train(emb, m, k, vec_col, id_col)
-
-    def pq_encode(self, emb: DataFrame, codebooks: list,
-                  id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-        """Encode vectors to PQ codes (operators.similarity)."""
-        from snowplow_s3_loader_spark.operators.similarity import pq_encode
-
-        return pq_encode(emb, codebooks, id_col, vec_col)
-
-    def pq_topk(self, emb: DataFrame, codes: DataFrame, codebooks: list,
-                query_pred, k: int = 5, shortlist: int = 200) -> DataFrame:
-        """PQ ADC shortlist + exact re-rank top-k (operators.similarity)."""
-        from snowplow_s3_loader_spark.operators.similarity import pq_topk_adc
-
-        return pq_topk_adc(emb, codes, codebooks, query_pred, k, shortlist)
-
-    def k_core(self, pairs: DataFrame, k: int,
-               id_a: str = "id_a", id_b: str = "id_b") -> DataFrame:
-        """k-core of the undirected pair graph (operators.graph):
-        (node, core_degree) for the maximal subgraph of min-degree k."""
-        from snowplow_s3_loader_spark.operators.graph import k_core
-
-        return k_core(pairs, k, id_a, id_b)
-
-    def hits(self, edges: DataFrame, src: str = "src", dst: str = "dst",
-             iterations: int = 2) -> DataFrame:
-        """Exact-integer HITS hubs/authorities (operators.graph)."""
-        from snowplow_s3_loader_spark.operators.graph import hits
-
-        return hits(edges, src, dst, iterations)
-
-    def scd2_history(self, changes: DataFrame, keys: list, seq_col: str,
-                     op_col: str = "op", delete_op: str = "D") -> DataFrame:
-        """SCD2 validity timeline from a keyed changelog (operators.cdc)."""
-        from snowplow_s3_loader_spark.operators.cdc import scd2_history
-
-        return scd2_history(changes, keys, seq_col, op_col, delete_op)
-
-    def fuzzy_join(self, left: DataFrame, right: DataFrame,
-                   left_id: str, left_str: str, right_id: str,
-                   right_str: str, tau: int) -> DataFrame:
-        """Edit-distance similarity join, PassJoin segment blocking
-        (operators.linkage)."""
-        from snowplow_s3_loader_spark.operators.linkage import edit_distance_join
-
-        return edit_distance_join(
-            left, right, left_id, left_str, right_id, right_str, tau
-        )
-
-    def fuzzy_self_join(self, df: DataFrame, id_col: str, str_col: str,
-                        tau: int) -> DataFrame:
-        """Within-corpus edit-distance pairs (operators.linkage)."""
-        from snowplow_s3_loader_spark.operators.linkage import (
-            edit_distance_self_join,
-        )
-
-        return edit_distance_self_join(df, id_col, str_col, tau)
-
-    def bfs_distances(self, edges: DataFrame, sources: DataFrame,
-                      src: str = "src", dst: str = "dst",
-                      node_col: str = "node", max_depth: int = 8) -> DataFrame:
-        """Multi-source BFS hop distances (operators.graph)."""
-        from snowplow_s3_loader_spark.operators.graph import bfs_distances
-
-        return bfs_distances(edges, sources, src, dst, node_col, max_depth)
-
-    def snapshot_diff(self, old: DataFrame, new: DataFrame, keys: list,
-                      include_unchanged: bool = False) -> DataFrame:
-        """Row-level added/removed/changed diff between two snapshots
-        (operators.cdc)."""
-        from snowplow_s3_loader_spark.operators.cdc import snapshot_diff
-
-        return snapshot_diff(old, new, keys, include_unchanged)
-
-    def transition_matrix(self, events: DataFrame, user_col: str, ts_col: str,
-                          type_col: str, tie_cols: tuple = ()) -> DataFrame:
-        """First-order Markov transition counts + micro-unit probabilities
-        (operators.behavior)."""
-        from snowplow_s3_loader_spark.operators.behavior import transition_matrix
-
-        return transition_matrix(events, user_col, ts_col, type_col, tie_cols)
-
-    def rolling_anomalies(self, df: DataFrame, group_col: str,
-                          order_cols: list, cents_col: str, window: int = 20,
-                          min_n: int = 8, threshold: int = 3) -> DataFrame:
-        """Exact-integer rolling z-score anomaly flags (operators.timeseries)."""
-        from snowplow_s3_loader_spark.operators.timeseries import rolling_anomalies
-
-        return rolling_anomalies(
-            df, group_col, order_cols, cents_col, window, min_n, threshold
-        )
-
-    def cms_build(self, df: DataFrame, token_col: str, width: int = 2048,
-                  depth: int = 4) -> DataFrame:
-        """Count-Min sketch over a token stream (operators.sketches)."""
-        from snowplow_s3_loader_spark.operators.sketches import cms_build
-
-        return cms_build(df, token_col, width, depth)
-
-    def cms_query(self, sketch: DataFrame, queries: DataFrame, token_col: str,
-                  width: int, depth: int) -> DataFrame:
-        """Point-frequency estimates from a Count-Min sketch
-        (operators.sketches)."""
-        from snowplow_s3_loader_spark.operators.sketches import cms_query
-
-        return cms_query(sketch, queries, token_col, width, depth)
-
-    def strip_markup(self, text_col):
-        """Plain text from HTML-ish markup (operators.text)."""
-        from snowplow_s3_loader_spark.operators.text import strip_markup
-
-        return strip_markup(text_col)
-
-    def label_propagation(self, pairs: DataFrame, id_a: str = "id_a",
-                          id_b: str = "id_b", iterations: int = 2) -> DataFrame:
-        """Deterministic label-propagation communities (operators.graph)."""
-        from snowplow_s3_loader_spark.operators.graph import label_propagation
-
-        return label_propagation(pairs, id_a, id_b, iterations)
-
-    # ---- round-11 second-session additions ----
-
-    def calibration_bins(self, df: DataFrame, score_col: str,
-                         label_col: str, k: int = 10) -> DataFrame:
-        """Reliability-diagram bins + ECE numerator (operators.profile)."""
-        from snowplow_s3_loader_spark.operators.profile import calibration_bins
-
-        return calibration_bins(df, score_col, label_col, k)
-
-    def ab_test(self, df: DataFrame, variant_col: str, success_col: str,
-                a_value, b_value,
-                strata_cols: list[str] | None = None) -> DataFrame:
-        """Two-proportion z-test readout per stratum (operators.profile)."""
-        from snowplow_s3_loader_spark.operators.profile import two_proportion_z
-
-        return two_proportion_z(
-            df, variant_col, success_col, a_value, b_value, strata_cols
-        )
-
-    def fd_check(self, df: DataFrame,
-                 dependencies: list[tuple[list[str], str]]) -> DataFrame:
-        """Functional-dependency / candidate-key profiling
-        (operators.profile)."""
-        from snowplow_s3_loader_spark.operators.profile import fd_check
-
-        return fd_check(df, dependencies)
-
-    def char_entropy(self, docs: DataFrame, id_col: str,
-                     text_col: str) -> DataFrame:
-        """Char-level Shannon entropy — gibberish detector
-        (operators.text)."""
-        from snowplow_s3_loader_spark.operators.text import char_entropy
-
-        return char_entropy(docs, id_col, text_col)
-
-    def budget_select(self, df: DataFrame, id_col: str, score_col: str,
-                      token_col: str, budget_tokens: int) -> DataFrame:
-        """Token-budget-constrained quality selection
-        (operators.sampling)."""
-        from snowplow_s3_loader_spark.operators.sampling import (
-            quality_budget_select,
-        )
-
-        return quality_budget_select(
-            df, id_col, score_col, token_col, budget_tokens
-        )
-
-    def survival_curve(self, df: DataFrame, group_col: str,
-                       duration_col: str, event_col: str) -> DataFrame:
-        """Kaplan-Meier survival curve with right-censoring
-        (operators.profile)."""
-        from snowplow_s3_loader_spark.operators.profile import survival_curve
-
-        return survival_curve(df, group_col, duration_col, event_col)
-
-    def bursts(self, df: DataFrame, key_col: str, ts_col: str,
-               tie_col: str, s_num: int = 2,
-               gamma_micro: int = 1_000_000) -> DataFrame:
-        """Kleinberg two-state burst detection (operators.timeseries)."""
-        from snowplow_s3_loader_spark.operators.timeseries import (
-            kleinberg_bursts,
-        )
-
-        return kleinberg_bursts(df, key_col, ts_col, tie_col, s_num, gamma_micro)
-
-    # ---- round-12 additions ----
-
-    def burst_intervals(self, df: DataFrame, key_col: str, ts_col: str,
-                        tie_col: str, s_num: int = 2,
-                        gamma_micro: int = 1_000_000) -> DataFrame:
-        """Plot-ready burst windows from the Kleinberg backtrack
-        (operators.timeseries)."""
-        from snowplow_s3_loader_spark.operators.timeseries import (
-            kleinberg_burst_intervals,
-        )
-
-        return kleinberg_burst_intervals(
-            df, key_col, ts_col, tie_col, s_num, gamma_micro
-        )
-
-    def burst_hierarchy(self, df: DataFrame, key_col: str, ts_col: str,
-                        tie_col: str, n_states: int = 3, s_num: int = 2,
-                        gamma_micro: int = 1_000_000) -> DataFrame:
-        """Multi-state Kleinberg burst hierarchy (operators.timeseries)."""
-        from snowplow_s3_loader_spark.operators.timeseries import (
-            kleinberg_bursts_multi,
-        )
-
-        return kleinberg_bursts_multi(
-            df, key_col, ts_col, tie_col, n_states, s_num, gamma_micro
-        )
-
-    def changepoint(self, df: DataFrame, group_col: str,
-                    order_cols: list[str], value_col: str) -> DataFrame:
-        """Offline CUSUM changepoint location per series
-        (operators.timeseries)."""
-        from snowplow_s3_loader_spark.operators.timeseries import (
-            cusum_changepoint,
-        )
-
-        return cusum_changepoint(df, group_col, order_cols, value_col)
-
-    def benford(self, df: DataFrame, group_cols: list[str],
-                value_col: str) -> DataFrame:
-        """Benford first-digit audit (operators.profile)."""
-        from snowplow_s3_loader_spark.operators.profile import benford_profile
-
-        return benford_profile(df, group_cols, value_col)
-
-    def mutual_information(self, df: DataFrame, x_col: str,
-                           y_col: str) -> DataFrame:
-        """Categorical mutual information in quantized micro-nats
-        (operators.profile)."""
-        from snowplow_s3_loader_spark.operators.profile import (
-            mutual_information,
-        )
-
-        return mutual_information(df, x_col, y_col)
-
-    def isotonic_calibration(self, df: DataFrame, score_col: str,
-                             label_col: str, k: int = 10) -> DataFrame:
-        """Monotone (PAV) recalibration of the reliability diagram
-        (operators.profile)."""
-        from snowplow_s3_loader_spark.operators.profile import (
-            isotonic_calibration,
-        )
-
-        return isotonic_calibration(df, score_col, label_col, k)
-
-    def compact_band_store(self, path: str,
-                           up_to_epoch: int | None = None,
-                           dedupe: bool = True) -> dict[str, int]:
-        """Closed-epoch compaction of a persisted band store
-        (operators.dedup)."""
-        from snowplow_s3_loader_spark.operators.dedup import (
-            compact_band_store,
-        )
-
-        return compact_band_store(self.spark, path, up_to_epoch, dedupe)
-
-    def cuped(self, df: DataFrame, variant_col: str, metric_col: str,
-              covariate_col: str) -> DataFrame:
-        """CUPED variance-reduced A/B readout (operators.profile)."""
-        from snowplow_s3_loader_spark.operators.profile import (
-            cuped_adjusted_means,
-        )
-
-        return cuped_adjusted_means(df, variant_col, metric_col,
-                                    covariate_col)

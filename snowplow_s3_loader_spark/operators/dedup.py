@@ -19,7 +19,7 @@ xxhash64/murmur (engine-specific seeds).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from snowplow_s3_loader_spark.operators.text import tokens
@@ -74,15 +74,6 @@ def word_ngrams(s: Column, n: int = 3) -> Column:
         lambda i: F.concat_ws(" ", F.slice(t, i, n)),
     )
     return F.when(F.size(t) < n, F.array(F.concat_ws(" ", t))).otherwise(grams)
-
-
-def hash_tokens(arr: Column) -> Column:
-    """Map a token/shingle array to 60-bit md5 bigints (engine-portable,
-    see _token_hash60). Set-similarity machinery downstream then joins and
-    intersects longs instead of strings — same Jaccard values (collisions
-    are ~|set|^2/2^61 and in any case identical in every engine computing
-    the same hash)."""
-    return F.transform(arr, _token_hash60)
 
 
 def distinct_tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -696,6 +687,19 @@ def release_materialized(df: DataFrame) -> None:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:
         pass  # not a checkpointed frame / already released
+
+
+def sweep_checkpoint_blocks(spark: SparkSession) -> None:
+    """Drop EVERY localCheckpoint block in the session; `.cache()`d tables
+    stay. Benchmarks call it between queries so the checkpoints one query's
+    materializing operators leave behind never tax the next (uncollected
+    residue once made a 1x run slower than its 10x twin). Any frame still
+    reading a swept checkpoint is dead afterwards."""
+    lst = spark.sparkContext._jsc.sc().getPersistentRDDs().toList()
+    for i in range(lst.size()):
+        rdd = lst.apply(i)._2()
+        if "localCheckpoint" in rdd.toString():
+            rdd.unpersist(False)
 
 
 def checkpoint_nostats(

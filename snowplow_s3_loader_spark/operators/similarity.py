@@ -70,12 +70,6 @@ def cosine(a: Column, b: Column) -> Column:
     return _cosine_udf(a, b)
 
 
-def cosine_expr(a: Column, b: Column) -> Column:
-    """Pure-expression cosine (no Python workers) — for contexts where a
-    pandas_udf can't run or a literal plane is involved."""
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def brute_force_topk(
     emb: DataFrame,
     query_pred: Column,
@@ -588,34 +582,6 @@ def blocked_near_dup_pairs(
     )
     return base.groupBy("blk").applyInPandas(
         _pairs, schema="id_a long, id_b long, cos_sim double"
-    )
-
-
-def embedding_near_dup_pairs(
-    emb: DataFrame,
-    threshold: float = 0.95,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via SRP bucketing (approximate:
-    only same-bucket pairs are compared)."""
-    planes = srp_planes(dim, n_planes, seed)
-    base = emb.select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v")).withColumn(
-        "bucket", srp_bucket(F.col("v"), planes)
-    )
-    a, b = base.alias("a"), base.alias("b")
-    return (
-        a.join(b, on="bucket")
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.round(cosine(F.col("a.v"), F.col("b.v")), 6).alias("cos_sim"),
-        )
-        .where(F.col("cos_sim") >= threshold)
     )
 
 

@@ -33,10 +33,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def char_count(text: Column) -> Column:
-    return F.length(text)
-
-
 def avg_token_length(text: Column) -> Column:
     toks = tokens(text)
     total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
@@ -109,21 +105,6 @@ def fingerprint(text: Column) -> Column:
     """Deterministic document fingerprint: md5 of whitespace-collapsed,
     lowercased text (a cheap rolling-hash stand-in; identical in DuckDB)."""
     return F.md5(F.lower(F.regexp_replace(F.trim(text), " +", " ")).cast("binary"))
-
-
-def with_text_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
-    t = F.col(text_col)
-    return df.select(
-        "*",
-        token_count(t).alias("n_tokens"),
-        char_count(t).alias("n_chars_m"),
-        F.round(avg_token_length(t), 6).alias("avg_token_len"),
-        F.round(punct_ratio(t), 6).alias("punct_ratio"),
-        F.round(stopword_ratio(t), 6).alias("stopword_ratio"),
-        F.round(quality_score(t), 6).alias("quality"),
-        predicted_lang(t).alias("pred_lang"),
-        fingerprint(t).alias("fp"),
-    )
 
 
 def pack_sequences(

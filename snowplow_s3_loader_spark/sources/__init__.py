@@ -1,11 +1,8 @@
 """Stream sources (O1): file-stream for tests/local, Kinesis for prod
-(built-in python polling data source; JVM connector jar as the scale-out
-alternative), rate for soak tests."""
+(built-in python polling data source, no connector jar)."""
 
 from snowplow_s3_loader_spark.sources.streams import (  # noqa: F401
     binary_file_stream,
     file_stream,
-    kinesis_connector_stream,
     kinesis_stream,
-    rate_stream,
 )

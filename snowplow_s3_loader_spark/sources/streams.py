@@ -49,8 +49,10 @@ def kinesis_stream(
     sources/kinesis_source.py) — a boto3 polling reader mirroring the
     reference's single-KCL-worker consumption model, no connector jar
     needed. `client_factory` ("module:callable") injects the wire client;
-    default is boto3 (env-gated). For massively-sharded streams prefer
-    `kinesis_connector_stream` with a JVM connector jar on the classpath."""
+    default is boto3 (env-gated). Massively-sharded streams get one reader
+    task per shard (KinesisPartitionedReader): readerMode=auto, the
+    default, switches to it above 8 shards; readerMode=partitioned forces
+    it (pass either through cfg.options)."""
     from snowplow_s3_loader_spark.sources.kinesis_source import (
         KinesisPythonDataSource,
     )
@@ -69,55 +71,3 @@ def kinesis_stream(
     for k, v in (cfg.options or {}).items():
         reader = reader.option(k, str(v))
     return reader.load().select(F.col("payload"))
-
-
-def kinesis_connector_options(cfg: InputConfig) -> dict[str, str]:
-    """Option map for the spark-sql-kinesis JVM connector (documented
-    surface: streamName, region, initialPosition, consumerName,
-    maxFetchRate) derived from the loader config — factored out so the
-    mapping is testable without a connector jar on the classpath."""
-    opts = {
-        "streamName": cfg.stream_name or "",
-        "initialPosition": cfg.initial_position,
-        "consumerName": cfg.app_name,
-    }
-    if cfg.region:
-        opts["region"] = cfg.region
-    if cfg.max_records:
-        opts["maxFetchRate"] = str(cfg.max_records)
-    return opts
-
-
-def kinesis_connector_stream(spark: SparkSession, cfg: InputConfig) -> DataFrame:
-    """Kinesis via a JVM spark-kinesis connector jar (scale-out path: one
-    receiving task per shard). Raises a clear error when no jar is on the
-    classpath — OSS PySpark doesn't bundle one. NOTE: the pure-Python
-    scale-out path is kinesis_stream with readerMode=partitioned
-    (sources/kinesis_source.KinesisPartitionedReader), which needs no jar."""
-    reader = spark.readStream.format("kinesis")
-    for k, v in kinesis_connector_options(cfg).items():
-        reader = reader.option(k, v)
-    try:
-        df = reader.load()
-    except Exception as e:  # connector jar missing
-        raise NotImplementedError(
-            "kinesis connector source requires a spark-kinesis connector jar "
-            "on the classpath (e.g. spark-sql-kinesis); use kinesis_stream "
-            "(python polling source) or the file source instead"
-        ) from e
-    return df.select(F.col("data").alias("payload"))
-
-
-def rate_stream(spark: SparkSession, rows_per_second: int = 1000) -> DataFrame:
-    """Synthetic load source for soak testing the pipeline."""
-    df = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-    )
-    line = F.concat(
-        F.lit('{"schema": "iglu:com.example/rate/jsonschema/1-0-0", "data": {"n": '),
-        F.col("value").cast("string"),
-        F.lit("}}"),
-    )
-    return df.select(line.cast("binary").alias("payload"))

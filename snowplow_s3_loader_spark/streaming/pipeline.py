@@ -47,7 +47,7 @@ from snowplow_s3_loader_spark.operators.decompression import (
     decompressed_stream,
 )
 from snowplow_s3_loader_spark.operators.parse import classify
-from snowplow_s3_loader_spark.sinks.bad_sink import BadSink, FileBadSink
+from snowplow_s3_loader_spark.sinks.bad_sink import BadSink, FileBadSink, KinesisBadSink
 from snowplow_s3_loader_spark.sinks.blob import write_batch
 from snowplow_s3_loader_spark.streaming.actions import ActionLog
 from snowplow_s3_loader_spark.streaming.health import AppHealth
@@ -64,10 +64,17 @@ class LoaderPipeline:
     deterministic_uuids: bool = False
 
     def __post_init__(self) -> None:
-        if self.bad_sink is None:
-            bad_dir = self.config.bad.path or (self.config.good.path.rstrip("/") + "-bad")
-            self.bad_sink = FileBadSink(bad_dir)
-        self._bad_row = _bad_row_column(self.config.bad.max_record_size)
+        bad = self.config.bad
+        if self.bad_sink is None and bad.kind == "kinesis":
+            self.bad_sink = KinesisBadSink(
+                bad.stream_name,
+                region=self.config.input.region,
+                record_limit=bad.record_limit,
+                byte_limit=bad.byte_limit,
+            )
+        elif self.bad_sink is None:
+            self.bad_sink = FileBadSink(bad.path or (self.config.good.path.rstrip("/") + "-bad"))
+        self._bad_row = _bad_row_column(bad.max_record_size)
 
     # ---------------- the foreachBatch body (O5..O13) ----------------
 

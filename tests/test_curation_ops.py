@@ -887,26 +887,40 @@ def test_exact_moments_match_numpy(spark):
     assert abs(r - np.corrcoef(x, y)[0, 1]) < 1e-12
 
 
-def test_engine_analytics_facade(spark):
-    """The analytics facade delegations are wired and runnable."""
-    from snowplow_s3_loader_spark.engine import Engine
+def test_analytics_operators_run_on_events(spark, sf_dir):
+    """The analytics operators run end to end on the synthetic tables."""
+    from snowplow_s3_loader_spark.operators.behavior import (
+        cohort_retention,
+        funnel_steps,
+    )
+    from snowplow_s3_loader_spark.operators.graph import triangle_count
+    from snowplow_s3_loader_spark.operators.profile import (
+        equi_depth_histogram,
+        exact_moments,
+        profile_table,
+    )
+    from snowplow_s3_loader_spark.operators.similarity import (
+        quantization_bounds,
+        quantize_embeddings,
+    )
+    from snowplow_s3_loader_spark.tables import load_table
 
-    eng = Engine.at(spark, "/root/testdata/sf0.001")
-    ev = eng.table("events")
-    assert eng.profile(ev, ["event_id"]).count() == 1
-    fun = eng.funnel(ev, "user_id", "ts", "event_type", ["view", "click"])
+    ev = load_table(spark, sf_dir, "events")
+    assert profile_table(ev, ["event_id"]).count() == 1
+    fun = funnel_steps(ev, "user_id", "ts", "event_type", ["view", "click"])
     assert fun.count() > 0
-    assert eng.cohort_retention(ev, "user_id", "ts").count() > 0
-    assert eng.equi_depth_histogram(ev, "value", 4, ["event_id"]).count() == 4
+    assert cohort_retention(ev, "user_id", "ts").count() > 0
+    assert equi_depth_histogram(ev, "value", 4, ["event_id"]).count() == 4
     assert (
-        eng.exact_moments(ev.selectExpr("event_type", "CAST(value AS LONG) v",
-                                        "event_id"),
-                          ["event_type"], "v", "event_id").count() == 5
+        exact_moments(ev.selectExpr("event_type", "CAST(value AS LONG) v",
+                                    "event_id"),
+                      ["event_type"], "v", "event_id").count() == 5
     )
     pairs = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "id_a long, id_b long")
-    assert eng.triangle_count(pairs).count() == 3
-    emb = eng.table("embeddings").limit(50)
-    q = eng.quantize_embeddings(emb, "embedding")
+    assert triangle_count(pairs).count() == 3
+    emb = load_table(spark, sf_dir, "embeddings").limit(50)
+    mins, maxs = quantization_bounds(emb, "embedding")
+    q = quantize_embeddings(emb, "embedding", mins, maxs)
     assert q.select("codes").first()["codes"] is not None
 
 

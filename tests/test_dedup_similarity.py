@@ -361,6 +361,34 @@ def test_semantic_dedup_releases_internal_checkpoints(spark):
     assert jsc.getPersistentRDDs().size() <= before
 
 
+def test_sweep_checkpoint_blocks_keeps_cached_tables(spark):
+    """The between-queries sweep drops localCheckpoint blocks and leaves
+    `.cache()`d tables in place (compared as RDD id sets: the async
+    ContextCleaner may drop unrelated blocks in between)."""
+    jsc = spark.sparkContext._jsc.sc()
+
+    def persisted() -> set[int]:
+        lst = jsc.getPersistentRDDs().toList()
+        return {lst.apply(i)._1() for i in range(lst.size())}
+
+    ids0 = persisted()
+    table = spark.range(100).withColumn("x", F.col("id") * 2).cache()
+    assert table.count() == 100
+    ids1 = persisted()
+    ckpt = spark.range(50).localCheckpoint()
+    assert ckpt.count() == 50
+    cached_ids, ckpt_ids = ids1 - ids0, persisted() - ids1
+    assert cached_ids and ckpt_ids
+    try:
+        dedup.sweep_checkpoint_blocks(spark)
+        after = persisted()
+        assert not ckpt_ids & after
+        assert cached_ids <= after
+        assert table.count() == 100
+    finally:
+        table.unpersist()
+
+
 def test_ivf_recall_topk_matches_two_scan_composition(spark):
     """The shared-scan recall audit (round-6) must produce the same
     per-query hit counts as the old composition (ann_topk_ivf joined to

@@ -1069,39 +1069,49 @@ class TestIntegralityGuards:
         assert out[5] == 1 and out[1] == 1
 
 
-def test_engine_round12_facade(spark):
-    """The round-12 facade delegations are wired and runnable."""
-    from snowplow_s3_loader_spark.engine import Engine
+def test_round12_operators_run_on_tables(spark, sf_dir):
+    """The round-12 operators run end to end on the synthetic tables."""
+    from snowplow_s3_loader_spark.operators.profile import (
+        benford_profile,
+        cuped_adjusted_means,
+        isotonic_calibration,
+        mutual_information,
+    )
+    from snowplow_s3_loader_spark.operators.timeseries import (
+        cusum_changepoint,
+        kleinberg_burst_intervals,
+        kleinberg_bursts_multi,
+    )
+    from snowplow_s3_loader_spark.tables import load_table
 
-    eng = Engine.at(spark, "/root/testdata/sf0.001")
-    ev = eng.table("events").where(F.col("user_id").isNotNull())
+    ev = load_table(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
     keyed = ev.select(
         (F.col("user_id") % 5).alias("k"), "ts", "event_id",
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
-    assert eng.burst_hierarchy(keyed, "k", "ts", "event_id").count() == 5
-    eng.burst_intervals(keyed, "k", "ts", "event_id",
-                        gamma_micro=300_000).count()
-    assert eng.changepoint(keyed, "k", ["ts", "event_id"],
-                           "cents").count() == 5
-    docs = eng.table("orders").select(
+    assert kleinberg_bursts_multi(keyed, "k", "ts", "event_id").count() == 5
+    kleinberg_burst_intervals(keyed, "k", "ts", "event_id",
+                              gamma_micro=300_000).count()
+    assert cusum_changepoint(keyed, "k", ["ts", "event_id"],
+                             "cents").count() == 5
+    docs = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("g"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    assert eng.benford(docs, ["g"], "cents").count() == 45
-    [r] = eng.mutual_information(
-        eng.table("lineitem"), "l_returnflag", "l_linestatus"
+    assert benford_profile(docs, ["g"], "cents").count() == 45
+    [r] = mutual_information(
+        load_table(spark, sf_dir, "lineitem"), "l_returnflag", "l_linestatus"
     ).collect()
     assert r["mi_micro"] > 0
     cal = spark.createDataFrame(
         [(100_000, 0), (100_000, 1), (900_000, 1)], "p long, y int"
     )
-    assert eng.isotonic_calibration(cal, "p", "y").count() == 10
+    assert isotonic_calibration(cal, "p", "y").count() == 10
     ab = spark.createDataFrame(
         [("A", 1, 2), ("A", 2, 5), ("B", 1, 3), ("B", 3, 8)],
         "v string, x long, y long",
     )
-    assert eng.cuped(ab, "v", "y", "x").count() == 2
+    assert cuped_adjusted_means(ab, "v", "y", "x").count() == 2
 
 
 class TestCuped:

@@ -278,24 +278,22 @@ def test_hashed_linear_score_matches_python_reference(spark, sf_dir):
         assert r["label"] == (want > 0)
 
 
-def test_engine_facade_exposes_scale_ops(spark, sf_dir):
-    """The Engine facade delegates to the round-6 operators."""
-    from snowplow_s3_loader_spark.engine import Engine
-
-    eng = Engine.at(spark, sf_dir)
-    docs = eng.table("documents")
-    li, orders = eng.table("lineitem"), eng.table("orders")
+def test_scale_operators_run_on_tables(spark, sf_dir):
+    """The round-6 scale operators run end to end on the synthetic tables."""
+    docs = load_table(spark, sf_dir, "documents")
+    li, orders = load_table(spark, sf_dir, "lineitem"), load_table(spark, sf_dir, "orders")
     keys = orders.filter(F.col("o_orderpriority") == "1-URGENT").select("o_orderkey")
     assert (
-        eng.semi_join_filtered(li, keys, ("l_orderkey", "o_orderkey")).count()
+        bloom.bloom_prefilter_semi_join(li, keys, ("l_orderkey", "o_orderkey")).count()
         == li.join(keys, li.l_orderkey == keys.o_orderkey, "left_semi").count()
     )
-    hh = eng.heavy_hitters(docs, "text", capacity=64, k=3).collect()
+    hh = sketches.heavy_hitters(docs, "text", capacity=64, k=3).collect()
     assert len(hh) == 3 and all(r["est_count"] > 0 for r in hh)
-    z = eng.zorder(docs.select("doc_id", "n_chars"),
-                   [(F.col("doc_id"), 64), (F.col("n_chars"), 64)], 4, bits=6)
+    z = layout.zorder_repartition(docs.select("doc_id", "n_chars"),
+                                  [(F.col("doc_id"), 64), (F.col("n_chars"), 64)], 4, bits=6)
     assert z.count() == docs.count()
-    qs = eng.quality_scores(docs, "doc_id", "text").collect()
+    score, label = text.hashed_linear_score(F.col("text"))
+    qs = docs.select(F.col("doc_id").alias("id"), score, label).collect()
     assert all((r["score_micro"] > 0) == r["label"] for r in qs)
 
 

@@ -1,12 +1,9 @@
-"""Source adapter tests: file-stream contract, kinesis connector gate,
-rate-source synthesis."""
+"""Source adapter tests: file-stream and python Kinesis source contracts."""
 
 from __future__ import annotations
 
-import pytest
-
 from snowplow_s3_loader_spark.config import InputConfig
-from snowplow_s3_loader_spark.sources.streams import file_stream, kinesis_stream, rate_stream
+from snowplow_s3_loader_spark.sources.streams import file_stream, kinesis_stream
 
 
 def test_file_stream_payload_contract(spark, tmp_path):
@@ -17,14 +14,6 @@ def test_file_stream_payload_contract(spark, tmp_path):
     assert df.schema["payload"].dataType.simpleString() == "binary"
 
 
-def test_kinesis_connector_gate_raises_without_jar(spark):
-    from snowplow_s3_loader_spark.sources import kinesis_connector_stream
-
-    cfg = InputConfig(kind="kinesis", stream_name="s", region="us-east-1")
-    with pytest.raises(NotImplementedError, match="connector jar"):
-        kinesis_connector_stream(spark, cfg)
-
-
 def test_kinesis_python_source_loads_lazily(spark):
     # the python data source registers and builds a streaming frame with the
     # record schema without touching the wire (client created at stream start)
@@ -33,34 +22,3 @@ def test_kinesis_python_source_loads_lazily(spark):
     assert df.isStreaming
     assert [f.name for f in df.schema.fields] == ["payload"]
 
-
-def test_rate_stream_synthesizes_sdj(spark):
-    df = rate_stream(spark, rows_per_second=10)
-    assert df.isStreaming
-    assert df.schema["payload"].dataType.simpleString() == "binary"
-
-
-def test_kinesis_connector_options_shape():
-    """VERDICT r2 item 7: the JVM-connector fallback's emitted options must
-    match the spark-kinesis connector's documented surface."""
-    from snowplow_s3_loader_spark.config import InputConfig
-    from snowplow_s3_loader_spark.sources.streams import kinesis_connector_options
-
-    cfg = InputConfig(
-        kind="kinesis",
-        stream_name="enriched",
-        app_name="loader-app",
-        initial_position="LATEST",
-        region="eu-central-1",
-        max_records=500,
-    )
-    assert kinesis_connector_options(cfg) == {
-        "streamName": "enriched",
-        "initialPosition": "LATEST",
-        "consumerName": "loader-app",
-        "region": "eu-central-1",
-        "maxFetchRate": "500",
-    }
-    # optional keys dropped when unset
-    slim = kinesis_connector_options(InputConfig(stream_name="s", max_records=0))
-    assert "region" not in slim and "maxFetchRate" not in slim

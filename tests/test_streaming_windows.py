@@ -115,6 +115,7 @@ def test_streaming_dedup_with_watermark(spark, tmp_path):
 
 def test_engine_sql_facade(spark, sf_dir):
     from snowplow_s3_loader_spark.engine import Engine
+    from snowplow_s3_loader_spark.operators.parse import classify
 
     eng = Engine.at(spark, sf_dir)
     out = eng.sql(
@@ -125,7 +126,10 @@ def test_engine_sql_facade(spark, sf_dir):
     lines = spark.createDataFrame(
         [('{"schema": "iglu:com.example/e/jsonschema/1-0-0", "data": {}}',)], "value string"
     )
-    assert eng.classify_sdj(lines).first()["schema_key"]["vendor"] == "com.example"
+    assert (
+        classify(lines, "SELF_DESCRIBING").first()["schema_key"]["vendor"]
+        == "com.example"
+    )
 
 
 def test_dedup_stream_drops_duplicates_with_bounded_state(spark, tmp_path):
@@ -163,33 +167,47 @@ def test_dedup_stream_drops_duplicates_with_bounded_state(spark, tmp_path):
     assert got == [1, 2, 3]
 
 
-def test_engine_curation_facade(spark, sf_dir):
-    """The facade's curation surface delegates to the real operators."""
+def test_curation_operators_compose_on_documents(spark, sf_dir):
+    """The curation operators run end to end on the documents table."""
     from pyspark.sql import functions as F
 
-    from snowplow_s3_loader_spark.engine import Engine
+    from snowplow_s3_loader_spark.operators.dedup import token_jaccard_pairs
+    from snowplow_s3_loader_spark.operators.graph import (
+        connected_components,
+        dedup_keep_canonical,
+    )
+    from snowplow_s3_loader_spark.operators.hygiene import (
+        ngram_contamination,
+        redaction_report,
+        remove_repeated_spans,
+    )
+    from snowplow_s3_loader_spark.operators.lm import bigram_lm_scores
+    from snowplow_s3_loader_spark.operators.sampling import (
+        deterministic_split,
+        temperature_resample,
+    )
+    from snowplow_s3_loader_spark.tables import load_table
 
-    eng = Engine.at(spark, sf_dir)
-    docs = eng.table("documents")
+    docs = load_table(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 97 == 0)
-    assert eng.decontaminate(docs, bench, "doc_id", "text", n=5).columns == [
+    assert ngram_contamination(docs, bench, "doc_id", "text", n=5).columns == [
         "id", "n_shared_ngrams", "contaminated"
     ]
-    assert "redacted" in eng.redact(docs, "doc_id", "text").columns
-    assert eng.remove_repeated_spans(docs, "doc_id", "text", k=8).columns == [
+    assert "redacted" in redaction_report(docs, "doc_id", "text").columns
+    assert remove_repeated_spans(docs, "doc_id", "text", k=8).columns == [
         "id", "n_dup_spans", "n_tokens_removed", "cleaned_text"
     ]
-    assert "lm_cross_entropy" in eng.lm_scores(docs, "doc_id", "text").columns
-    split = eng.split(docs, "doc_id", {"train": 0.9, "val": 0.1})
+    assert "lm_cross_entropy" in bigram_lm_scores(docs, "doc_id", "text").columns
+    split = deterministic_split(docs, "doc_id", {"train": 0.9, "val": 0.1})
     assert {r["split"] for r in split.select("split").distinct().collect()} <= {"train", "val"}
-    kept = eng.temperature_resample(docs, "doc_id", "lang")
+    kept = temperature_resample(docs, "doc_id", "lang")
     assert 0 < kept.count() < docs.count()
-    pairs = eng.near_dup_pairs(
+    pairs = token_jaccard_pairs(
         docs.withColumn("blk", F.col("lang")), "doc_id", "text", ["blk"], 0.8
     )
-    comps = eng.dedup_clusters(pairs)
+    comps = connected_components(pairs)
     assert set(comps.columns) == {"node", "component"}
-    assert eng.keep_canonical(docs, pairs, "doc_id").count() <= docs.count()
+    assert dedup_keep_canonical(docs, pairs, "doc_id").count() <= docs.count()
 
 
 def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
