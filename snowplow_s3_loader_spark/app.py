@@ -35,6 +35,14 @@ def main(argv: list[str] | None = None) -> int:
     except ConfigError as e:
         print(f"config error: {e}", file=sys.stderr)
         return 2
+    if not cfg.license_accept:
+        # the reference refuses to start until the licence is accepted
+        print(
+            "config error: license.accept must be true to run the loader "
+            "(or set SNOWPLOW_LICENSE__ACCEPT=true)",
+            file=sys.stderr,
+        )
+        return 2
 
     # Sentry crash reporting (reference LoaderApp.scala:33-39), import-gated:
     # enabled only when the sdk is installed and SENTRY_DSN is set

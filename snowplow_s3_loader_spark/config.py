@@ -188,7 +188,14 @@ def from_dict(raw: dict) -> LoaderConfig:
     # reference hocon nests it: initialPosition { type = TRIM_HORIZON } —
     # accept both the nested object and a bare string
     init_pos = inp.get("initialPosition", cfg.input.initial_position)
+    options = dict(inp.get("options", {}) or {})
     if isinstance(init_pos, dict):
+        # AT_TIMESTAMP carries its cutoff in the same object; the reader
+        # takes it as the initialTimestamp option
+        if "timestamp" in init_pos and not any(
+            k.lower() == "initialtimestamp" for k in options
+        ):
+            options["initialTimestamp"] = init_pos.get("timestamp")
         init_pos = init_pos.get("type", cfg.input.initial_position)
     cfg.input = InputConfig(
         kind=inp.get("kind", "kinesis" if "streamName" in inp else "file"),
@@ -199,7 +206,7 @@ def from_dict(raw: dict) -> LoaderConfig:
         max_records=int(inp.get("retrievalMode", {}).get("maxRecords", cfg.input.max_records)),
         region=inp.get("region"),
         client_factory=inp.get("clientFactory"),
-        options=dict(inp.get("options", {}) or {}),
+        options=options,
     )
     good = raw.get("output", {}).get("good", {})
     cfg.good = GoodOutputConfig(
@@ -231,12 +238,12 @@ def from_dict(raw: dict) -> LoaderConfig:
     )
     m = raw.get("monitoring", {})
     hp = m.get("healthProbe", {})
+    statsd = m.get("metrics", {}).get("statsd", {})
     cfg.monitoring = MonitoringConfig(
-        metrics_period_seconds=_duration_seconds(
-            m.get("metrics", {}).get("statsd", {}).get("period", 60.0)
-        ),
-        statsd_host=m.get("metrics", {}).get("statsd", {}).get("hostname"),
-        statsd_port=int(m.get("metrics", {}).get("statsd", {}).get("port", 8125)),
+        metrics_period_seconds=_duration_seconds(statsd.get("period", 60.0)),
+        statsd_host=statsd.get("hostname"),
+        statsd_port=int(statsd.get("port", 8125)),
+        statsd_prefix=statsd.get("prefix", MonitoringConfig.statsd_prefix),
         health_probe=HealthProbeConfig(
             port=int(hp.get("port", 8000)),
             unhealthy_latency_seconds=_duration_seconds(hp.get("unhealthyLatency", 120.0)),

@@ -2,32 +2,16 @@
 jar needed) — the reference's primary input (AwsApp.scala:19-23, input
 config config.aws.reference.hocon:7-64).
 
-Two reader modes are provided:
-
-* **Driver polling** (``KinesisPollingReader``, the default wire format):
-  one polling consumer (the Spark driver) walks every open shard each
-  micro-batch with GetRecords; Spark distributes the fetched records to
-  executors for the parse/classify/sink stages. Offsets are per-shard
-  sequence numbers, so recovery replay is *sequence-anchored and exact*:
-  ``readBetweenOffsets`` re-reads precisely the recorded [start, end]
-  range and fails loudly if the range can no longer be served (e.g.
-  trimmed by retention) instead of returning different rows.
-
-* **Partition-per-shard** (``KinesisPartitionedReader``, enabled with
-  ``option("readerMode", "partitioned")``): a full
-  ``DataSourceStreamReader`` that plans one input partition per shard, so
-  *executors* poll Kinesis in parallel — the scale path for
-  massively-sharded streams (the reference scales the same way: one KCL
-  lease per shard spread over a worker fleet). Offsets are arrival-time
-  bounds: batch N reads, per shard, exactly the records with
-  ``prev_bound < ApproximateArrivalTimestamp <= bound``. Replay of a
-  committed batch is deterministic given Kinesis's per-shard monotone
-  arrival timestamps; the bound is held ``skewMarginSeconds`` (default 2)
-  behind the driver clock so records still in flight at plan time land in
-  the next batch instead of falling between bounds. Resharding needs no
-  special casing: parent and child shards are both listed and the time
-  window selects the right records from each. Delivery is at-least-once,
-  the same guarantee the reference offers (README.md:14).
+One reader, ``KinesisPollingReader``: one polling consumer (the Spark
+driver) walks every open shard each micro-batch with GetRecords, the way
+the reference's single KCL worker consumes the stream; Spark distributes
+the fetched records to executors for the parse/classify/sink stages.
+Offsets are per-shard sequence numbers, so recovery replay is
+*sequence-anchored and exact*: ``readBetweenOffsets`` re-reads precisely
+the recorded [start, end] range and fails loudly if the range can no
+longer be served (e.g. trimmed by retention) instead of returning
+different rows. Delivery is at-least-once, the reference's guarantee
+(README.md:14).
 
 The wire client is injected via the ``clientFactory`` option (a
 "module:callable" path) so every code path — shard discovery, iterator
@@ -38,18 +22,11 @@ env-gated.
 
 from __future__ import annotations
 
-import datetime as dt
 import importlib
 import time
-from typing import Any, Callable, Iterator, Sequence, Tuple
+from typing import Any, Callable, Iterator, Tuple
 
-from pyspark.errors import PySparkNotImplementedError
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import (
     BinaryType,
     StringType,
@@ -72,7 +49,6 @@ SCHEMA = StructType(
 _FRESH = ""  # read from the configured initial position
 _CHILD = "\x00CHILD"  # shard discovered mid-stream (reshard child): TRIM_HORIZON
 _CLOSED = "\x00CLOSED"  # shard fully drained after a reshard
-_MARKERS = (_FRESH, _CHILD, _CLOSED)
 
 
 def _boto3_factory(options: dict) -> Any:
@@ -109,10 +85,22 @@ def _is_throttle(err: Exception) -> bool:
     )
 
 
-class _Wire:
-    """Shared wire-level plumbing: client resolution, throttle retry with
-    exponential backoff (checkpointThrottledBackoffPolicy, hocon:52-55),
-    paginated shard listing."""
+class KinesisPollingReader(SimpleDataSourceStreamReader):
+    """Driver-side polling reader over all shards of one stream.
+
+    Offset format::
+
+        {"shards": {shard_id: sequence_number | "" | CLOSED},
+         "anchors": {shard_id: first_sequence_read}}   # only when needed
+
+    ``""`` means the shard hasn't produced a record yet (start from the
+    configured initial position); CLOSED means the shard ended (reshard)
+    and its children are being read instead. ``anchors`` records, for
+    shards first read from a non-replayable position (LATEST /
+    AT_TIMESTAMP), the first sequence number the batch actually read — so
+    recovery replay can seek AT_SEQUENCE_NUMBER(anchor) instead of
+    re-seeking LATEST (which would skip the original rows).
+    """
 
     def __init__(self, options: dict):
         options = {k.lower(): v for k, v in options.items()}
@@ -129,6 +117,11 @@ class _Wire:
         self._factory_path = options.get("clientfactory")
         self._options = dict(options)
         self._client: Any = None
+        # live NextShardIterator per shard, kept across read() calls so a
+        # LATEST-positioned shard doesn't re-seek (and skip records that
+        # arrived between empty polls); purely an optimization — recovery
+        # always goes through sequence numbers
+        self._iters: dict[str, str] = {}
 
     def _c(self) -> Any:
         if self._client is None:
@@ -136,6 +129,8 @@ class _Wire:
         return self._client
 
     def _call(self, fn: Callable, **kw) -> dict:
+        # throttle retry with exponential backoff
+        # (checkpointThrottledBackoffPolicy, hocon:52-55)
         delay = self.backoff_s
         for attempt in range(self.max_retries + 1):
             try:
@@ -157,32 +152,6 @@ class _Wire:
             token = resp.get("NextToken")
             if not token:
                 return shards
-
-
-class KinesisPollingReader(_Wire, SimpleDataSourceStreamReader):
-    """Driver-side polling reader over all shards of one stream.
-
-    Offset format::
-
-        {"shards": {shard_id: sequence_number | "" | CLOSED},
-         "anchors": {shard_id: first_sequence_read}}   # only when needed
-
-    ``""`` means the shard hasn't produced a record yet (start from the
-    configured initial position); CLOSED means the shard ended (reshard)
-    and its children are being read instead. ``anchors`` records, for
-    shards first read from a non-replayable position (LATEST /
-    AT_TIMESTAMP), the first sequence number the batch actually read — so
-    recovery replay can seek AT_SEQUENCE_NUMBER(anchor) instead of
-    re-seeking LATEST (which would skip the original rows).
-    """
-
-    def __init__(self, options: dict):
-        _Wire.__init__(self, options)
-        # live NextShardIterator per shard, kept across read() calls so a
-        # LATEST-positioned shard doesn't re-seek (and skip records that
-        # arrived between empty polls); purely an optimization — recovery
-        # always goes through sequence numbers
-        self._iters: dict[str, str] = {}
 
     def _iterator_for(
         self, shard_id: str, seq: str, anchor: str | None = None
@@ -344,289 +313,13 @@ class KinesisPollingReader(_Wire, SimpleDataSourceStreamReader):
         pass
 
 
-# ---------------------------------------------------------------------------
-# Partition-per-shard reader: executors poll Kinesis in parallel
-# ---------------------------------------------------------------------------
-
-
-class KinesisShardPartition(InputPartition):
-    def __init__(self, shard_id: str, start_ms: int, end_ms: int, options: dict):
-        self.shard_id = shard_id
-        self.start_ms = start_ms
-        self.end_ms = end_ms
-        self.options = options
-
-
-def _now_ms() -> int:
-    return int(time.time() * 1000)
-
-
-def _ts_ms(ts: Any) -> int:
-    if isinstance(ts, dt.datetime):
-        return int(ts.timestamp() * 1000)
-    return int(float(ts) * 1000)
-
-
-# sentinel emitted by _bounded_rows when the range end is crossed
-_PAST_BOUND = object()
-
-# one client per (factory, stream) per executor process — partitions of many
-# micro-batches reuse the connection instead of re-dialing AWS every trigger
-_CLIENT_CACHE: dict = {}
-
-
-def _cached_client(options: dict) -> Any:
-    seed = options.get("seedfile")
-    seed_ver = None
-    if seed:  # fake-wire tests reseed the file; key on its version so a
-        # reused executor worker doesn't serve a stale in-memory fake
-        import os
-
-        try:
-            st = os.stat(seed)
-            seed_ver = (st.st_mtime_ns, st.st_size)
-        except OSError:
-            pass
-    key = (options.get("clientfactory"), options.get("streamname"), seed, seed_ver)
-    if key not in _CLIENT_CACHE:
-        _CLIENT_CACHE[key] = _resolve_factory(options.get("clientfactory"))(options)
-    return _CLIENT_CACHE[key]
-
-
-def _resolve_active_consumer(
-    wire: "_Wire", client: Any, stream_arn: str, name: str, opts: dict
-) -> str:
-    """Register (or adopt) an enhanced-fan-out consumer and wait until it is
-    ACTIVE.
-
-    Real-AWS contract (ADVICE r3): ``register_stream_consumer`` returns a
-    consumer in CREATING state whose real ARN carries a
-    ``:creation-timestamp`` suffix — it cannot be derived from the stream
-    ARN, and ``subscribe_to_shard`` fails until the status flips to ACTIVE.
-    So on ResourceInUse the ARN is *resolved* via
-    ``describe_stream_consumer`` (never string-built), and both paths poll
-    the describe call until ConsumerStatus == ACTIVE."""
-    try:
-        consumer = wire._call(
-            client.register_stream_consumer, StreamARN=stream_arn, ConsumerName=name
-        )["Consumer"]
-    except Exception as e:
-        if "ResourceInUse" not in type(e).__name__:
-            raise
-        consumer = None  # already registered (possibly by a peer task)
-    poll_s = float(opts.get("consumerpollseconds") or 0.5)
-    deadline = time.monotonic() + float(opts.get("consumeractivetimeoutseconds") or 60.0)
-    while True:
-        if consumer is not None and consumer.get("ConsumerStatus") == "ACTIVE":
-            return consumer["ConsumerARN"]
-        if time.monotonic() > deadline:
-            raise RuntimeError(
-                f"kinesis_py fanout: consumer {name!r} on {stream_arn} did not "
-                f"become ACTIVE (last status: "
-                f"{consumer.get('ConsumerStatus') if consumer else 'unknown'})"
-            )
-        if consumer is not None:
-            time.sleep(poll_s)
-        consumer = wire._call(
-            client.describe_stream_consumer,
-            StreamARN=stream_arn,
-            ConsumerName=name,
-        )["ConsumerDescription"]
-
-
-class KinesisPartitionedReader(_Wire, DataSourceStreamReader):
-    """Scale-out reader: one input partition per shard, polled on
-    executors. See the module docstring for the offset model.
-
-    Offset format: ``{"bound_ms": int}`` — per-batch ranges are
-    ``(prev.bound_ms, this.bound_ms]`` over each shard's (monotone)
-    ApproximateArrivalTimestamp. The driver only ever calls the cheap
-    ``ListShards`` metadata API; all GetRecords traffic happens in tasks.
-    """
-
-    def __init__(self, options: dict):
-        _Wire.__init__(self, options)
-        self.skew_margin_ms = int(
-            float(self._options.get("skewmarginseconds") or 2.0) * 1000
-        )
-        if self.initial_position == "LATEST":
-            self._t0_ms = _now_ms()
-        elif self.initial_position == "AT_TIMESTAMP":
-            ts = self.at_timestamp
-            if isinstance(ts, str) and not ts.replace(".", "").isdigit():
-                ts = dt.datetime.fromisoformat(ts)
-            self._t0_ms = _ts_ms(ts) - 1  # (t0, ...] must include ts itself
-        else:  # TRIM_HORIZON
-            self._t0_ms = 0
-
-    def initialOffset(self) -> dict:
-        return {"bound_ms": self._t0_ms}
-
-    def latestOffset(self) -> dict:
-        # hold the bound skewMargin behind the driver clock so a record
-        # accepted by Kinesis around plan time cannot be stamped below a
-        # bound we already read past (server/driver clock skew)
-        return {"bound_ms": max(self._t0_ms, _now_ms() - self.skew_margin_ms)}
-
-    def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        start_ms, end_ms = start["bound_ms"], end["bound_ms"]
-        opts = dict(self._options)
-        return [
-            KinesisShardPartition(s["ShardId"], start_ms, end_ms, opts)
-            for s in self._list_shards()
-        ]
-
-    def read(self, partition: KinesisShardPartition) -> Iterator[Tuple]:  # executor-side
-        opts = {k.lower(): v for k, v in partition.options.items()}
-        start_ms, end_ms = partition.start_ms, partition.end_ms
-        if end_ms <= start_ms:
-            return
-        wire = _Wire(opts)
-        wire._client = _cached_client(opts)
-        if (opts.get("retrievalmode") or "polling").lower() == "fanout":
-            yield from self._read_fanout(wire, opts, partition)
-            return
-        kw: dict = {"StreamName": wire.stream, "ShardId": partition.shard_id}
-        if start_ms <= 0:
-            kw["ShardIteratorType"] = "TRIM_HORIZON"
-        else:
-            kw["ShardIteratorType"] = "AT_TIMESTAMP"
-            kw["Timestamp"] = dt.datetime.fromtimestamp(
-                start_ms / 1000, tz=dt.timezone.utc
-            )
-        it = wire._call(wire._c().get_shard_iterator, **kw)["ShardIterator"]
-        jitter_ms = int(float(opts.get("skewmarginseconds") or 2.0) * 1000)
-        # the range end is a wall-clock bound already in the past, so the
-        # drain MUST reach it; the poll cap only guards a wedged wire
-        for _ in range(10_000):
-            if it is None:
-                return  # shard closed and fully drained
-            resp = wire._call(wire._c().get_records, ShardIterator=it, Limit=10_000)
-            recs = resp.get("Records", [])
-            it = resp.get("NextShardIterator")
-            for row in self._bounded_rows(recs, partition, jitter_ms):
-                if row is _PAST_BOUND:
-                    return
-                yield row
-            if not recs and not resp.get("MillisBehindLatest", 0):
-                return  # at the tip: everything <= end_ms has been read
-        raise RuntimeError(
-            f"kinesis_py partitioned read: shard {partition.shard_id} did not "
-            f"reach bound {end_ms} within the poll cap"
-        )
-
-    @staticmethod
-    def _bounded_rows(recs: list, partition: KinesisShardPartition, jitter_ms: int):
-        """Apply the (start_ms, end_ms] arrival-time range to a record
-        chunk — PER RECORD, not by truncation. ApproximateArrivalTimestamp
-        is approximate and not contractually monotone within a shard, so a
-        record stamped inside the range can sit *behind* one stamped past
-        it; truncating at the first out-of-range record would silently drop
-        it (data loss, ADVICE r3). Instead every record is filtered
-        individually and the scan only stops once a record exceeds
-        ``end_ms + jitter_ms`` (or the caller sees MillisBehindLatest==0).
-
-        ``skewMarginSeconds`` doubles as the jitter bound and MUST exceed
-        the worst-case arrival-timestamp disorder within a shard; records
-        stamped inside the range but materializing more than that margin
-        late are the residual (documented) loss window of time-bound
-        offsets — use the sequence-anchored polling reader when that is
-        unacceptable."""
-        for r in recs:
-            ts = r.get("ApproximateArrivalTimestamp")
-            ms = _ts_ms(ts) if ts is not None else 0
-            if ms <= partition.start_ms:
-                continue  # boundary record already owned by a prior batch
-            if ms > partition.end_ms:
-                if ms > partition.end_ms + jitter_ms:
-                    yield _PAST_BOUND
-                    return
-                continue  # next batch's record; in-range ones may follow
-            yield (
-                bytes(r["Data"]),
-                r.get("PartitionKey"),
-                r["SequenceNumber"],
-                ts,
-                partition.shard_id,
-            )
-
-    def _read_fanout(
-        self, wire: _Wire, opts: dict, partition: KinesisShardPartition
-    ) -> Iterator[Tuple]:
-        """Enhanced fan-out (the reference's `retrieval: FanOut`,
-        config.aws.reference.hocon): SubscribeToShard push frames instead
-        of GetRecords polling — a dedicated 2 MB/s pipe per consumer per
-        shard, so parallel readers don't contend with other applications
-        on the shared polling quota. Same time-bounded range semantics as
-        the polling path."""
-        client = wire._c()
-        consumer_arn = opts.get("consumerarn")
-        if not consumer_arn:
-            name = opts.get("consumername") or opts.get("appname") or "spark-loader"
-            stream_arn = wire._call(
-                client.describe_stream_summary, StreamName=wire.stream
-            )["StreamDescriptionSummary"]["StreamARN"]
-            consumer_arn = _resolve_active_consumer(wire, client, stream_arn, name, opts)
-        if partition.start_ms <= 0:
-            pos = {"Type": "TRIM_HORIZON"}
-        else:
-            pos = {
-                "Type": "AT_TIMESTAMP",
-                "Timestamp": dt.datetime.fromtimestamp(
-                    partition.start_ms / 1000, tz=dt.timezone.utc
-                ),
-            }
-        jitter_ms = int(float(opts.get("skewmarginseconds") or 2.0) * 1000)
-        # a subscription lasts <= 5 min; re-subscribe from the continuation
-        # sequence until the batch bound is reached
-        for _ in range(1_000):
-            resp = wire._call(
-                client.subscribe_to_shard,
-                ConsumerARN=consumer_arn,
-                ShardId=partition.shard_id,
-                StartingPosition=pos,
-            )
-            continuation = None
-            for event in resp["EventStream"]:
-                ev = event.get("SubscribeToShardEvent")
-                if ev is None:
-                    continue
-                recs = ev.get("Records", [])
-                continuation = ev.get("ContinuationSequenceNumber")
-                for row in self._bounded_rows(recs, partition, jitter_ms):
-                    if row is _PAST_BOUND:
-                        return
-                    yield row
-                if continuation is None:
-                    return  # shard closed and drained
-                if not recs and not ev.get("MillisBehindLatest", 0):
-                    return  # at the tip
-            if continuation is None:
-                return
-            pos = {"Type": "AT_SEQUENCE_NUMBER", "SequenceNumber": continuation}
-        raise RuntimeError(
-            f"kinesis_py fanout read: shard {partition.shard_id} did not reach "
-            f"bound {partition.end_ms} within the subscription cap"
-        )
-
-    def commit(self, end: dict) -> None:
-        pass
-
-
 class KinesisPythonDataSource(DataSource):
     """`spark.readStream.format("kinesis_py")` — register with
     `spark.dataSource.register(KinesisPythonDataSource)`.
 
-    ``readerMode`` options:
-
-    * ``auto`` (default) — one ListShards probe at stream construction:
-      streams with more than ``partitionedShardThreshold`` (default 8)
-      shards get the partition-per-shard executor-polling reader (a single
-      driver polling loop is the ingest funnel past ~8 shards); smaller
-      streams keep the driver-polling reader, whose recovery replay is
-      sequence-anchored and exact rather than arrival-time-bounded.
-    * ``partitioned`` — always the executor-polling reader.
-    * ``polling`` (or anything else) — always the driver-polling reader.
+    Only ``simpleStreamReader`` is implemented: the base ``streamReader``
+    raises ``PySparkNotImplementedError`` and Spark falls back to the
+    sequence-anchored ``KinesisPollingReader`` at any shard count.
     """
 
     @classmethod
@@ -635,33 +328,6 @@ class KinesisPythonDataSource(DataSource):
 
     def schema(self) -> StructType:
         return SCHEMA
-
-    def streamReader(self, schema: StructType) -> DataSourceStreamReader:
-        opts = {k.lower(): v for k, v in dict(self.options).items()}
-        mode = (opts.get("readermode") or "auto").lower()
-        if mode == "partitioned":
-            return KinesisPartitionedReader(dict(self.options))
-        if mode == "auto" and self._auto_partitioned(opts):
-            return KinesisPartitionedReader(dict(self.options))
-        raise PySparkNotImplementedError(  # fall back to simpleStreamReader
-            errorClass="NOT_IMPLEMENTED", messageParameters={"feature": "streamReader"}
-        )
-
-    @staticmethod
-    def _auto_partitioned(opts: dict) -> bool:
-        """readerMode=auto (the default): count shards with one ListShards
-        call and pick the partition-per-shard reader above
-        ``partitionedShardThreshold`` (default 8) shards, where a single
-        driver polling loop becomes the ingest funnel. Below it, keep the
-        driver-polling reader whose replay is sequence-anchored and exact
-        (the partitioned reader's offsets are arrival-time bounds — see
-        the module docstring for the trade). Probe failures keep the
-        conservative default rather than failing stream construction."""
-        threshold = int(opts.get("partitionedshardthreshold") or 8)
-        try:
-            return len(_Wire(dict(opts))._list_shards()) > threshold
-        except Exception:
-            return False
 
     def simpleStreamReader(self, schema: StructType) -> KinesisPollingReader:
         return KinesisPollingReader(dict(self.options))

@@ -45,14 +45,14 @@ def kinesis_stream(
 ) -> DataFrame:
     """Kinesis source (option surface mirrors config.aws.reference.hocon:7-64).
 
-    Primary path: the built-in Python data source (`kinesis_py`,
-    sources/kinesis_source.py) — a boto3 polling reader mirroring the
-    reference's single-KCL-worker consumption model, no connector jar
-    needed. `client_factory` ("module:callable") injects the wire client;
-    default is boto3 (env-gated). Massively-sharded streams get one reader
-    task per shard (KinesisPartitionedReader): readerMode=auto, the
-    default, switches to it above 8 shards; readerMode=partitioned forces
-    it (pass either through cfg.options)."""
+    Reads through the built-in Python data source (`kinesis_py`,
+    sources/kinesis_source.py): one driver-side polling reader over every
+    shard, mirroring the reference's single-KCL-worker consumption model,
+    with per-shard sequence-number offsets so recovery replays exactly the
+    committed range; no connector jar needed. `client_factory`
+    ("module:callable") injects the wire client; default is boto3
+    (env-gated). `cfg.options` pass through verbatim as reader options
+    (e.g. `initialTimestamp` for an AT_TIMESTAMP start)."""
     from snowplow_s3_loader_spark.sources.kinesis_source import (
         KinesisPythonDataSource,
     )

@@ -24,8 +24,7 @@ Seed file format::
      "throttleFirst": 0}
 
 ArrivalTimestamp is optional (defaults to a deterministic epoch+n ramp);
-the partitioned reader's time-bounded offsets need explicit values when a
-test replays across query restarts.
+it is what an AT_TIMESTAMP iterator compares against.
 """
 
 from __future__ import annotations
@@ -42,18 +41,6 @@ class ProvisionedThroughputExceededException(Exception):
         self.response = {"Error": {"Code": "ProvisionedThroughputExceededException"}}
 
 
-class ResourceInUseException(Exception):
-    def __init__(self) -> None:
-        super().__init__("Consumer already exists")
-        self.response = {"Error": {"Code": "ResourceInUseException"}}
-
-
-class ResourceNotFoundException(Exception):
-    def __init__(self) -> None:
-        super().__init__("Consumer not found")
-        self.response = {"Error": {"Code": "ResourceNotFoundException"}}
-
-
 _EPOCH = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
 
 
@@ -61,7 +48,6 @@ class FakeKinesisClient:
     def __init__(self, stream_name: str = "stream", throttle_first: int = 0):
         self.stream_name = stream_name
         self.shards: dict[str, dict] = {}
-        self.consumers: dict[str, dict] = {}
         self._seq = 0
         self._throttle_remaining = throttle_first
         self.get_records_calls = 0
@@ -148,102 +134,6 @@ class FakeKinesisClient:
         else:
             raise ValueError(f"bad iterator type {ShardIteratorType}")
         return {"ShardIterator": json.dumps({"shard": ShardId, "pos": pos})}
-
-    # -- enhanced fan-out surface (SubscribeToShard push API) -------------
-
-    def describe_stream_summary(self, StreamName: str) -> dict:
-        return {
-            "StreamDescriptionSummary": {
-                "StreamARN": f"arn:aws:kinesis:local:000000000000:stream/{self.stream_name}"
-            }
-        }
-
-    def register_stream_consumer(self, StreamARN: str, ConsumerName: str) -> dict:
-        """Real-AWS contract: a fresh consumer starts CREATING (ACTIVE only
-        after a delay), its ARN carries a ':creation-timestamp' suffix, and
-        re-registering an existing name raises ResourceInUse."""
-        with self._lock:
-            if ConsumerName in self.consumers:
-                raise ResourceInUseException()
-            self.consumers[ConsumerName] = {
-                "ConsumerARN": f"{StreamARN}/consumer/{ConsumerName}:1735689600",
-                "ConsumerStatus": "CREATING",
-                "describes": 0,
-            }
-            c = self.consumers[ConsumerName]
-            return {
-                "Consumer": {
-                    "ConsumerARN": c["ConsumerARN"],
-                    "ConsumerStatus": c["ConsumerStatus"],
-                }
-            }
-
-    def describe_stream_consumer(
-        self, StreamARN: str | None = None, ConsumerName: str | None = None,
-        ConsumerARN: str | None = None,
-    ) -> dict:
-        with self._lock:
-            if ConsumerName is None and ConsumerARN is not None:
-                ConsumerName = ConsumerARN.rsplit("/", 1)[-1].split(":")[0]
-            c = self.consumers.get(ConsumerName or "")
-            if c is None:
-                raise ResourceNotFoundException()
-            # becomes ACTIVE on the second describe: exercises the caller's
-            # status-polling loop deterministically
-            c["describes"] += 1
-            if c["describes"] >= 2:
-                c["ConsumerStatus"] = "ACTIVE"
-            return {
-                "ConsumerDescription": {
-                    "ConsumerARN": c["ConsumerARN"],
-                    "ConsumerStatus": c["ConsumerStatus"],
-                }
-            }
-
-    def subscribe_to_shard(
-        self, ConsumerARN: str, ShardId: str, StartingPosition: dict
-    ) -> dict:
-        """Push-mode read: returns an EventStream-like iterable of
-        SubscribeToShardEvent chunks (<=100 records each, like the real
-        HTTP/2 event frames), ending when the shard is drained."""
-        self.get_records_calls += 1
-        if self._throttle_remaining > 0:
-            self._throttle_remaining -= 1
-            raise ProvisionedThroughputExceededException()
-        typ = StartingPosition["Type"]
-        it = self.get_shard_iterator(
-            self.stream_name,
-            ShardId,
-            typ,
-            StartingSequenceNumber=StartingPosition.get("SequenceNumber"),
-            Timestamp=StartingPosition.get("Timestamp"),
-        )["ShardIterator"]
-        pos = json.loads(it)["pos"]
-        shard = self.shards[ShardId]
-
-        def events():
-            p = pos
-            while True:
-                recs = shard["records"][p : p + 100]
-                p += len(recs)
-                exhausted = p >= len(shard["records"])
-                yield {
-                    "SubscribeToShardEvent": {
-                        "Records": [dict(r) for r in recs],
-                        # real contract: resume with AT_SEQUENCE_NUMBER at
-                        # this value (the next unread position)
-                        "ContinuationSequenceNumber": (
-                            None
-                            if (shard["closed"] and exhausted)
-                            else f"{p + 1:020d}"
-                        ),
-                        "MillisBehindLatest": 0 if exhausted else 1000,
-                    }
-                }
-                if exhausted:
-                    return
-
-        return {"EventStream": events()}
 
     def get_records(self, ShardIterator: str, Limit: int = 10_000) -> dict:
         self.get_records_calls += 1

@@ -41,8 +41,16 @@ def spark_jobs(spark):
         # job events reach the status store through the async listener bus
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         st = sc.statusTracker()
+
+        def stage_name(stage_id):
+            # once the session holds more than spark.ui.retainedStages, the
+            # status store evicts skipped stages first, asynchronously, so
+            # a stage of a job that just ran can already be gone
+            info = st.getStageInfo(stage_id)
+            return info.name if info is not None else f"<stage {stage_id} evicted>"
+
         return result, [
-            [st.getStageInfo(s).name for s in st.getJobInfo(j).stageIds]
+            [stage_name(s) for s in st.getJobInfo(j).stageIds]
             for j in sorted(st.getJobIdsForGroup(group))
         ]
 

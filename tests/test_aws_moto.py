@@ -1,10 +1,9 @@
 """Integration tests against moto's real-API AWS mocks (round-4 VERDICT
 item 8, now env-permitted: boto3 + moto are installed): the production
 boto3 code paths — the DEFAULT client factories, ListShards, the
-GetShardIterator/GetRecords read cycle, the enhanced-fan-out consumer ARN
-lifecycle (register -> CREATING -> poll describe -> ACTIVE), PutRecords
-batching, and the S3 CopyObject+DeleteObject rename — run against
-botocore's full request/response machinery instead of the in-repo fakes.
+GetShardIterator/GetRecords read cycle, PutRecords batching, and the S3
+CopyObject+DeleteObject rename — run against botocore's full
+request/response machinery instead of the in-repo fakes.
 
 moto mocks botocore IN-PROCESS, so these tests drive the driver-side
 components directly (Spark executor workers are separate processes the
@@ -83,35 +82,6 @@ def test_polling_reader_reads_moto_stream_with_default_boto3_factory(aws):
     # caught up: a second read returns nothing and keeps the offset
     rows2, end2 = r.read(end)
     assert list(rows2) == [] and end2 == end
-
-
-def test_fanout_consumer_arn_lifecycle_register_then_adopt(aws):
-    """_resolve_active_consumer against the real API shape: registration
-    returns CREATING, the describe poll flips to ACTIVE, and the returned
-    ARN is the service's (never string-built). A second resolution hits
-    ResourceInUse and must ADOPT the existing consumer via describe."""
-    from snowplow_s3_loader_spark.sources.kinesis_source import (
-        _Wire,
-        _resolve_active_consumer,
-    )
-
-    c = _stream(aws, "moto-efo", shards=1)
-    stream_arn = c.describe_stream(StreamName="moto-efo")["StreamDescription"][
-        "StreamARN"
-    ]
-    wire = _Wire({"streamName": "moto-efo", "region": REGION})
-    opts = {"consumerpollseconds": 0.05, "consumeractivetimeoutseconds": 10.0}
-
-    arn1 = _resolve_active_consumer(wire, c, stream_arn, "loader-efo", opts)
-    assert arn1.startswith("arn:aws:kinesis:") and "consumer/loader-efo" in arn1
-    desc = c.describe_stream_consumer(
-        StreamARN=stream_arn, ConsumerName="loader-efo"
-    )["ConsumerDescription"]
-    assert desc["ConsumerStatus"] == "ACTIVE" and desc["ConsumerARN"] == arn1
-
-    # already-registered path (peer task raced us): adopt, same ARN
-    arn2 = _resolve_active_consumer(wire, c, stream_arn, "loader-efo", opts)
-    assert arn2 == arn1
 
 
 def test_bad_sink_put_records_batching_against_moto(aws):

@@ -6,7 +6,12 @@ import json
 
 import pytest
 
-from snowplow_s3_loader_spark.config import ConfigError, from_dict, load_config
+from snowplow_s3_loader_spark.config import (
+    ConfigError,
+    MonitoringConfig,
+    from_dict,
+    load_config,
+)
 from snowplow_s3_loader_spark.dynamic_path import DEFAULT_SDJ_TEMPLATE
 
 
@@ -92,3 +97,75 @@ def test_load_json_file_and_env_override(tmp_path, monkeypatch):
     monkeypatch.setenv("SNOWPLOW_BATCHING__MAXDELAY", "30 seconds")
     cfg = load_config(str(p))
     assert cfg.batching.max_delay_seconds == 30.0
+
+
+def test_statsd_prefix_decoded_from_reference_key():
+    raw = _minimal(
+        monitoring={"metrics": {"statsd": {"hostname": "h", "prefix": "snowplow.s3loader"}}}
+    )
+    assert from_dict(raw).monitoring.statsd_prefix == "snowplow.s3loader"
+    default = MonitoringConfig().statsd_prefix
+    assert from_dict(_minimal()).monitoring.statsd_prefix == default
+
+
+def test_at_timestamp_start_keeps_its_timestamp():
+    from snowplow_s3_loader_spark.sources.kinesis_source import KinesisPollingReader
+    from snowplow_s3_loader_spark.testing.fake_kinesis import FakeKinesisClient
+
+    raw = _minimal()
+    raw["input"]["initialPosition"] = {
+        "type": "AT_TIMESTAMP",
+        "timestamp": "2026-01-01T00:00:02+00:00",
+    }
+    inp = from_dict(raw).input
+    assert inp.initial_position == "AT_TIMESTAMP"
+    c = FakeKinesisClient("enriched")
+    for i in range(4):
+        c.put("shardId-0", f"r{i}".encode())  # arrivals epoch+1s .. epoch+4s
+    # the option set kinesis_stream hands the reader
+    r = KinesisPollingReader(
+        {
+            "streamName": inp.stream_name,
+            "initialPosition": inp.initial_position,
+            "maxRecords": str(inp.max_records),
+            **{k: str(v) for k, v in inp.options.items()},
+        }
+    )
+    r._client = c
+    rows, _ = r.read(r.initialOffset())
+    assert [row[0] for row in rows] == [b"r1", b"r2", b"r3"]
+    # an explicit reader option wins over the nested timestamp
+    raw["input"]["options"] = {"initialTimestamp": "2026-01-01T00:00:04+00:00"}
+    assert from_dict(raw).input.options == {
+        "initialTimestamp": "2026-01-01T00:00:04+00:00"
+    }
+
+
+def _app_config(tmp_path, accept: str) -> str:
+    raw = _minimal(license={"accept": accept})
+    raw["input"] = {"kind": "file", "path": str(tmp_path / "in")}
+    raw["output"]["bad"] = {"kind": "file", "path": str(tmp_path / "bad")}
+    p = tmp_path / f"config_{accept}.json"
+    p.write_text(json.dumps(raw))
+    return str(p)
+
+
+class _SparkReached(Exception):
+    pass
+
+
+def test_app_refuses_to_start_without_license_acceptance(tmp_path, monkeypatch):
+    from snowplow_s3_loader_spark import app
+
+    def get_spark(**_kw):
+        raise _SparkReached
+
+    monkeypatch.setattr(app, "get_spark", get_spark)
+    monkeypatch.delenv("SNOWPLOW_LICENSE__ACCEPT", raising=False)
+    assert app.main(["--config", _app_config(tmp_path, "false")]) == 2
+    with pytest.raises(_SparkReached):
+        app.main(["--config", _app_config(tmp_path, "true")])
+    # the env override accepts over a file that does not
+    monkeypatch.setenv("SNOWPLOW_LICENSE__ACCEPT", "true")
+    with pytest.raises(_SparkReached):
+        app.main(["--config", _app_config(tmp_path, "false")])

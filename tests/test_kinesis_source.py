@@ -502,493 +502,32 @@ def test_replay_raises_on_latest_end_without_anchor():
         list(r.readBetweenOffsets({"shards": {"shardId-0": ""}}, corrupted_end))
 
 
-# ---- round-3: partition-per-shard executor-polling reader ----
-
-import datetime as _dt
-
-from snowplow_s3_loader_spark.sources.kinesis_source import (
-    KinesisPartitionedReader,
-    KinesisShardPartition,
-)
-
-
-def _preader(client: FakeKinesisClient, **opts) -> KinesisPartitionedReader:
-    r = KinesisPartitionedReader({"streamName": client.stream_name, **opts})
-    r._client = client
-    return r
-
-
-def _read_partition(client: FakeKinesisClient, part: KinesisShardPartition):
-    """Drive KinesisPartitionedReader.read with the fake client injected
-    (executor-side path, minus the process boundary)."""
-    import snowplow_s3_loader_spark.sources.kinesis_source as ks
-
-    key = (None, client.stream_name, None, None)
-    ks._CLIENT_CACHE[key] = client
-    try:
-        return list(KinesisPartitionedReader({"streamName": client.stream_name}).read(part))
-    finally:
-        ks._CLIENT_CACHE.pop(key, None)
-
-
-def test_partitioned_one_partition_per_shard():
-    c = FakeKinesisClient("s")
-    for sid in ("shardId-0", "shardId-1", "shardId-2"):
-        c.create_shard(sid)
-    r = _preader(c)
-    parts = r.partitions({"bound_ms": 0}, {"bound_ms": 10_000})
-    assert sorted(p.shard_id for p in parts) == ["shardId-0", "shardId-1", "shardId-2"]
-    assert all(p.start_ms == 0 and p.end_ms == 10_000 for p in parts)
-
-
-def test_partitioned_time_range_is_half_open_and_deterministic():
-    c = FakeKinesisClient("s")
-    # fake default arrival ts = 2026-01-01 + n seconds
-    for i in range(5):
-        c.put("shardId-0", f"r{i}".encode())  # ts = +1s .. +5s
-    base = _dt.datetime(2026, 1, 1, tzinfo=_dt.timezone.utc).timestamp() * 1000
-    part = KinesisShardPartition(
-        "shardId-0", int(base + 2000), int(base + 4000), {"streamname": "s"}
-    )
-    rows = _read_partition(c, part)
-    # (base+2s, base+4s]: r2 (ts+3) and r3 (ts+4); r1 (ts+2) is the boundary
-    # record owned by the PRIOR batch
-    assert [r[0] for r in rows] == [b"r2", b"r3"]
-    # replay after more data arrived: identical rows (determinism)
-    c.put("shardId-0", b"late")  # ts = +6s, outside the range
-    assert [r[0] for r in _read_partition(c, part)] == [b"r2", b"r3"]
-
-
-def test_partitioned_initial_offsets_by_position():
-    c = FakeKinesisClient("s")
-    c.create_shard("shardId-0")
-    assert _preader(c).initialOffset() == {"bound_ms": 0}  # TRIM_HORIZON
-    lat = _preader(c, initialPosition="LATEST").initialOffset()
-    assert lat["bound_ms"] > 0  # now
-    at = _preader(
-        c,
-        initialPosition="AT_TIMESTAMP",
-        initialTimestamp="2026-01-01T00:00:02+00:00",
-    ).initialOffset()
-    cut = _dt.datetime(2026, 1, 1, 0, 0, 2, tzinfo=_dt.timezone.utc).timestamp() * 1000
-    assert at["bound_ms"] == int(cut) - 1  # records AT the timestamp included
-
-
-def test_partitioned_latest_offset_monotone_with_skew_margin():
-    c = FakeKinesisClient("s")
-    r = _preader(c, skewMarginSeconds=2.0)
-    t0 = r.initialOffset()["bound_ms"]
-    latest = r.latestOffset()["bound_ms"]
-    assert latest >= t0
-    assert latest <= int(time.time() * 1000) - 1500  # margin applied
-
-
-def test_partitioned_closed_shard_drains_and_stops():
-    c = FakeKinesisClient("s")
-    c.put("shardId-0", b"a")
-    c.put("shardId-0", b"b")
-    c.close_shard("shardId-0")
-    base = _dt.datetime(2026, 1, 1, tzinfo=_dt.timezone.utc).timestamp() * 1000
-    part = KinesisShardPartition(
-        "shardId-0", 0, int(base + 60_000), {"streamname": "s"}
-    )
-    assert [r[0] for r in _read_partition(c, part)] == [b"a", b"b"]
-
-
-def test_partitioned_spark_end_to_end_with_checkpoint_restart(spark, tmp_path):
-    """The scale path through the real engine: readerMode=partitioned plans
-    one task per shard; executors poll the (fake) wire; checkpoint restart
-    picks up only records that arrived after the committed bound."""
-    now = _dt.datetime.now(_dt.timezone.utc)
-    old = (now - _dt.timedelta(seconds=60)).isoformat()
-    seed = tmp_path / "seed.json"
-    seed.write_text(
-        json.dumps(
-            {
-                "shards": {
-                    "shardId-0": {
-                        "records": [
-                            {"Data": "a1", "ArrivalTimestamp": old},
-                            {"Data": "a2", "ArrivalTimestamp": old},
-                        ]
-                    },
-                    "shardId-1": {"records": [{"Data": "b1", "ArrivalTimestamp": old}]},
-                }
-            }
-        )
-    )
-    ckpt = str(tmp_path / "ckpt")
-    out_dir = tmp_path / "out"
-    spark.dataSource.register(KinesisPythonDataSource)
-
-    def start_query():
-        df = (
-            spark.readStream.format("kinesis_py")
-            .option("streamName", "s")
-            .option("readerMode", "partitioned")
-            .option("skewMarginSeconds", "0")
-            .option("clientFactory", FACTORY)
-            .option("seedFile", str(seed))
-            .load()
-        )
-        return (
-            df.selectExpr("cast(payload as string) AS payload", "shardId")
-            .writeStream.format("json")
-            .option("path", str(out_dir))
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-
-    def rows_on_disk():
-        if not out_dir.exists():
-            return []
-        try:
-            return [r.asDict() for r in spark.read.json(str(out_dir)).collect()]
-        except Exception:
-            return []
-
-    q = start_query()
-    try:
-        assert _run_until(q, lambda: len(rows_on_disk()) >= 3), q.lastProgress
-    finally:
-        q.stop()
-        q.awaitTermination(120)
-    assert {r["payload"] for r in rows_on_disk()} == {"a1", "a2", "b1"}
-
-    # restart with one MORE record, stamped now: only it may appear
-    fresh = _dt.datetime.now(_dt.timezone.utc).isoformat()
-    seed.write_text(
-        json.dumps(
-            {
-                "shards": {
-                    "shardId-0": {
-                        "records": [
-                            {"Data": "a1", "ArrivalTimestamp": old},
-                            {"Data": "a2", "ArrivalTimestamp": old},
-                            {"Data": "a3", "ArrivalTimestamp": fresh},
-                        ]
-                    },
-                    "shardId-1": {"records": [{"Data": "b1", "ArrivalTimestamp": old}]},
-                }
-            }
-        )
-    )
-    q2 = start_query()
-    try:
-        assert _run_until(q2, lambda: len(rows_on_disk()) >= 4), q2.lastProgress
-    finally:
-        q2.stop()
-        q2.awaitTermination(120)
-    assert sorted(r["payload"] for r in rows_on_disk()) == ["a1", "a2", "a3", "b1"]
-
-
-def test_reader_mode_partitioned_reaches_reader_via_config(spark, tmp_path):
-    """HOCON/JSON config -> kinesis_stream: readerMode travels through the
-    options passthrough, so a config file alone selects the scale-out
-    reader."""
-    import datetime as dtm
-
-    from snowplow_s3_loader_spark.config import from_dict
-    from snowplow_s3_loader_spark.sources.streams import kinesis_stream
-
-    now = dtm.datetime.now(dtm.timezone.utc)
-    seed = tmp_path / "seed.json"
-    seed.write_text(
-        json.dumps(
-            {
-                "shards": {
-                    "shardId-0": {
-                        "records": [
-                            {
-                                "Data": "x1",
-                                "ArrivalTimestamp": (
-                                    now - dtm.timedelta(seconds=60)
-                                ).isoformat(),
-                            }
-                        ]
-                    }
-                }
-            }
-        )
-    )
-    cfg = from_dict(
-        {
-            "license": {"accept": "true"},
-            "purpose": "SELF_DESCRIBING",
-            "input": {
-                "kind": "kinesis",
-                "streamName": "s",
-                "clientFactory": FACTORY,
-                "options": {
-                    "seedFile": str(seed),
-                    "readerMode": "partitioned",
-                    "skewMarginSeconds": "0",
-                },
-            },
-            "output": {
-                "good": {"path": str(tmp_path / "out")},
-                "bad": {"kind": "file", "path": str(tmp_path / "bad")},
-            },
-        }
-    )
-    src = kinesis_stream(spark, cfg.input)
-    out = tmp_path / "sink"
-    q = (
-        src.selectExpr("cast(payload as string) AS payload")
-        .writeStream.format("json")
-        .option("path", str(out))
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-
-    def rows():
-        try:
-            return spark.read.json(str(out)).collect()
-        except Exception:
-            return []
-
-    try:
-        assert _run_until(q, lambda: len(rows()) >= 1), q.lastProgress
-    finally:
-        q.stop()
-        q.awaitTermination(120)
-    assert {r["payload"] for r in rows()} == {"x1"}
-
-
-def test_partitioned_reader_drains_50k_records():
-    """Mini-soak for the scale path: 50k records over 4 shards drain
-    exactly-once through per-shard partition reads (driver-free wire)."""
-    import snowplow_s3_loader_spark.sources.kinesis_source as ks
-
-    c = FakeKinesisClient("s")
-    n_shards, total = 4, 50_000
-    base = _dt.datetime(2026, 1, 1, tzinfo=_dt.timezone.utc)
-    for i in range(total):
-        c.put(f"shardId-{i % n_shards}", b"x%d" % i)
-    end_ms = int((base + _dt.timedelta(seconds=total + 10)).timestamp() * 1000)
-    key = (None, "s", None, None)
-    ks._CLIENT_CACHE[key] = c
-    t0 = time.monotonic()
-    try:
-        seen = []
-        for s in range(n_shards):
-            part = KinesisShardPartition(f"shardId-{s}", 0, end_ms, {"streamname": "s"})
-            seen.extend(KinesisPartitionedReader({"streamName": "s"}).read(part))
-    finally:
-        ks._CLIENT_CACHE.pop(key, None)
-    elapsed = time.monotonic() - t0
-    assert len(seen) == total
-    assert len({row[2] + row[4] for row in seen}) == total  # unique (seq, shard)
-    assert elapsed < 20, f"partitioned reader too slow: {elapsed:.1f}s"
-
-
-# ---- round-3: enhanced fan-out (SubscribeToShard) retrieval mode ----
-
-
-def _read_fanout_partition(client, part):
-    import snowplow_s3_loader_spark.sources.kinesis_source as ks
-
-    key = (None, client.stream_name, None, None)
-    ks._CLIENT_CACHE[key] = client
-    try:
-        reader = KinesisPartitionedReader({"streamName": client.stream_name})
-        p2 = KinesisShardPartition(
-            part.shard_id, part.start_ms, part.end_ms,
-            {**part.options, "retrievalmode": "fanout"},
-        )
-        return list(reader.read(p2))
-    finally:
-        ks._CLIENT_CACHE.pop(key, None)
-
-
-def test_fanout_reads_time_range_like_polling():
-    """retrieval: FanOut (reference hocon) — SubscribeToShard push frames
-    produce exactly the same bounded row set as the polling path."""
-    c = FakeKinesisClient("s")
-    for i in range(250):  # crosses multiple 100-record event frames
-        c.put("shardId-0", f"r{i}".encode())
-    base = _dt.datetime(2026, 1, 1, tzinfo=_dt.timezone.utc).timestamp() * 1000
-    part = KinesisShardPartition(
-        "shardId-0", int(base + 50_000), int(base + 200_000), {"streamname": "s"}
-    )
-    polling = _read_partition(c, part)
-    fanout = _read_fanout_partition(c, part)
-    assert [r[0] for r in fanout] == [r[0] for r in polling]
-    assert len(fanout) == 150  # (50s, 200s] of 1-per-second arrivals
-
-
-def test_fanout_closed_shard_drains():
-    c = FakeKinesisClient("s")
-    c.put("shardId-0", b"a")
-    c.put("shardId-0", b"b")
-    c.close_shard("shardId-0")
-    base = _dt.datetime(2026, 1, 1, tzinfo=_dt.timezone.utc).timestamp() * 1000
-    part = KinesisShardPartition("shardId-0", 0, int(base + 60_000), {"streamname": "s"})
-    assert [r[0] for r in _read_fanout_partition(c, part)] == [b"a", b"b"]
-
-
-def test_fanout_spark_end_to_end(spark, tmp_path):
-    """readerMode=partitioned + retrievalMode=fanout through the real
-    streaming engine."""
-    now = _dt.datetime.now(_dt.timezone.utc)
-    old = (now - _dt.timedelta(seconds=60)).isoformat()
-    seed = tmp_path / "seed.json"
-    seed.write_text(
-        json.dumps(
-            {
-                "shards": {
-                    "shardId-0": {
-                        "records": [
-                            {"Data": "f1", "ArrivalTimestamp": old},
-                            {"Data": "f2", "ArrivalTimestamp": old},
-                        ]
-                    }
-                }
-            }
-        )
-    )
-    out_dir = tmp_path / "out"
-    spark.dataSource.register(KinesisPythonDataSource)
-    df = (
-        spark.readStream.format("kinesis_py")
-        .option("streamName", "s")
-        .option("readerMode", "partitioned")
-        .option("retrievalMode", "fanout")
-        .option("skewMarginSeconds", "0")
-        .option("clientFactory", FACTORY)
-        .option("seedFile", str(seed))
-        .load()
-    )
-    q = (
-        df.selectExpr("cast(payload as string) AS payload")
-        .writeStream.format("json")
-        .option("path", str(out_dir))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-
-    def rows():
-        try:
-            return spark.read.json(str(out_dir)).collect()
-        except Exception:
-            return []
-
-    try:
-        assert _run_until(q, lambda: len(rows()) >= 2), q.lastProgress
-    finally:
-        q.stop()
-        q.awaitTermination(120)
-    assert {r["payload"] for r in rows()} == {"f1", "f2"}
-
-
-# ---- round-4: per-record time filtering, auto readerMode, fan-out ARN ----
-
-
-def test_partitioned_out_of_order_arrival_not_dropped():
-    """ADVICE r3 (medium): ApproximateArrivalTimestamp is not contractually
-    monotone per shard — an in-range record sitting BEHIND a past-bound
-    record must still be read (per-record filtering, not truncation)."""
-    c = FakeKinesisClient("s")
-    base = _dt.datetime(2026, 1, 1, tzinfo=_dt.timezone.utc)
-    sec = lambda n: base + _dt.timedelta(seconds=n)  # noqa: E731
-    c.put("shardId-0", b"in1", arrival=sec(3))
-    c.put("shardId-0", b"past", arrival=sec(5))  # past end, within jitter
-    c.put("shardId-0", b"in2", arrival=sec(3.5))  # BEHIND the past-bound rec
-    c.put("shardId-0", b"way-past", arrival=sec(20))  # beyond end+jitter
-    c.put("shardId-0", b"lost", arrival=sec(3.7))  # beyond-jitter disorder
-    base_ms = int(base.timestamp() * 1000)
-    part = KinesisShardPartition(
-        "shardId-0", base_ms + 2000, base_ms + 4000,
-        {"streamname": "s", "skewmarginseconds": "2"},
-    )
-    rows = _read_partition(c, part)
-    # in1 and in2 are both in (2s, 4s]; the old truncation dropped in2.
-    # way-past (20s > 4s+2s jitter) stops the scan, so the pathological
-    # beyond-jitter record is the documented residual loss.
-    assert [r[0] for r in rows] == [b"in1", b"in2"]
-
-
-def test_partitioned_past_bound_within_jitter_goes_to_next_batch():
-    c = FakeKinesisClient("s")
-    base = _dt.datetime(2026, 1, 1, tzinfo=_dt.timezone.utc)
-    c.put("shardId-0", b"a", arrival=base + _dt.timedelta(seconds=3))
-    c.put("shardId-0", b"b", arrival=base + _dt.timedelta(seconds=5))
-    base_ms = int(base.timestamp() * 1000)
-    batch1 = KinesisShardPartition(
-        "shardId-0", base_ms + 2000, base_ms + 4000, {"streamname": "s"}
-    )
-    batch2 = KinesisShardPartition(
-        "shardId-0", base_ms + 4000, base_ms + 6000, {"streamname": "s"}
-    )
-    assert [r[0] for r in _read_partition(c, batch1)] == [b"a"]
-    assert [r[0] for r in _read_partition(c, batch2)] == [b"b"]  # no dup, no loss
-
-
-def _seeded_options(tmp_path, n_shards: int) -> dict:
-    seed = tmp_path / f"auto_seed_{n_shards}.json"
-    seed.write_text(
-        json.dumps(
-            {"shards": {f"shardId-{i}": {"records": []} for i in range(n_shards)}}
-        )
-    )
-    return {
-        "streamName": "s",
-        "clientFactory": FACTORY,
-        "seedFile": str(seed),
-    }
-
-
-def test_reader_mode_auto_selects_partitioned_above_shard_threshold(tmp_path):
+def test_data_source_uses_polling_reader_at_any_shard_count(tmp_path):
+    """One reader at any shard count: a 9-shard stream still gets the
+    sequence-anchored polling reader, and a leftover reader-mode option
+    (lowercased, as Spark hands options to the source) is read by
+    nothing."""
     from pyspark.errors import PySparkNotImplementedError
-    from snowplow_s3_loader_spark.sources.kinesis_source import (
-        KinesisPartitionedReader,
+
+    seed = tmp_path / "seed.json"
+    records = {f"shardId-{i}": [f"s{i}-r{j}" for j in range(3)] for i in range(9)}
+    seed.write_text(
+        json.dumps(
+            {
+                "shards": {
+                    sid: {"records": [{"Data": d} for d in data]}
+                    for sid, data in records.items()
+                }
+            }
+        )
     )
-
-    many = KinesisPythonDataSource(_seeded_options(tmp_path, 9))
-    assert isinstance(many.streamReader(None), KinesisPartitionedReader)
-
-    few = KinesisPythonDataSource(_seeded_options(tmp_path, 8))
-    with pytest.raises(PySparkNotImplementedError):
-        few.streamReader(None)  # falls back to the simple (polling) reader
-
-    low_threshold = KinesisPythonDataSource(
-        {**_seeded_options(tmp_path, 3), "partitionedShardThreshold": "2"}
-    )
-    assert isinstance(low_threshold.streamReader(None), KinesisPartitionedReader)
-
-    # explicit mode always wins over the probe
-    forced_polling = KinesisPythonDataSource(
-        {**_seeded_options(tmp_path, 9), "readerMode": "polling"}
-    )
-    with pytest.raises(PySparkNotImplementedError):
-        forced_polling.streamReader(None)
-    forced_part = KinesisPythonDataSource(
-        {**_seeded_options(tmp_path, 1), "readerMode": "partitioned"}
-    )
-    assert isinstance(forced_part.streamReader(None), KinesisPartitionedReader)
-
-
-def test_fanout_consumer_arn_resolved_and_polled_to_active():
-    """ADVICE r3: register returns CREATING and the real ARN carries a
-    ':creation-timestamp' suffix — the reader must resolve via
-    describe_stream_consumer and wait for ACTIVE, never string-build."""
-    from snowplow_s3_loader_spark.sources.kinesis_source import (
-        _Wire,
-        _resolve_active_consumer,
-    )
-
-    c = FakeKinesisClient("s")
-    wire = _Wire({"streamname": "s"})
-    wire._client = c
-    arn = "arn:aws:kinesis:local:000000000000:stream/s"
-    opts = {"consumerpollseconds": "0.01"}
-    got = _resolve_active_consumer(wire, c, arn, "app", opts)
-    assert got == f"{arn}/consumer/app:1735689600"  # suffixed, from describe
-    assert c.consumers["app"]["ConsumerStatus"] == "ACTIVE"
-
-    # second caller hits ResourceInUse and adopts the existing consumer
-    got2 = _resolve_active_consumer(wire, c, arn, "app", opts)
-    assert got2 == got
+    opts = {"streamName": "s", "clientFactory": FACTORY, "seedFile": str(seed)}
+    for extra in ({}, {"readermode": "partitioned"}):
+        source = KinesisPythonDataSource({**opts, **extra})
+        with pytest.raises(PySparkNotImplementedError):
+            source.streamReader(None)
+        reader = source.simpleStreamReader(None)
+        assert isinstance(reader, KinesisPollingReader)
+        rows, _ = reader.read(reader.initialOffset())
+        got = sorted(row[0].decode() for row in rows)
+        assert got == sorted(d for data in records.values() for d in data)
