@@ -28,12 +28,9 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from snowplow_s3_loader_spark.materialize import release_materialized
 from snowplow_s3_loader_spark.operators import hygiene
-from snowplow_s3_loader_spark.operators.dedup import (
-    exact_dedup,
-    release_materialized,
-    token_jaccard_pairs,
-)
+from snowplow_s3_loader_spark.operators.dedup import exact_dedup, token_jaccard_pairs
 from snowplow_s3_loader_spark.operators.dsir import dsir_select, dsir_weights
 from snowplow_s3_loader_spark.operators.graph import dedup_keep_canonical
 from snowplow_s3_loader_spark.operators.lm import bigram_lm_scores

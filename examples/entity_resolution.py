@@ -30,8 +30,8 @@ import sys
 
 from pyspark.sql import functions as F
 
+from snowplow_s3_loader_spark.materialize import release_materialized
 from snowplow_s3_loader_spark.operators.cdc import snapshot_diff
-from snowplow_s3_loader_spark.operators.dedup import release_materialized
 from snowplow_s3_loader_spark.operators.graph import bfs_distances, connected_components
 from snowplow_s3_loader_spark.operators.linkage import edit_distance_self_join
 from snowplow_s3_loader_spark.session import get_spark

@@ -22,11 +22,9 @@ import sys
 
 from pyspark.sql import functions as F
 
+from snowplow_s3_loader_spark.materialize import release_materialized
 from snowplow_s3_loader_spark.operators import cdc, incremental
-from snowplow_s3_loader_spark.operators.dedup import (
-    release_materialized,
-    token_jaccard_pairs,
-)
+from snowplow_s3_loader_spark.operators.dedup import token_jaccard_pairs
 from snowplow_s3_loader_spark.operators.graph import ComponentMap
 from snowplow_s3_loader_spark.operators.text import gopher_quality_flags, token_count
 from snowplow_s3_loader_spark.session import get_spark

@@ -72,17 +72,21 @@ def main() -> None:
         kinesis_stream(spark, cfg.input), checkpoint=os.path.join(tmp, "ckpt")
     )
 
+    # the pipeline records WroteFile and SentToBad only after the write jobs
+    # commit, so once both are logged every file they name is complete
+    actions = pipeline.actions
     deadline = time.time() + 60
     while time.time() < deadline:
-        good = [
-            p for p in glob.glob(os.path.join(cfg.good.path, "**", "*.gz"), recursive=True)
-            if "_staging" not in p
-        ]
-        bad = glob.glob(os.path.join(cfg.bad.path, "**", "part-*"), recursive=True)
-        if len(good) >= 2 and bad:
+        if actions.of_kind("SentToBad") and len(actions.of_kind("WroteFile")) >= 2:
             break
         time.sleep(0.5)
     query.stop()
+    good = [
+        p for p in glob.glob(os.path.join(cfg.good.path, "**", "*.gz"), recursive=True)
+        if "_staging" not in p
+    ]
+    # committed part files only: a task still writing sits under _temporary/
+    bad = sorted(glob.glob(os.path.join(cfg.bad.path, "part-*")))
 
     print("\n=== good files (schema-partitioned gzip) ===")
     for p in sorted(good):

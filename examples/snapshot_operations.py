@@ -20,11 +20,13 @@ import sys
 
 from pyspark.sql import functions as F
 
-from snowplow_s3_loader_spark.operators.dedup import (
+from snowplow_s3_loader_spark.materialize import (
     checkpoint_nostats,
+    release_materialized,
+)
+from snowplow_s3_loader_spark.operators.dedup import (
     incremental_minhash_filter,
     minhash_bands,
-    release_materialized,
 )
 from snowplow_s3_loader_spark.operators.layout import token_shards
 from snowplow_s3_loader_spark.operators.profile import (

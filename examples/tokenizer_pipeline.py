@@ -27,10 +27,10 @@ import sys
 
 from pyspark.sql import functions as F
 
+from snowplow_s3_loader_spark.materialize import checkpoint_nostats, release_materialized
 from snowplow_s3_loader_spark.operators import checks as C
 from snowplow_s3_loader_spark.operators import dedup
 from snowplow_s3_loader_spark.operators.bpe import bpe_encode, bpe_train
-from snowplow_s3_loader_spark.operators.dedup import release_materialized
 from snowplow_s3_loader_spark.operators.graph import random_walks
 from snowplow_s3_loader_spark.operators.text import pack_sequences
 from snowplow_s3_loader_spark.session import get_spark
@@ -93,12 +93,12 @@ def main(sf_dir: str) -> None:
     from snowplow_s3_loader_spark.operators import bpe as B
     from snowplow_s3_loader_spark.operators import unigram as U
 
-    wc = dedup.checkpoint_nostats(B.word_counts(docs, "text"))
+    wc = checkpoint_nostats(B.word_counts(docs, "text"))
     trained = U.unigram_train(wc, max_piece_len=4, min_count=2,
                               vocab_cap=4096, n_iter=2)
     n_pieces_vocab = trained.count()
     scores = U._collect_scores(
-        dedup.checkpoint_nostats(
+        checkpoint_nostats(
             U.score_pieces(U.seed_vocab(wc, 4, 2, 4096))
         ),
         4096,

@@ -45,7 +45,7 @@ def main() -> None:
         shuffle_partitions=int(cpus),
         extra_conf={"spark.ui.enabled": "false"},
     )
-    from snowplow_s3_loader_spark.operators.dedup import sweep_checkpoint_blocks
+    from snowplow_s3_loader_spark.materialize import sweep_checkpoint_blocks
     from snowplow_s3_loader_spark.plans.queries import QUERIES
 
     names = []

@@ -113,7 +113,7 @@ def _knob_variants(factor: int = 10):
     from pyspark.sql import functions as F
 
     from snowplow_s3_loader_spark.operators import similarity
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
     from snowplow_s3_loader_spark.tables import load_table
 
     def q71_scaled_clusters(spark, sf_dir, n_clusters):
@@ -148,7 +148,7 @@ def _knob_variants(factor: int = 10):
 def run(out_dir: str, names: list[str], factor: int = 10) -> None:
     import math
 
-    from snowplow_s3_loader_spark.operators.dedup import sweep_checkpoint_blocks
+    from snowplow_s3_loader_spark.materialize import sweep_checkpoint_blocks
     from snowplow_s3_loader_spark.plans import queries as Q
     from snowplow_s3_loader_spark.session import get_spark
     from snowplow_s3_loader_spark.tables import clear_table_cache

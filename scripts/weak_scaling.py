@@ -272,7 +272,7 @@ def incremental_cc_case(spark, n_clusters: int) -> dict:
     full = connected_components(base.union(delta))
     n_full = full.select("component").distinct().count()
     t_full = time.perf_counter() - t0
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
 
     release_materialized(full)
     assert n_inc == n_full == n_clusters - 100, (n_inc, n_full)
@@ -548,7 +548,7 @@ def pagerank_case(spark, n_edges: int) -> dict:
     ~linearly with |E|. Mass invariant checked (floor-rounded total never
     exceeds the scale constant).
     """
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
     from snowplow_s3_loader_spark.operators.graph import pagerank
 
     n_nodes = max(100, n_edges // 10)
@@ -585,7 +585,7 @@ def bpe_case(spark, n_docs: int) -> dict:
     O(|vocab|)/round, so wall must grow sublinearly with docs (the
     corpus pass) plus ~linearly with the VOCABULARY (the rounds)."""
     from snowplow_s3_loader_spark.operators.bpe import bpe_train
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
 
     head = " ".join(f"tok{j}" for j in range(1, 20) for _ in range(20 // j))
     docs = spark.range(n_docs).select(
@@ -639,7 +639,7 @@ def triangle_fallback_case(spark, n_edges: int) -> dict:
     two-sided shuffle closure join is the 100 TB path; it must scale the
     same way the broadcast path does (degree orientation still bounds
     wedges at O(|E|^1.5), planted 2% hub)."""
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
     from snowplow_s3_loader_spark.operators.graph import triangle_count
 
     n_nodes = max(100, n_edges // 10)
@@ -670,7 +670,7 @@ def hits_case(spark, n_edges: int) -> dict:
     """Exact-integer HITS (round-7): 2 rounds on the hashed graph
     (~|E|/10 nodes). Per half-round work is one co-partitioned join +
     one keyed agg + a 1-row max; wall must grow ~linearly with |E|."""
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
     from snowplow_s3_loader_spark.operators.graph import hits
 
     n_nodes = max(100, n_edges // 10)
@@ -705,7 +705,7 @@ def hits_soak_case(spark, n_edges: int) -> dict:
       releases its predecessor checkpoints);
     - scores stay inside the micro-unit envelope (max-normalization
       bounds every score by `scale`)."""
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
     from snowplow_s3_loader_spark.operators.graph import hits
 
     n_nodes = max(100, n_edges // 10)
@@ -753,7 +753,7 @@ def kcore_case(spark, n_edges: int) -> dict:
     """k-core peeling (round-7): hashed graph with a degree mix (avg ~10)
     peeled at k=12 — several rounds of real shrinkage. Per-round work is
     bounded by the SURVIVING |E|; wall must grow ~linearly with |E|."""
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
     from snowplow_s3_loader_spark.operators.graph import k_core
 
     n_nodes = max(100, n_edges // 10)
@@ -787,7 +787,7 @@ def pagerank_soak_case(spark, n_edges: int) -> dict:
       regardless of depth (every interval releases its predecessor);
     - deeper runs remain mass-sane (floor-rounded total <= scale).
     """
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
     from snowplow_s3_loader_spark.operators.graph import pagerank
 
     n_nodes = max(100, n_edges // 10)
@@ -925,7 +925,7 @@ def bfs_case(spark, n_edges: int) -> dict:
     degree ~10), seeds = every 1000th node, depth 4: adjacency is
     checkpointed once, per-round traffic is frontier-sized, so wall
     must grow ~linearly with |E|."""
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
     from snowplow_s3_loader_spark.operators.graph import bfs_distances
 
     n_nodes = max(100, n_edges // 10)
@@ -955,7 +955,7 @@ def lpa_case(spark, n_edges: int) -> dict:
     (driver_threshold=0): 2 deterministic rounds on the hashed graph.
     Per round one co-partitioned join + one keyed count + one arg-max
     window — wall must grow ~linearly with |E|."""
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
     from snowplow_s3_loader_spark.operators.graph import label_propagation
 
     n_nodes = max(100, n_edges // 10)
@@ -1172,7 +1172,7 @@ def linkpred_case(spark, n_edges: int) -> dict:
     The case runs WITH the cutoff (the documented 100 TB knob) and
     reports wall + candidate pairs; wall must track the bounded wedge
     volume, not |V|^2."""
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
     from snowplow_s3_loader_spark.operators.graph import link_prediction
 
     n_nodes = max(100, n_edges // 10)
@@ -1634,7 +1634,7 @@ def incdedup_case(spark, n_new: int) -> dict:
     store = minhash_bands(hist, "doc_id", "text").select(
         "band_id", "band_hash"
     )
-    from snowplow_s3_loader_spark.operators.dedup import checkpoint_nostats
+    from snowplow_s3_loader_spark.materialize import checkpoint_nostats
 
     store = checkpoint_nostats(store)  # the PERSISTED store: built once
     t0 = time.perf_counter()
@@ -1656,11 +1656,13 @@ def incdedup_soak_case(spark, n_per_snapshot: int, n_snapshots: int) -> dict:
     round: each snapshot replays 25% of the PREVIOUS snapshot's fresh
     text keys, so round 1 has zero dups and every later round exactly
     n/4."""
-    from snowplow_s3_loader_spark.operators.dedup import (
+    from snowplow_s3_loader_spark.materialize import (
         checkpoint_nostats,
+        release_materialized,
+    )
+    from snowplow_s3_loader_spark.operators.dedup import (
         incremental_minhash_filter,
         minhash_bands,
-        release_materialized,
     )
 
     def snapshot(r):

@@ -76,7 +76,6 @@ class BatchingConfig:
 class DecompressionConfig:
     """Envelope decompression guards (reference.conf:27-28)."""
 
-    enabled: bool = True
     max_bytes_in_batch: int = 5_242_880
     max_bytes_single_payload: int = 10_000_000
 
@@ -232,7 +231,6 @@ def from_dict(raw: dict) -> LoaderConfig:
     )
     d = raw.get("decompression", {})
     cfg.decompression = DecompressionConfig(
-        enabled=_bool(d.get("enabled", True)),
         max_bytes_in_batch=int(d.get("maxBytesInBatch", 5_242_880)),
         max_bytes_single_payload=int(d.get("maxBytesSinglePayload", 10_000_000)),
     )

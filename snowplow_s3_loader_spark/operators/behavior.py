@@ -365,7 +365,7 @@ def item_similarity_topk(
     must stay under sqrt(2^63/scale) (~3e6 at the default scale) or the
     row raises.
     """
-    from snowplow_s3_loader_spark.operators.dedup import (
+    from snowplow_s3_loader_spark.materialize import (
         checkpoint_nostats,
         checkpoint_nostats_counted,
     )

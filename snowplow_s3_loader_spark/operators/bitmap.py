@@ -114,23 +114,6 @@ def bitmap_pairwise_intersections(
     )
 
 
-def bitmap_intersect_cardinality(
-    a: DataFrame, b: DataFrame, group_cols: list[str]
-) -> DataFrame:
-    """Exact |A ∩ B| per group: inner equi-join on (group..., word),
-    AND the words, popcount, sum. Word frames are domain/64-sized, so
-    this never revisits the raw stream; blocks absent from either side
-    contribute nothing and are correctly dropped by the inner join."""
-    bl = a.select(*group_cols, "word", F.col("bits").alias("__bm_a"))
-    br = b.select(*group_cols, "word", F.col("bits").alias("__bm_b"))
-    joined = bl.join(br, [*group_cols, "word"])
-    return joined.groupBy(*group_cols).agg(
-        F.sum(F.bit_count(F.col("__bm_a").bitwiseAND(F.col("__bm_b")))).alias(
-            "n_common"
-        )
-    )
-
-
 def bitmap_trailing_distinct(
     df: DataFrame, day_col: str, value_col: str, window_days: int
 ) -> DataFrame:
@@ -152,7 +135,7 @@ def bitmap_trailing_distinct(
     observed-day frame (tiny, broadcast)."""
     if window_days < 1:
         raise ValueError(f"window_days must be >= 1, got {window_days}")
-    from snowplow_s3_loader_spark.operators.dedup import checkpoint_nostats
+    from snowplow_s3_loader_spark.materialize import checkpoint_nostats
 
     bm = checkpoint_nostats(bitmap_agg(df, [day_col], value_col))
     day = F.col(day_col).cast("long")

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from snowplow_s3_loader_spark.operators.dedup import (
+from snowplow_s3_loader_spark.materialize import (
     checkpoint_nostats,
     release_materialized,
 )

@@ -15,11 +15,15 @@ Scale notes (100 TB):
 
 Determinism: every hash is md5 (identical across Spark/DuckDB), never
 xxhash64/murmur (engine-specific seeds).
+
+Materialization (checkpoint_nostats and the release helpers) lives in
+`snowplow_s3_loader_spark.materialize`; the band-store probe uses it like
+every other operator.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from snowplow_s3_loader_spark.operators.text import tokens
@@ -423,36 +427,6 @@ def compact_band_store(
     }
 
 
-def scan_io_metrics(df: DataFrame) -> dict[str, int]:
-    """Executed-plan file-scan metrics for an ALREADY-EXECUTED frame
-    (call an action first): sums numFiles / filesSize / numPartitions
-    across every FileSourceScan in the plan. This is the measurement
-    the bucket-pruning contract is stated in — probe I/O must be the
-    hit buckets' bytes, not the store's."""
-    out = {"numFiles": 0, "filesSize": 0, "numPartitions": 0}
-
-    def _walk(node):
-        name = node.getClass().getSimpleName()
-        if "FileSourceScan" in name:
-            m = node.metrics()
-            for k in out:
-                if m.contains(k):
-                    out[k] += m.apply(k).value()
-        if name == "AdaptiveSparkPlanExec":
-            _walk(node.executedPlan())
-        # AQE query-stage nodes are LEAVES (children() is empty) whose
-        # subtree hangs off .plan — without descending, any plan with
-        # an exchange reads as numFiles=0 and the pruning contract
-        # silently reports "no I/O"
-        if name.endswith("QueryStageExec"):
-            _walk(node.plan())
-        for i in range(node.children().size()):
-            _walk(node.children().apply(i))
-
-    _walk(df._jdf.queryExecution().executedPlan())
-    return out
-
-
 def incremental_minhash_filter_store(
     new_docs: DataFrame,
     store_path: str,
@@ -484,6 +458,11 @@ def incremental_minhash_filter_store(
     fold OVERWRITES this epoch's partition, so a retried micro-batch
     reproduces its result instead of colliding with its own
     half-written fold (see write_band_store)."""
+    from snowplow_s3_loader_spark.materialize import (
+        checkpoint_nostats,
+        release_materialized,
+    )
+
     bands = checkpoint_nostats(
         minhash_bands(new_docs, id_col, text_col, n_hashes, band_size)
     )
@@ -674,287 +653,6 @@ def token_jaccard_pairs(
         base.unpersist()
         prefixes.unpersist()
     return out
-
-
-def release_materialized(df: DataFrame) -> None:
-    """Drop the localCheckpoint blocks behind a materialized result (the
-    frame is dead afterwards — its lineage was truncated). pyspark's GC
-    never releases them (the py4j-held Dataset pins the RDD), so batteries
-    that run many operators in one session call this between queries.
-    Works on plain localCheckpoint frames and on checkpoint_nostats
-    frames alike — in both shapes analyzed().rdd() IS the persisted RDD."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass  # not a checkpointed frame / already released
-
-
-def sweep_checkpoint_blocks(spark: SparkSession) -> None:
-    """Drop EVERY localCheckpoint block in the session; `.cache()`d tables
-    stay. Benchmarks call it between queries so the checkpoints one query's
-    materializing operators leave behind never tax the next (uncollected
-    residue once made a 1x run slower than its 10x twin). Any frame still
-    reading a swept checkpoint is dead afterwards."""
-    lst = spark.sparkContext._jsc.sc().getPersistentRDDs().toList()
-    for i in range(lst.size()):
-        rdd = lst.apply(i)._2()
-        if "localCheckpoint" in rdd.toString():
-            rdd.unpersist(False)
-
-
-def checkpoint_nostats(
-    df: DataFrame,
-    n_parts: int | None = None,
-    partition_cols: list[str] | None = None,
-    trust_partitioning: bool = False,
-) -> DataFrame:
-    """Eager stats-truncating localCheckpoint with an optionally
-    ADVERTISED hash layout — see _checkpoint_nostats_impl for the full
-    doctrine. checkpoint_nostats_counted additionally returns the row
-    count from the same materializing action (no second job)."""
-    return _checkpoint_nostats_impl(df, n_parts, partition_cols, trust_partitioning)[0]
-
-
-def checkpoint_nostats_counted(
-    df: DataFrame,
-    n_parts: int | None = None,
-    partition_cols: list[str] | None = None,
-    trust_partitioning: bool = False,
-) -> tuple[DataFrame, int]:
-    """checkpoint_nostats PLUS the frame's row count, derived from the
-    checkpoint's OWN materializing action instead of a separate job
-    (guide §1.2 step 1: the iterative loops paid checkpoint + count per
-    round, and at local scale each extra action is a full
-    scheduler/AQE round-trip — round 14's job census measured the loop
-    family at 17-39 jobs/query with the count jobs ~half the floor).
-
-    Mechanics: Dataset.localCheckpoint(eager=True) internally
-    materializes via count() on the checkpointed RDD and DISCARDS the
-    value; here the checkpoint is taken lazily and the same RDD count
-    is issued once, keeping the result — one action total, identical
-    blocks. Falls back to an explicit DataFrame count (second job, old
-    behavior) if the internal RDD is unreachable (private-API drift),
-    warning once per process like every other fallback here."""
-    frame, n = _checkpoint_nostats_impl(
-        df, n_parts, partition_cols, trust_partitioning, with_count=True
-    )
-    return frame, n
-
-
-def _checkpoint_nostats_impl(
-    df: DataFrame,
-    n_parts: int | None = None,
-    partition_cols: list[str] | None = None,
-    trust_partitioning: bool = False,
-    with_count: bool = False,
-) -> tuple[DataFrame, int | None]:
-    """Eager localCheckpoint that does NOT inherit the parent plan's
-    statistics — REQUIRED for iterative algorithms — and (optionally)
-    ADVERTISES a hash partitioning so downstream joins co-partition.
-
-    Stats: Dataset.localCheckpoint keeps the origin plan's stats on the
-    new LogicalRDD. Catalyst's size-only estimator MULTIPLIES children's
-    sizeInBytes at a join, so in a loop (or across incremental-state
-    generations) where each round joins frames built from the previous
-    round's checkpoint, sizeInBytes compounds: measured bit-lengths
-    double per generation (125 -> 249 -> ... -> 15873 bits in 8 rounds),
-    and within ~5 ComponentMap updates stats become million-bit
-    BigIntegers — planning then burns MINUTES inside
-    BigInteger.multiply (jstack: SizeInBytesOnlyStatsPlanVisitor ->
-    multiplyToomCook3), which is how the round-5 soak found per-batch
-    time exploding 3s -> 90s -> wedged at batch 5. The rebuilt leaf
-    reports the constant 63-bit defaultSizeInBytes, keeping stats O(1)
-    forever.
-
-    Partitioning: a checkpointed LogicalRDD otherwise reports
-    UnknownPartitioning, so every later join RE-SHUFFLES the frame even
-    when the data is already laid out on the join key — O(rounds x |E|)
-    redundant shuffle in an iterative loop. With ``partition_cols``, the
-    helper repartitions to ``n_parts`` on those columns IMMEDIATELY
-    before the checkpoint (so the persisted blocks are guaranteed to
-    have exactly that layout) and rebuilds the LogicalRDD with the
-    matching HashPartitioning — joins keyed on those columns at the same
-    width then plan with ZERO Exchange. ``trust_partitioning=True``
-    skips the repartition when the caller KNOWS the input plan already
-    ends in that exact layout (e.g. a join that preserved it); a wrong
-    claim produces wrong join results, so the trust path VERIFIES the
-    claim against the executed plan's final (post-AQE)
-    outputPartitioning and raises AssertionError on mismatch — a cheap
-    plan-only check that turns a planner-invariant drift (a Spark bump
-    changing SMJ/BHJ layout preservation, AQE coalescing a
-    REPARTITION_BY_NUM) into a loud failure instead of wrong results.
-
-    The rebuilt frame reads the SAME persisted blocks;
-    release_materialized frees them unchanged. Falls back (private-API
-    guard) to an unpartitioned rebase, then to the plain checkpoint —
-    both fallbacks warn ONCE per process, so the advertised-partitioning
-    path silently stopping engaging after a Spark upgrade is visible."""
-    sp = df.sparkSession
-    if partition_cols and not trust_partitioning:
-        df = df.repartition(n_parts, *partition_cols)
-    n_rows: int | None = None
-    if with_count:
-        # lazy checkpoint + one explicit RDD count: the SAME action the
-        # eager path runs internally (Dataset.localCheckpoint(eager)
-        # materializes via rdd.count() and discards the value), except
-        # the count is kept — one job where checkpoint-then-count paid two
-        ckpt = df.localCheckpoint(eager=False)
-        try:
-            n_rows = int(ckpt._jdf.queryExecution().analyzed().rdd().count())
-        except Exception:
-            _warn_ckpt_fallback(
-                "counted checkpoint could not reach the materialized RDD; "
-                "counting with a separate job (checkpoint + count, the "
-                "pre-round-14 shape)"
-            )
-            n_rows = ckpt.count()
-    else:
-        ckpt = df.localCheckpoint(eager=True)
-    if partition_cols and trust_partitioning:
-        try:
-            _assert_trusted_layout(df, partition_cols, int(n_parts))
-        except AssertionError:
-            # don't leak the just-materialized blocks on a failed claim —
-            # pyspark's GC never frees them
-            release_materialized(ckpt)
-            raise
-    jvm = sp._jvm
-    try:
-        j = ckpt._jdf
-        lrdd = j.queryExecution().analyzed()
-        out = lrdd.output()
-        rdd = lrdd.rdd()
-        if partition_cols:
-            attrs = {}
-            it = out.iterator()
-            while it.hasNext():
-                a = it.next()
-                attrs[a.name()] = a
-            exprs = jvm.PythonUtils.toSeq([attrs[c] for c in partition_cols])
-            part = jvm.org.apache.spark.sql.catalyst.plans.physical.HashPartitioning(
-                exprs, int(n_parts)
-            )
-        else:
-            part = jvm.org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning(0)
-        none = jvm.scala.Option.empty()
-        newplan = jvm.org.apache.spark.sql.execution.LogicalRDD(
-            out, rdd, part, jvm.PythonUtils.toSeq([]), False, none,
-            sp._jsparkSession, none, none,
-        )
-        return (
-            DataFrame(
-                jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-                    sp._jsparkSession, newplan
-                ),
-                sp,
-            ),
-            n_rows,
-        )
-    except AssertionError:
-        raise
-    except Exception:
-        _warn_ckpt_fallback(
-            "LogicalRDD rebuild with advertised partitioning failed; "
-            "falling back to an unpartitioned rebase (downstream joins "
-            "will re-shuffle checkpointed frames)"
-        )
-    try:
-        # older private-API shape: rebase without partitioning
-        j = ckpt._jdf
-        jrdd = j.queryExecution().analyzed().rdd()
-        jdf2 = sp._jsparkSession.internalCreateDataFrame(jrdd, j.schema(), False)
-        return DataFrame(jdf2, sp), n_rows
-    except Exception:
-        # last resort: correct, just stats-inheriting (slow only for very
-        # long iterative runs)
-        _warn_ckpt_fallback(
-            "checkpoint rebase failed entirely; returning the plain "
-            "localCheckpoint (stats-inheriting — iterative loops may slow "
-            "down over many rounds)"
-        )
-        return ckpt, n_rows
-
-
-_CKPT_FALLBACK_WARNED: set = set()
-
-
-def _warn_ckpt_fallback(msg: str) -> None:
-    """Warn ONCE per distinct fallback message per process — a Spark bump
-    that degrades checkpoint_nostats to UnknownPartitioning or
-    stats-inheriting checkpoints must be visible, not silent (round-5
-    ADVICE item)."""
-    if msg not in _CKPT_FALLBACK_WARNED:
-        _CKPT_FALLBACK_WARNED.add(msg)
-        import warnings
-
-        warnings.warn(f"checkpoint_nostats: {msg}", RuntimeWarning, stacklevel=3)
-
-
-def _assert_trusted_layout(df: DataFrame, partition_cols: list[str], n_parts: int) -> None:
-    """Plan-only verification of a ``trust_partitioning=True`` claim: the
-    executed plan's FINAL (post-AQE) outputPartitioning must be a hash
-    partitioning on ``partition_cols`` at exactly ``n_parts`` partitions
-    (a PartitioningCollection containing it also qualifies — join outputs
-    report one). Runs after the eager checkpoint so AQE has finalized the
-    plan; raises AssertionError on mismatch because a wrong trust claim
-    produces WRONG JOIN RESULTS downstream, not just a slow plan. If the
-    plan APIs themselves are unavailable (private-API drift), warns once
-    and lets the call proceed — the claim is then unverified, exactly the
-    condition the warning surfaces."""
-    try:
-        ep = df._jdf.queryExecution().executedPlan()
-        if ep.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-            ep = ep.finalPhysicalPlan()
-        op = ep.outputPartitioning()
-        desc = op.toString()
-        n = op.numPartitions()
-    except Exception:
-        _warn_ckpt_fallback(
-            "trust_partitioning claim could not be verified (plan "
-            "introspection API unavailable) — layout is UNCHECKED"
-        )
-        return
-    import re
-
-    # EXACT match required: parse every hashpartitioning(...) group in the
-    # description (a join output may report a PartitioningCollection of
-    # several) and accept only one whose expression list is precisely the
-    # claimed columns, as bare attribute refs (`name#exprId`), in order,
-    # at the claimed width. A substring check would bless supersets —
-    # claim hash(s) against an actual hash(s, d) layout — or
-    # expression-wrapped columns (hash(lower(k))), either of which still
-    # produces wrong co-partitioned join results downstream.
-    def _group_matches(args: str) -> bool:
-        parts = [a.strip() for a in args.split(",")]
-        if len(parts) != len(partition_cols) + 1:
-            return False
-        if not parts[-1].isdigit() or int(parts[-1]) != n_parts:
-            return False
-        for claimed, actual in zip(partition_cols, parts[:-1]):
-            if not re.fullmatch(rf"{re.escape(claimed)}#\d+L?", actual):
-                return False
-        return True
-
-    ok = n == n_parts and any(
-        _group_matches(m)
-        for m in re.findall(r"hashpartitioning\(([^()]*)\)", desc)
-    )
-    # a provably-EMPTY final plan satisfies any layout claim vacuously
-    # (every one of its zero rows is in the right partition): AQE's
-    # PropagateEmptyRelation collapses an empty-input subtree to an
-    # empty local relation reporting UnknownPartitioning(0) — e.g. a
-    # k-core peel that prunes the whole graph. Zero partitions can hold
-    # no rows, so n == 0 is the demonstrably-empty condition.
-    if not ok and n == 0:
-        return
-    if not ok:
-        raise AssertionError(
-            "checkpoint_nostats(trust_partitioning=True): executed plan's "
-            f"outputPartitioning {desc!r} (numPartitions={n}) does not match "
-            f"the claimed hashpartitioning on {partition_cols} x {n_parts} — "
-            "the caller's layout claim is wrong (planner invariant drift?); "
-            "remove trust_partitioning to force an explicit repartition"
-        )
 
 
 def _token_hash60(tok: Column) -> Column:

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from snowplow_s3_loader_spark.operators.dedup import checkpoint_nostats
+from snowplow_s3_loader_spark.materialize import checkpoint_nostats
 
 MICRO = 1_000_000
 

@@ -20,12 +20,12 @@ round, O(log n) rounds regardless of diameter — instead of raising.
 Scale mechanics:
 - each iteration is one shuffle join (edges x labels) + one aggregation —
   both keyed, both AQE-coalesced;
-- lineage is truncated every round via eager checkpoint_nostats
+- lineage is truncated every round via checkpoint_nostats
   (iterative Spark plans otherwise grow an exponential DAG — and plain
   localCheckpoint would carry the origin plan's statistics forward,
   which COMPOUND multiplicatively through each round's join until
   Catalyst's size estimator spends minutes in BigInteger math; see
-  dedup.checkpoint_nostats), and the previous round's blocks are
+  materialize.checkpoint_nostats), and the previous round's blocks are
   released immediately, so storage is bounded at 2 x |V| rows
   regardless of iteration count;
 - the convergence check is a count() on changed labels — one tiny action
@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from snowplow_s3_loader_spark.operators.dedup import (
+from snowplow_s3_loader_spark.materialize import (
     checkpoint_nostats,
     checkpoint_nostats_counted,
     release_materialized,

@@ -171,7 +171,7 @@ def token_shards(
     (ranking.global_running_total — literal-boundary buckets + offset map
     offsets, NO single-partition stage), then a pure projection.
     Output: (id_col, weight_col, rn, start, shard)."""
-    from snowplow_s3_loader_spark.operators.dedup import checkpoint_nostats
+    from snowplow_s3_loader_spark.materialize import checkpoint_nostats
     from snowplow_s3_loader_spark.operators.ranking import (
         global_running_total,
     )

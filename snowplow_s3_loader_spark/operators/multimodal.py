@@ -143,18 +143,6 @@ def fake_decode_image(payload: bytes, width: int = 16, height: int = 16,
     )
 
 
-def downsample_image(img, factor: int = 2):
-    """Mean-pool downsample (the resize step of a training pipeline) —
-    pure numpy, works on real or fake-decoded arrays."""
-    h, w, c = img.shape
-    h2, w2 = h // factor, w // factor
-    return (
-        img[: h2 * factor, : w2 * factor]
-        .reshape(h2, factor, w2, factor, c)
-        .mean(axis=(1, 3))
-    )
-
-
 IMAGE_STATS_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),

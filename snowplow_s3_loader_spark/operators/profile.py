@@ -268,7 +268,7 @@ def spearman_moments(
     is materialized — BOUNDED by the module's own enforced n <= ~1.3e6
     contract, never corpus-sized (the ranking operator itself
     materializes nothing)."""
-    from snowplow_s3_loader_spark.operators.dedup import (
+    from snowplow_s3_loader_spark.materialize import (
         checkpoint_nostats,
         release_materialized,
     )
@@ -385,7 +385,7 @@ def association_components(
     already-paid cell frame (a scalar collect, not a corpus job).
 
     Output: (a, b, observed, row_total, col_total, dev, contrib)."""
-    from snowplow_s3_loader_spark.operators.dedup import (
+    from snowplow_s3_loader_spark.materialize import (
         checkpoint_nostats,
         release_materialized,
     )
@@ -558,7 +558,7 @@ def psi_bins(
 
     Output: (bin, upper_edge, n_ref, n_cur, psi_micro), bins 1..k
     (upper_edge is NULL for bin k — it is unbounded above)."""
-    from snowplow_s3_loader_spark.operators.dedup import checkpoint_nostats
+    from snowplow_s3_loader_spark.materialize import checkpoint_nostats
     from snowplow_s3_loader_spark.operators.ranking import (
         global_row_number,
         ntile_from_row_number,
@@ -714,7 +714,7 @@ def woe_bins(
     k-row frame. ``tie_cols`` must make the order total.
 
     Output: (bin, n, n_pos, n_neg, dev, woe_micro), bins 1..k."""
-    from snowplow_s3_loader_spark.operators.dedup import checkpoint_nostats
+    from snowplow_s3_loader_spark.materialize import checkpoint_nostats
     from snowplow_s3_loader_spark.operators.ranking import (
         global_row_number,
         ntile_from_row_number,
@@ -868,7 +868,7 @@ def ks_statistic(
             F.lit(flag).alias("__is_ref"),
         )
 
-    from snowplow_s3_loader_spark.operators.dedup import (
+    from snowplow_s3_loader_spark.materialize import (
         checkpoint_nostats,
         release_materialized,
     )

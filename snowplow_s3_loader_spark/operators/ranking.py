@@ -570,7 +570,7 @@ def winsorize(
         raise ValueError(
             f"need 0 <= lo <= hi <= 1e6, got ({lo_micro}, {hi_micro})"
         )
-    from snowplow_s3_loader_spark.operators.dedup import checkpoint_nostats
+    from snowplow_s3_loader_spark.materialize import checkpoint_nostats
 
     # the ranked frame feeds BOTH the bounds aggregation and the output
     # join — materialize the window pass once instead of re-sorting per
@@ -616,7 +616,7 @@ def auc_moments(
 
     Output: (keys..., n1, n0, u_dbl, auc_micro); auc_micro is NULL for
     single-class groups."""
-    from snowplow_s3_loader_spark.operators.dedup import checkpoint_nostats
+    from snowplow_s3_loader_spark.materialize import checkpoint_nostats
 
     lbl = F.col(label_col)
     ranked = df.select(

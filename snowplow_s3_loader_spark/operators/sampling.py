@@ -133,59 +133,6 @@ def leakage_safe_split(
     return df.withColumn(out_col, split_column(key_col, splits, hex_chars))
 
 
-def leakage_safe_split_by_pairs(
-    df: DataFrame,
-    id_col: str,
-    pairs: DataFrame,
-    splits: dict[str, float],
-    hex_chars: int = 4,
-    out_col: str = "split",
-) -> DataFrame:
-    """Near-duplicate-aware leakage-safe split: clusters the near-dup
-    ``pairs`` graph (any pair generator's output: MinHash/LSH, PPJoin,
-    SimHash, embedding near-dup), keys every clustered row on its
-    connected-component id and every unclustered row on its own id, then
-    assigns splits with the same md5-threshold mechanics — a whole
-    near-dup cluster always lands on one side of the train/test
-    boundary.
-
-    Returns the NARROW assignment frame (id_col, out_col) — two columns,
-    MATERIALIZED — rather than the widened corpus: callers join it back
-    (`df.join(assignment, id_col)`, broadcastable when the corpus is the
-    big side) and own one releasable checkpoint
-    (``release_materialized(assignment)``). Returning the widened corpus
-    would either leak the internal component checkpoint through the lazy
-    join or force materializing every corpus column; the narrow
-    assignment is the 100 TB-safe contract (same shape as
-    semantic_dedup's result). The corpus itself is never shuffled — the
-    only shuffles are inside the pair-graph clustering, bounded by the
-    pair count."""
-    from snowplow_s3_loader_spark.operators.dedup import (
-        checkpoint_nostats,
-        release_materialized,
-    )
-    from snowplow_s3_loader_spark.operators.graph import connected_components
-
-    comps = connected_components(pairs)
-    # distinct: a corpus with duplicate ids (the population this operator
-    # targets) must yield ONE assignment row per id, or the documented
-    # join-back multiplies rows
-    keyed = df.select(id_col).distinct().join(
-        comps.select(F.col("node").alias(id_col), "component"), id_col, "left"
-    )
-    out = checkpoint_nostats(
-        leakage_safe_split(
-            keyed,
-            F.coalesce("component", F.col(id_col)),
-            splits,
-            hex_chars=hex_chars,
-            out_col=out_col,
-        ).select(id_col, out_col)
-    )
-    release_materialized(comps)
-    return out
-
-
 def group_reservoir(
     df: DataFrame,
     group_col: str,

@@ -632,7 +632,7 @@ def semantic_dedup(
     to semantic_dedup_audit so the CC loop runs once, not twice; comps
     never depends on the keep decisions, so reuse costs no
     falsifiability."""
-    from snowplow_s3_loader_spark.operators.dedup import (
+    from snowplow_s3_loader_spark.materialize import (
         checkpoint_nostats,
         release_materialized,
     )
@@ -692,7 +692,7 @@ def semantic_dedup_audit(
     internally-computed comps before returning — the caller then owns
     exactly one checkpoint (the result); otherwise the lazy result reads
     the comps checkpoint and the caller must keep it alive."""
-    from snowplow_s3_loader_spark.operators.dedup import (
+    from snowplow_s3_loader_spark.materialize import (
         checkpoint_nostats,
         release_materialized,
     )
@@ -825,19 +825,6 @@ def pca_project(
             yield pdf[out_fields]
 
     return emb.mapInPandas(_proj, schema=schema)
-
-
-def pca_save(path: str, mean: np.ndarray, components: np.ndarray,
-             eigenvalues: np.ndarray) -> None:
-    """Persist a fitted PCA model (driver-side npz artifact — model files
-    are small and live beside the data; the bloom/IVF artifacts are
-    DataFrames and persist as parquet directly)."""
-    np.savez(path, mean=mean, components=components, eigenvalues=eigenvalues)
-
-
-def pca_load(path: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    d = np.load(path if path.endswith(".npz") else path + ".npz")
-    return d["mean"], d["components"], d["eigenvalues"]
 
 
 # ---------------------------------------------------------------------------

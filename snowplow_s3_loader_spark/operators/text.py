@@ -580,7 +580,7 @@ def collocations(
     joins; the top-k is a distributed TakeOrderedAndProject."""
     from pyspark.sql import Window
 
-    from snowplow_s3_loader_spark.operators.dedup import checkpoint_nostats
+    from snowplow_s3_loader_spark.materialize import checkpoint_nostats
 
     if min_count < 1:
         raise ValueError(f"min_count must be >= 1, got {min_count}")
@@ -709,41 +709,6 @@ def winnow_fingerprints(
         ),
     )
     return annotated.where(sel).select(id_col, "pos", "h")
-
-
-def winnow_matches(
-    fp: DataFrame,
-    id_col: str,
-    *,
-    max_df: int = 1000,
-    min_shared: int = 2,
-) -> DataFrame:
-    """Cross-document overlap candidates from winnowing fingerprints:
-    documents sharing >= ``min_shared`` fingerprint HASHES, found by an
-    equi-join on the hash bucket — never an all-pairs comparison.
-    Fingerprints appearing in more than ``max_df`` documents (corpus
-    boilerplate — their buckets pair quadratically and carry no
-    discriminative signal) are dropped first, the same guardrail as
-    PPJoin's prefix pruning; distinct (doc, hash) before pairing so
-    repeated in-doc matches count once.
-
-    Output: (id_a, id_b, shared_fingerprints) with id_a < id_b."""
-    d = fp.select(F.col(id_col).alias("doc"), "h").distinct()
-    docfreq = d.groupBy("h").agg(F.count("*").alias("df"))
-    # anti-join on the HOT hashes (df > max_df): that side is small by
-    # construction (corpus boilerplate), so AQE broadcasts it
-    keep = d.join(
-        docfreq.where(F.col("df") > max_df).select("h"), "h", "left_anti"
-    )
-    a = keep.select("h", F.col("doc").alias("id_a"))
-    b = keep.select("h", F.col("doc").alias("id_b"))
-    return (
-        a.join(b, "h")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("shared_fingerprints"))
-        .where(F.col("shared_fingerprints") >= min_shared)
-    )
 
 
 def ngram_novelty(

@@ -392,7 +392,7 @@ def acf_moments(
     for lags at or beyond the series length."""
     if max_lag < 1:
         raise ValueError(f"acf_moments: max_lag must be >= 1, got {max_lag}")
-    from snowplow_s3_loader_spark.operators.dedup import checkpoint_nostats
+    from snowplow_s3_loader_spark.materialize import checkpoint_nostats
 
     x = F.col(value_col)
     # |keys|-bounded; checkpointed so the guard collect below and the

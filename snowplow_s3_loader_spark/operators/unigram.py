@@ -199,7 +199,7 @@ def unigram_train(
     piece used by the FINAL e-step: (piece, seed_count, score_micro,
     em_count) — score_micro is the score that PRODUCED that final
     segmentation, so the row set is replayable end to end."""
-    from snowplow_s3_loader_spark.operators.dedup import checkpoint_nostats
+    from snowplow_s3_loader_spark.materialize import checkpoint_nostats
 
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")

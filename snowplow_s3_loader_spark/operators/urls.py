@@ -368,7 +368,7 @@ def domain_cap(deduped: DataFrame, cap: int, salt_chars: int = 2) -> DataFrame:
     and one join back on (domain, salt) whose big side is already
     partitioned by the join key. No Exchange SinglePartition anywhere
     (plan-gated)."""
-    from snowplow_s3_loader_spark.operators.dedup import checkpoint_nostats
+    from snowplow_s3_loader_spark.materialize import checkpoint_nostats
 
     if cap < 1:
         raise ValueError(f"domain_cap: cap must be >= 1, got {cap}")

@@ -200,7 +200,7 @@ def _heavy_parity(spark: SparkSession, sf_dir: str) -> list:
 
 
 def _component_map_parity(spark: SparkSession, sf_dir: str) -> list:
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
     from snowplow_s3_loader_spark.operators.graph import (
         ComponentMap,
         connected_components,
@@ -723,11 +723,13 @@ def _inc_minhash_parity(spark: SparkSession, sf_dir: str) -> list:
     — two genuinely different store implementations that must agree on
     every (id, n_hit_bands, is_dup), including cross-batch fold hits
     (a later batch replaying an earlier batch's survivor text)."""
-    from snowplow_s3_loader_spark.operators.dedup import (
+    from snowplow_s3_loader_spark.materialize import (
         checkpoint_nostats,
+        release_materialized,
+    )
+    from snowplow_s3_loader_spark.operators.dedup import (
         incremental_minhash_filter,
         minhash_bands,
-        release_materialized,
         write_band_store,
     )
     from snowplow_s3_loader_spark.streaming.stateful import (

@@ -694,7 +694,7 @@ def q42_supplier_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.groupBy("l_suppkey")
         .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
     )
-    from snowplow_s3_loader_spark.operators.dedup import checkpoint_nostats
+    from snowplow_s3_loader_spark.materialize import checkpoint_nostats
 
     # |suppliers|-sized (bounded by the dimension, not the corpus):
     # materialize so the ranking's sample/counts/output passes don't
@@ -1203,7 +1203,7 @@ def q71_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep decisions); the audit output is materialized so every internal
     checkpoint is released here — one narrow (vec_id, ok) checkpoint is
     the query's only residue."""
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
 
     emb = load_table(spark, sf_dir, "embeddings")
     res, pairs, comps = similarity.semantic_dedup(
@@ -1474,7 +1474,7 @@ def q83_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("e")
     ).select("e.src", "e.dst")
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
 
     pr = graph.pagerank(edges, iterations=3)
     rows = pr.orderBy(F.col("rank_micro").desc(), "node").limit(20).collect()
@@ -1563,7 +1563,7 @@ def q106_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed once, only the frontier shuffles per round); the
     oracle replays it with a WITH RECURSIVE (node, dist) expansion +
     min(dist)."""
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
     from snowplow_s3_loader_spark.operators.graph import bfs_distances
 
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -1662,7 +1662,7 @@ def q110_cms_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     over that frame and the truth side reads it directly — only the
     doc_id%97 query slice touches raw text a second time."""
     from snowplow_s3_loader_spark.operators import sketches
-    from snowplow_s3_loader_spark.operators.dedup import checkpoint_nostats
+    from snowplow_s3_loader_spark.materialize import checkpoint_nostats
 
     docs = load_table(spark, sf_dir, "documents")
     counts = checkpoint_nostats(
@@ -1720,7 +1720,7 @@ def q112_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds: each node adopts its neighbors' most frequent label, ties
     to the minimum — the fixed schedule replays exactly in the
     oracle's unrolled two-round SQL (the q103 discipline)."""
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
     from snowplow_s3_loader_spark.operators.graph import label_propagation
 
     res = label_propagation(supplier_pairs(spark, sf_dir), iterations=2)
@@ -1747,7 +1747,7 @@ def q113_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     both independent half-stream bitmaps in a single pass before
     bit_or-merging them."""
     from snowplow_s3_loader_spark.operators import bitmap
-    from snowplow_s3_loader_spark.operators.dedup import checkpoint_nostats
+    from snowplow_s3_loader_spark.materialize import checkpoint_nostats
 
     ev = load_table(spark, sf_dir, "events").where(F.col("event_id") % 37 == 0)
     bm = checkpoint_nostats(bitmap.bitmap_agg(ev, ["event_type"], "user_id"))
@@ -2189,7 +2189,7 @@ def q91_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     wedges instead of deg^2 (Suri & Vassilvitskii). Exact counts, so
     the all-triples DuckDB oracle hash-matches."""
     from snowplow_s3_loader_spark.operators import graph
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
 
     res = graph.triangle_count(supplier_pairs(spark, sf_dir))
     rows = res.collect()  # |V|-bounded; frees the operator checkpoint below
@@ -2311,7 +2311,7 @@ def q98_bpe_tokenizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     touched once (word_counts); training rounds run on the
     vocabulary frame."""
     from snowplow_s3_loader_spark.operators import bpe
-    from snowplow_s3_loader_spark.operators.dedup import (
+    from snowplow_s3_loader_spark.materialize import (
         checkpoint_nostats,
         release_materialized,
     )
@@ -2361,7 +2361,7 @@ def q99_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier co-occurrence graph — 3 steps from every node; the walk
     choice (arg-min of md5(seed|walk|step|neighbor)) replays exactly in
     the DuckDB oracle's unrolled 3-level arg_min SQL."""
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
     from snowplow_s3_loader_spark.operators.graph import random_walks
 
     pairs = supplier_pairs(spark, sf_dir).select(
@@ -2436,7 +2436,7 @@ def q102_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     q91 slice), emitting one (node, is_match) row for EVERY graph node —
     membership AND core-degree divergence both flip bits; the oracle
     emits the SQL-enumerable node list with literal 1s."""
-    from snowplow_s3_loader_spark.operators.dedup import (
+    from snowplow_s3_loader_spark.materialize import (
         checkpoint_nostats,
         release_materialized,
     )
@@ -2473,7 +2473,7 @@ def q103_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_custkey").alias("src"),
         (F.lit(1_000_000) + F.col("l_suppkey")).alias("dst"),
     )
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
 
     res = graph.hits(edges, iterations=2)
     rows = res.collect()  # |V|-bounded
@@ -2755,9 +2755,7 @@ def q134_topo_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a WITH RECURSIVE path expansion + max(len) — the q106
     recursive-CTE pattern; path multiplicity stays bounded because
     divisor-DAG path counts are binomial in the depth."""
-    from snowplow_s3_loader_spark.operators.dedup import (
-        release_materialized,
-    )
+    from snowplow_s3_loader_spark.materialize import release_materialized
     from snowplow_s3_loader_spark.operators.graph import topological_layers
 
     nodes = (
@@ -2975,7 +2973,7 @@ def q142_unigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration 1's used pieces (singles floored at 1), rescored, and the
     entire DP/backtrack replayed. The corpus is touched once."""
     from snowplow_s3_loader_spark.operators import bpe
-    from snowplow_s3_loader_spark.operators.dedup import checkpoint_nostats
+    from snowplow_s3_loader_spark.materialize import checkpoint_nostats
     from snowplow_s3_loader_spark.operators.unigram import unigram_train
 
     docs = load_table(spark, sf_dir, "documents")
@@ -3056,7 +3054,7 @@ def q144_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     join would cost a full corpus exchange). The oracle replays the
     identical segmentation via the shared q142 recursive-CTE chain."""
     from snowplow_s3_loader_spark.operators import bpe, unigram
-    from snowplow_s3_loader_spark.operators.dedup import checkpoint_nostats
+    from snowplow_s3_loader_spark.materialize import checkpoint_nostats
 
     docs = load_table(spark, sf_dir, "documents")
     wc = checkpoint_nostats(bpe.word_counts(docs, "text"))
@@ -3099,7 +3097,7 @@ def q146_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus explode into the checkpointed feature frame; both models are
     bucket-bounded broadcasts; the oracle replays hash, smoothing,
     quantization and selection bit-for-bit."""
-    from snowplow_s3_loader_spark.operators.dedup import checkpoint_nostats
+    from snowplow_s3_loader_spark.materialize import checkpoint_nostats
     from snowplow_s3_loader_spark.operators.dsir import (
         dsir_select,
         dsir_weights,
@@ -3364,9 +3362,7 @@ def q157_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule). Exact counts + one closing double z expression."""
     from snowplow_s3_loader_spark.operators.profile import two_proportion_z
 
-    from snowplow_s3_loader_spark.operators.dedup import (
-        checkpoint_nostats,
-    )
+    from snowplow_s3_loader_spark.materialize import checkpoint_nostats
 
     ev = load_table(spark, sf_dir, "events").where(
         F.col("user_id").isNotNull()

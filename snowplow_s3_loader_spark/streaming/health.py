@@ -1,15 +1,17 @@
 """Health probe + app health — O14 (Environment.scala:66-98,
 RuntimeService.scala:15-25, core reference.conf:39-42).
 
-Healthy iff setup succeeded, neither sink has erred, and the last batch
-progress is younger than unhealthyLatency (2 min default)."""
+Healthy iff setup succeeded, neither sink has erred, and no batch has been
+in flight longer than unhealthyLatency (2 min default). As in the
+reference, the limit applies to work in flight, so an idle loader on a
+quiet stream stays healthy."""
 
 from __future__ import annotations
 
 import http.server
 import threading
-import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from time import monotonic
 
 
 @dataclass
@@ -18,21 +20,19 @@ class AppHealth:
     blob_sink_ok: bool = True
     bad_sink_ok: bool = True
     unhealthy_latency_seconds: float = 120.0
-    _last_progress: float = field(default_factory=time.monotonic)
+    _batch_started: float | None = None
 
-    def mark_progress(self) -> None:
-        self._last_progress = time.monotonic()
+    def batch_started(self) -> None:
+        self._batch_started = monotonic()
 
-    @property
-    def progress_age(self) -> float:
-        return time.monotonic() - self._last_progress
+    def batch_finished(self) -> None:
+        self._batch_started = None
 
-    def is_healthy(self, require_progress: bool = False) -> bool:
+    def is_healthy(self) -> bool:
         if not (self.setup_ok and self.blob_sink_ok and self.bad_sink_ok):
             return False
-        if require_progress and self.progress_age > self.unhealthy_latency_seconds:
-            return False
-        return True
+        started = self._batch_started
+        return started is None or monotonic() - started <= self.unhealthy_latency_seconds
 
 
 class HealthProbe:
@@ -44,19 +44,16 @@ class HealthProbe:
         self,
         health: AppHealth,
         port: int = 8000,
-        require_progress: bool = False,
         metrics_snapshot=None,
     ):
         self.health = health
         self.port = port
-        self.require_progress = require_progress
         self.metrics_snapshot = metrics_snapshot  # () -> dict[str, number]
         self._server: http.server.HTTPServer | None = None
         self._thread: threading.Thread | None = None
 
     def start(self) -> int:
         health = self.health
-        require_progress = self.require_progress
         snapshot = self.metrics_snapshot
 
         class Handler(http.server.BaseHTTPRequestHandler):
@@ -71,7 +68,7 @@ class HealthProbe:
                     self.end_headers()
                     self.wfile.write(body)
                     return
-                ok = health.is_healthy(require_progress)
+                ok = health.is_healthy()
                 self.send_response(200 if ok else 503)
                 self.end_headers()
                 self.wfile.write(b"OK" if ok else b"UNHEALTHY")

@@ -83,19 +83,13 @@ class LoaderPipeline:
         now = self.now_fn()
 
         if "payload" in batch_df.columns and "value" not in batch_df.columns:
-            if cfg.decompression.enabled:
-                lines = decompressed_stream(
-                    batch_df,
-                    limits=DecompressionLimits(
-                        cfg.decompression.max_bytes_in_batch,
-                        cfg.decompression.max_bytes_single_payload,
-                    ),
-                )
-            else:
-                lines = batch_df.select(
-                    F.col("payload").cast("string").alias("value"),
-                    F.lit(None).cast("string").alias("decompress_error"),
-                )
+            lines = decompressed_stream(
+                batch_df,
+                limits=DecompressionLimits(
+                    cfg.decompression.max_bytes_in_batch,
+                    cfg.decompression.max_bytes_single_payload,
+                ),
+            )
         else:
             lines = batch_df.withColumn("decompress_error", F.lit(None).cast("string"))
 
@@ -115,6 +109,7 @@ class LoaderPipeline:
         classified = (
             classify(lines, cfg.purpose).withColumn("__partition", F.when(is_good, pp)).persist()
         )
+        self.health.batch_started()
         try:
             # the batch's one sizing aggregate: the count metric, the
             # latency metric and the blob sink's byte cap and salt plan
@@ -175,11 +170,11 @@ class LoaderPipeline:
 
             # 4) checkpoint marker: foreachBatch returning = offsets commit
             self.actions.record("Checkpointed", batch_id)
-            self.health.mark_progress()
         except Exception:
             self.health.blob_sink_ok = False
             raise
         finally:
+            self.health.batch_finished()
             classified.unpersist()
 
     # ---------------- entry points ----------------

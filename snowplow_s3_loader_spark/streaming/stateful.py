@@ -6,6 +6,10 @@ keyed state beyond built-in windows).
 Pattern: GroupStateTimeout-driven per-key accumulators over Arrow batches.
 State stays bounded: one row per live key, evicted on processing-time
 timeout — the property that lets this run unbounded at 100 TB/day.
+Every operator here is built on applyInPandasWithState, which needs no
+dependency beyond pandas/pyarrow. Watermark-bounded exact dedup needs no
+operator of its own: Spark's ``withWatermark(...)
+.dropDuplicatesWithinWatermark(keys)`` already evicts keys past the delay.
 """
 
 from __future__ import annotations
@@ -43,50 +47,6 @@ def enable_rocksdb_state_store(spark) -> bool:
         return cur == ROCKSDB_PROVIDER
     spark.conf.set(key, ROCKSDB_PROVIDER)
     return True
-
-
-def streaming_first_seen(events: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Streaming exact-dedup across ALL history (not just a watermark window
-    like dropDuplicates): emits only the first-ever row per key, keyed
-    ValueState via the transformWithStateInPandas API (Spark 4).
-
-    Needs the RocksDB state store provider
-    (spark.sql.streaming.stateStore.providerClass) — keys at 100 TB scale
-    live off-heap with incremental checkpointing, not in executor memory.
-    Also needs `protobuf` (the transformWithState Python protocol dep; not
-    in this image, so the test is importorskip-gated). The
-    applyInPandasWithState operator below has no extra deps.
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = events.schema
-
-    class FirstSeen(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._seen = handle.getValueState("seen", "seen boolean")
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._seen.exists():
-                return
-            first = None
-            for pdf in rows:
-                if len(pdf) and first is None:
-                    first = pdf.iloc[[0]]
-            if first is not None:
-                self._seen.update((True,))
-                yield first
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy(*key_cols).transformWithStateInPandas(
-        FirstSeen(), outputStructType=out_schema, outputMode="Append", timeMode="None"
-    )
 
 
 RUNNING_COUNT_SCHEMA = StructType(
@@ -144,25 +104,6 @@ def running_user_counts(
                 else GroupStateTimeout.NoTimeout
             ),
         )
-    )
-
-
-def dedup_stream(
-    df: DataFrame,
-    key_cols: list[str],
-    watermark_col: str,
-    delay: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exact dedup — the streaming twin of operators.dedup.
-    exact_dedup: the first record per key is emitted, later duplicates are
-    dropped, and (unlike a naive dropDuplicates) the dedup STATE IS BOUNDED:
-    dropDuplicatesWithinWatermark evicts keys once the watermark passes
-    `delay`, so state size tracks the event-time window, not the full
-    stream history. At 100 TB/day this is the difference between a working
-    pipeline and an OOM — pick `delay` = the max expected duplicate skew
-    (e.g. the Kinesis producer's retry horizon)."""
-    return df.withWatermark(watermark_col, delay).dropDuplicatesWithinWatermark(
-        key_cols
     )
 
 

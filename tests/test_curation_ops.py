@@ -7,8 +7,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from snowplow_s3_loader_spark.materialize import release_materialized
 from snowplow_s3_loader_spark.operators import cdc, text
-from snowplow_s3_loader_spark.operators.dedup import release_materialized
 from snowplow_s3_loader_spark.operators.graph import pagerank
 
 # ---------------------------------------------------------------------------

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from snowplow_s3_loader_spark import materialize
 from snowplow_s3_loader_spark.operators import dedup, similarity
 from snowplow_s3_loader_spark.tables import load_table
 
@@ -203,7 +204,7 @@ def test_token_jaccard_leaves_no_sql_cache_behind(spark):
     # result's own (result-sized) checkpoint blocks may remain
     jsc = spark.sparkContext._jsc.sc()
     assert jsc.getPersistentRDDs().size() <= before + 1
-    dedup.release_materialized(out)
+    materialize.release_materialized(out)
     assert jsc.getPersistentRDDs().size() <= before
 
 
@@ -338,7 +339,7 @@ def test_semantic_dedup_releases_internal_checkpoints(spark):
     no blocks this call created remain."""
     import numpy as np
 
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
     from snowplow_s3_loader_spark.operators.similarity import semantic_dedup
 
     rng = np.random.default_rng(5)
@@ -380,7 +381,7 @@ def test_sweep_checkpoint_blocks_keeps_cached_tables(spark):
     cached_ids, ckpt_ids = ids1 - ids0, persisted() - ids1
     assert cached_ids and ckpt_ids
     try:
-        dedup.sweep_checkpoint_blocks(spark)
+        materialize.sweep_checkpoint_blocks(spark)
         after = persisted()
         assert not ckpt_ids & after
         assert cached_ids <= after
@@ -470,7 +471,7 @@ def test_semantic_dedup_shared_components_audit_single_residue(spark):
     three inputs exactly one checkpoint (the audit output) remains."""
     import numpy as np
 
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
     from snowplow_s3_loader_spark.operators.similarity import (
         semantic_dedup,
         semantic_dedup_audit,
@@ -509,9 +510,9 @@ def test_containment_pairs_asymmetric_and_exact(spark):
     candidates reproduce brute force exactly."""
     from pyspark.sql import functions as F
 
+    from snowplow_s3_loader_spark.materialize import release_materialized
     from snowplow_s3_loader_spark.operators.dedup import (
         containment_pairs,
-        release_materialized,
         token_jaccard_pairs,
     )
 

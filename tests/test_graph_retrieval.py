@@ -626,7 +626,7 @@ def _k_core_py(edges, k):
 def test_k_core_matches_python_reference(spark):
     import random
 
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
     from snowplow_s3_loader_spark.operators.graph import k_core
 
     rnd = random.Random(3)
@@ -640,7 +640,7 @@ def test_k_core_matches_python_reference(spark):
 
 
 def test_k_core_peels_tail_keeps_clique(spark):
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
     from snowplow_s3_loader_spark.operators.graph import k_core
 
     # 5-clique with a pendant chain hanging off it: 3-core = the clique
@@ -676,7 +676,7 @@ def _hits_py(edges, iterations, scale=10**6):
 
 
 def test_hits_matches_python_reference(spark):
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
     from snowplow_s3_loader_spark.operators.graph import hits
 
     edges = [(1, 2), (1, 3), (2, 3), (3, 4), (4, 1), (2, 4), (5, 3), (1, 2)]
@@ -689,7 +689,7 @@ def test_hits_matches_python_reference(spark):
 
 
 def test_hits_directory_node_is_hub_not_authority(spark):
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
     from snowplow_s3_loader_spark.operators.graph import hits
 
     # node 0 links to all popular pages but nothing links to it;
@@ -711,7 +711,7 @@ def test_random_walks_result_is_releasable(spark):
     frees ALL blocks the operator created (a lazy union over the
     internal adjacency would leak it forever — round-7 review
     finding)."""
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
     from snowplow_s3_loader_spark.operators.graph import random_walks
 
     def checkpoint_blocks() -> int:

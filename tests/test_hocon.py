@@ -217,8 +217,8 @@ def test_unquoted_string_value_runs_to_eol():
 
 
 def test_env_bool_env_override_parsing(tmp_path, monkeypatch):
-    """ADVICE fix: SNOWPLOW_DECOMPRESSION__ENABLED=false must disable
-    decompression, and env-provided stream names must flip kind to kinesis
+    """SNOWPLOW_LICENSE__ACCEPT=false must override a file that accepts the
+    licence, and env-provided stream names must flip kind to kinesis
     despite the env layer lowercasing keys."""
     p = tmp_path / "c.json"
     p.write_text(
@@ -226,9 +226,9 @@ def test_env_bool_env_override_parsing(tmp_path, monkeypatch):
         '"input":{"path":"/tmp/in"},"output":{"good":{"path":"/tmp/out"},'
         '"bad":{"path":"/tmp/bad"}}}'
     )
-    monkeypatch.setenv("SNOWPLOW_DECOMPRESSION__ENABLED", "false")
+    monkeypatch.setenv("SNOWPLOW_LICENSE__ACCEPT", "false")
     monkeypatch.setenv("SNOWPLOW_INPUT__STREAMNAME", "env-stream")
     cfg = load_config(str(p))
-    assert cfg.decompression.enabled is False
+    assert cfg.license_accept is False
     assert cfg.input.kind == "kinesis"
     assert cfg.input.stream_name == "env-stream"

@@ -358,6 +358,62 @@ def test_health_probe(spark, tmp_path):
         probe.stop()
 
 
+def test_health_fails_on_batch_in_flight_past_unhealthy_latency(spark, tmp_path, monkeypatch):
+    """unhealthyLatency bounds how long a batch may stay in flight: the
+    probe answers 503 while one runs past it, and 200 once it finishes,
+    however long the loader then idles."""
+    import threading
+    import urllib.error
+    import urllib.request
+
+    from snowplow_s3_loader_spark.sinks.bad_sink import FileBadSink
+    from snowplow_s3_loader_spark.streaming import health as health_mod
+
+    clock = [1000.0]
+    monkeypatch.setattr(health_mod, "monotonic", lambda: clock[0])
+    entered, release = threading.Event(), threading.Event()
+
+    class BlockingBadSink(FileBadSink):
+        def send_df(self, df, row_col="row"):
+            entered.set()
+            assert release.wait(120)
+            return super().send_df(df, row_col)
+
+    cfg = _cfg(tmp_path, monitoring={"healthProbe": {"unhealthyLatency": "30 seconds"}})
+    p = LoaderPipeline(
+        spark, cfg, bad_sink=BlockingBadSink(str(tmp_path / "bad")), now_fn=lambda: NOW
+    )
+    # what app.main does with the configured value
+    p.health.unhealthy_latency_seconds = cfg.monitoring.health_probe.unhealthy_latency_seconds
+    probe = health_mod.HealthProbe(p.health, port=0)
+    port = probe.start()
+
+    def status():
+        try:
+            return urllib.request.urlopen(f"http://127.0.0.1:{port}/health").status
+        except urllib.error.HTTPError as e:
+            return e.code
+
+    batch = threading.Thread(target=p.run_batch, args=(_lines_df(spark, [_enriched()]),))
+    batch.start()
+    try:
+        assert entered.wait(120)
+        clock[0] += 29
+        assert status() == 200  # in flight, within the limit
+        clock[0] += 2
+        assert status() == 503  # in flight past the limit
+        release.set()
+        batch.join(120)
+        assert not batch.is_alive()
+        assert p.actions.kinds()[-1] == "Checkpointed"
+        assert status() == 200  # finished
+        clock[0] += 3600
+        assert status() == 200  # idle for an hour
+    finally:
+        release.set()
+        probe.stop()
+
+
 # ---- job census: the fixed per-batch cost -----------------------------------
 
 

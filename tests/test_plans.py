@@ -341,7 +341,7 @@ def test_connected_components_round_join_is_co_partitioned(spark, sf_dir):
     partitioning of the checkpointed frames: edges (on d) x labels (on v)
     join with NO Exchange under the join — only the groupBy repartition
     shuffles (round-5 shape)."""
-    from snowplow_s3_loader_spark.operators.dedup import (
+    from snowplow_s3_loader_spark.materialize import (
         checkpoint_nostats,
         release_materialized,
     )
@@ -405,7 +405,7 @@ def test_checkpoint_nostats_trust_claim_verified(spark, sf_dir):
     producing wrong co-partitioned joins downstream."""
     import pytest
 
-    from snowplow_s3_loader_spark.operators.dedup import (
+    from snowplow_s3_loader_spark.materialize import (
         checkpoint_nostats,
         release_materialized,
     )
@@ -470,7 +470,7 @@ def test_pagerank_round_join_is_co_partitioned(spark, sf_dir):
     """The PageRank loop's per-round rank-to-adjacency join must reuse
     the advertised hash layouts (adj on s, ranks on node) — zero
     Exchange under the join, exactly the CC round-join shape."""
-    from snowplow_s3_loader_spark.operators.dedup import (
+    from snowplow_s3_loader_spark.materialize import (
         checkpoint_nostats,
         release_materialized,
     )
@@ -545,7 +545,7 @@ def test_triangle_wedge_stream_shuffle_structure(spark):
       Exchange at all;
     - fallback path: exactly the two Exchanges of the (v, w) closure
       semi join sides."""
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
     from snowplow_s3_loader_spark.operators.graph import _oriented_closed_wedges
 
     pairs = spark.createDataFrame(
@@ -825,7 +825,7 @@ def test_link_prediction_wedge_join_co_partitioned(spark):
     nested-loop join exists anywhere. On the small-graph path the only
     Exchange left in the whole lazy pipeline is the candidate groupBy's
     — everything else rides broadcasts over the checkpoints."""
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
     from snowplow_s3_loader_spark.operators.graph import _linkpred_plan
 
     pairs = spark.createDataFrame(

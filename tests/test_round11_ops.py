@@ -6,6 +6,36 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 
+def scan_io_metrics(df) -> dict[str, int]:
+    """Executed-plan file-scan metrics for an ALREADY-EXECUTED frame
+    (call an action first): sums numFiles / filesSize / numPartitions
+    across every FileSourceScan in the plan. This is the measurement
+    the bucket-pruning contract is stated in — probe I/O must be the
+    hit buckets' bytes, not the store's."""
+    out = {"numFiles": 0, "filesSize": 0, "numPartitions": 0}
+
+    def _walk(node):
+        name = node.getClass().getSimpleName()
+        if "FileSourceScan" in name:
+            m = node.metrics()
+            for k in out:
+                if m.contains(k):
+                    out[k] += m.apply(k).value()
+        if name == "AdaptiveSparkPlanExec":
+            _walk(node.executedPlan())
+        # AQE query-stage nodes are LEAVES (children() is empty) whose
+        # subtree hangs off .plan — without descending, any plan with
+        # an exchange reads as numFiles=0 and the pruning contract
+        # silently reports "no I/O"
+        if name.endswith("QueryStageExec"):
+            _walk(node.plan())
+        for i in range(node.children().size()):
+            _walk(node.children().apply(i))
+
+    _walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
 def _snapshot(spark, r, n):
     """Deterministic snapshot: fresh ids per round; 25% of round r>0's
     texts replay round r-1's fresh text keys (guaranteed store hits)."""
@@ -81,8 +111,6 @@ class TestBandStorePruning:
             mode="overwrite",
         )
         # tiny probe: 3 docs x 4 bands -> at most 12 of 64 buckets
-        from snowplow_s3_loader_spark.operators.dedup import scan_io_metrics
-
         probe = minhash_bands(_snapshot(spark, 1, 3), "doc_id", "text")
         pruned = read_band_store_pruned(probe, path, n_buckets=64)
         pruned.collect()

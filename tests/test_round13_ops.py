@@ -123,9 +123,7 @@ class TestNarrowRankingInputMaterialization:
             F.col("id").alias("doc_id"), w_udf(F.col("id")).alias("w")
         )
         out = token_shards(docs, "doc_id", "w", 8)
-        from snowplow_s3_loader_spark.operators.dedup import (
-            release_materialized,
-        )
+        from snowplow_s3_loader_spark.materialize import release_materialized
 
         try:
             # noop sink, NOT count(): count() lets Catalyst prune the weight

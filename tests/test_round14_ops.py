@@ -14,7 +14,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from snowplow_s3_loader_spark.operators.dedup import (
+from snowplow_s3_loader_spark.materialize import (
     checkpoint_nostats,
     checkpoint_nostats_counted,
     release_materialized,
@@ -69,7 +69,7 @@ class TestCountedCheckpoint:
 
     def test_single_action_not_checkpoint_plus_count(self, spark):
         """The fused count must cost exactly the checkpoint's own job;
-        the old shape (eager checkpoint, then DataFrame count) pays at
+        the old shape (checkpoint, then a DataFrame count) pays at
         least one more. Non-vacuity: the two probes run the same plan
         and the assertion fails on the pre-round-14 shape."""
         df = spark.range(20000).selectExpr("id % 11 as k", "id as v")

@@ -8,9 +8,9 @@ from collections import deque
 import pytest
 from pyspark.sql import functions as F
 
+from snowplow_s3_loader_spark.materialize import release_materialized
 from snowplow_s3_loader_spark.operators.behavior import transition_matrix
 from snowplow_s3_loader_spark.operators.cdc import snapshot_diff
-from snowplow_s3_loader_spark.operators.dedup import release_materialized
 from snowplow_s3_loader_spark.operators.graph import bfs_distances
 from snowplow_s3_loader_spark.operators.timeseries import rolling_anomalies
 
@@ -307,7 +307,7 @@ def _lpa_ref(pairs, iterations):
 
 class TestLabelPropagation:
     def test_matches_reference_on_two_communities(self, spark):
-        from snowplow_s3_loader_spark.operators.dedup import release_materialized
+        from snowplow_s3_loader_spark.materialize import release_materialized
         from snowplow_s3_loader_spark.operators.graph import label_propagation
 
         # two dense cliques joined by one bridge edge
@@ -325,7 +325,7 @@ class TestLabelPropagation:
                 assert got == _lpa_ref(pairs, iters), (iters, thresh)
 
     def test_deterministic_tie_break_and_dirty_input(self, spark):
-        from snowplow_s3_loader_spark.operators.dedup import release_materialized
+        from snowplow_s3_loader_spark.materialize import release_materialized
         from snowplow_s3_loader_spark.operators.graph import label_propagation
 
         # a 4-cycle: every node has two neighbors with distinct labels ->
@@ -340,7 +340,7 @@ class TestLabelPropagation:
             assert got == _lpa_ref(clean, 2), thresh
 
     def test_releases_blocks(self, spark):
-        from snowplow_s3_loader_spark.operators.dedup import release_materialized
+        from snowplow_s3_loader_spark.materialize import release_materialized
         from snowplow_s3_loader_spark.operators.graph import label_propagation
 
         sc = spark.sparkContext
@@ -412,23 +412,6 @@ class TestBitmapDistinct:
         # the bitmap path may emit 0-count rows for pairs sharing a
         # word but no bit; everything non-zero must match exactly
         assert {k: v for k, v in got.items() if v} == want
-
-    def test_intersect_cardinality_grouped(self, spark):
-        from snowplow_s3_loader_spark.operators import bitmap
-
-        a = spark.createDataFrame(
-            [("g", 1), ("g", 2), ("g", 130), ("h", 7)], "k string, uid long"
-        )
-        b = spark.createDataFrame(
-            [("g", 2), ("g", 130), ("g", 131), ("h", 8)], "k string, uid long"
-        )
-        bma = bitmap.bitmap_agg(a, ["k"], "uid")
-        bmb = bitmap.bitmap_agg(b, ["k"], "uid")
-        got = {
-            r["k"]: r["n_common"]
-            for r in bitmap.bitmap_intersect_cardinality(bma, bmb, ["k"]).collect()
-        }
-        assert got == {"g": 2, "h": 0}
 
 
 def _skyline_ref(pts, maximize):
@@ -1712,33 +1695,6 @@ class TestWinnowFingerprints:
             winnow_fingerprints(df, "doc_id", "text", k=3, w=1)
 
 
-class TestWinnowMatches:
-    def test_overlap_pairs_and_boilerplate_cutoff(self, spark):
-        from snowplow_s3_loader_spark.operators.text import (
-            winnow_fingerprints,
-            winnow_matches,
-        )
-
-        shared = "the quick brown fox jumps over the lazy dog again today"
-        boiler = "copyright footer all rights reserved contact us terms"
-        docs = [
-            (1, shared + " unique tail alpha beta gamma delta"),
-            (2, "prefix words here " + shared + " other ending"),
-            (3, "completely unrelated text about database engines and joins"),
-        ] + [(10 + i, boiler + f" page number {i}") for i in range(6)]
-        df = spark.createDataFrame(docs, "doc_id long, text string")
-        fp = winnow_fingerprints(df, "doc_id", "text", k=3, w=4)
-        pairs = {
-            (r["id_a"], r["id_b"]): r["shared_fingerprints"]
-            for r in winnow_matches(fp, "doc_id", max_df=4, min_shared=2).collect()
-        }
-        assert (1, 2) in pairs  # the true near-dup pair survives
-        # the 6-doc boilerplate cluster's fingerprints exceed max_df=4:
-        # no boilerplate-only pair may appear
-        assert not any(a >= 10 and b >= 10 for a, b in pairs), pairs
-        assert not any((a, b) == (1, 3) or (a, b) == (2, 3) for a, b in pairs)
-
-
 def _acf_ref(xs, max_lag):
     """Textbook ACF on integers: exact numerators/denominator via the
     n^2-cleared mean, ratio as one float division."""
@@ -1824,7 +1780,7 @@ def _chi2_ref(pairs):
 
 class TestAssociationComponents:
     def _run(self, spark, pairs):
-        from snowplow_s3_loader_spark.operators.dedup import release_materialized
+        from snowplow_s3_loader_spark.materialize import release_materialized
         from snowplow_s3_loader_spark.operators.profile import (
             association_components,
         )

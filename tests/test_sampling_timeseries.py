@@ -132,10 +132,6 @@ def test_fake_decode_and_downsample_shapes():
     again = multimodal.fake_decode_image(b"payload", 16, 16, 3)
     assert (img == again).all()
     assert not (img == multimodal.fake_decode_image(b"other", 16, 16, 3)).all()
-    ds = multimodal.downsample_image(img, 2)
-    assert ds.shape == (8, 8, 3)
-    # mean-pool preserves the global mean
-    assert abs(ds.mean() - img.mean()) < 1e-9
 
 
 def test_image_channel_stats_batch_pipeline(spark):
@@ -401,49 +397,6 @@ def test_group_reservoir_deterministic_and_capped(spark):
     )
     got2 = {(r["grp"], r["id"]) for r in out2.collect()}
     assert got1 == got2
-
-
-def test_leakage_safe_split_by_pairs_contract(spark):
-    """Convenience wrapper: pairs -> CC -> coalesce-keyed split, returned
-    as a narrow materialized (id, split) assignment with the internal
-    component checkpoint released; clusters co-assign, singletons get
-    id-keyed assignments identical to leakage_safe_split on their own id."""
-    from pyspark.sql import functions as F
-
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
-    from snowplow_s3_loader_spark.operators.sampling import (
-        leakage_safe_split,
-        leakage_safe_split_by_pairs,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"doc {i}") for i in range(30)], "doc_id long, text string"
-    )
-    pairs = spark.createDataFrame(
-        [(0, 1), (1, 2), (7, 8)], "id_a long, id_b long"
-    )
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
-    out = leakage_safe_split_by_pairs(
-        docs, "doc_id", pairs, {"train": 0.6, "test": 0.4}
-    )
-    got = {r["doc_id"]: r["split"] for r in out.collect()}
-    # one releasable checkpoint (the assignment itself)
-    assert jsc.getPersistentRDDs().size() <= before + 1
-    assert set(out.columns) == {"doc_id", "split"}
-    assert len(got) == 30
-    assert len({got[0], got[1], got[2]}) == 1
-    assert got[7] == got[8]
-    # singletons match the plain id-keyed assignment
-    singles = leakage_safe_split(
-        docs.where(~F.col("doc_id").isin(0, 1, 2, 7, 8)),
-        F.col("doc_id"),
-        {"train": 0.6, "test": 0.4},
-    )
-    want = {r["doc_id"]: r["split"] for r in singles.collect()}
-    assert all(got[k] == v for k, v in want.items())
-    release_materialized(out)
-    assert jsc.getPersistentRDDs().size() <= before
 
 
 def test_token_budget_mixture_semantics(spark, sf_dir):

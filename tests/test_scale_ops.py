@@ -411,23 +411,6 @@ def test_ivf_centroids_persist_as_parquet(spark, sf_dir, tmp_path):
     assert run(cents) == run(reloaded) != []
 
 
-def test_pca_model_roundtrip(spark, sf_dir, tmp_path):
-    import numpy as np
-
-    from snowplow_s3_loader_spark.operators.similarity import (
-        pca_fit, pca_load, pca_project, pca_save,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    mean, comps, evals = pca_fit(emb, "embedding", 4)
-    pca_save(str(tmp_path / "pca"), mean, comps, evals)
-    m2, c2, e2 = pca_load(str(tmp_path / "pca"))
-    assert np.array_equal(mean, m2) and np.array_equal(comps, c2) and np.array_equal(evals, e2)
-    a = pca_project(emb, "embedding", mean, comps).select("pca").limit(5).collect()
-    b = pca_project(emb, "embedding", m2, c2).select("pca").limit(5).collect()
-    assert [r["pca"] for r in a] == [r["pca"] for r in b]
-
-
 def test_bloom_reserved_columns_and_param_guards(spark):
     df = spark.range(5).select(F.col("id").alias("k"), F.lit(1).alias("__bloom_bits"))
     keys = spark.range(5).select(F.col("id").alias("k"))
@@ -729,7 +712,7 @@ def _bpe_py(words: dict, n_merges: int):
 
 def test_bpe_train_matches_python_reference(spark):
     from snowplow_s3_loader_spark.operators import bpe
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
 
     texts = [
         "low low low lower lowest",
@@ -762,7 +745,7 @@ def test_bpe_merge_fold_is_left_to_right_nonoverlapping(spark):
 
 def test_bpe_encode_joins_trained_segmentation(spark):
     from snowplow_s3_loader_spark.operators import bpe
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
 
     train = spark.createDataFrame([(1, "ab ab ab cd")], "id long, text string")
     merges, vocab = bpe.bpe_train(train, "text", 1)
@@ -779,7 +762,7 @@ def test_bpe_train_validates_and_handles_exhaustion(spark):
     import pytest as _pytest
 
     from snowplow_s3_loader_spark.operators import bpe
-    from snowplow_s3_loader_spark.operators.dedup import release_materialized
+    from snowplow_s3_loader_spark.materialize import release_materialized
 
     df = spark.createDataFrame([(1, "x y")], "id long, text string")
     with _pytest.raises(ValueError):

@@ -31,52 +31,6 @@ def _run_collect(spark, in_dir, ckpt):
     return {r["user_id"]: (r["n_events"], r["total_val"]) for r in collected}
 
 
-def test_streaming_first_seen_dedup(spark, tmp_path):
-    """transformWithStateInPandas: first-ever-seen dedup across restarts
-    (unbounded history, unlike watermarked dropDuplicates)."""
-    import pytest
-
-    # the transformWithState Python protocol needs protobuf (not in image)
-    pytest.importorskip("google.protobuf")
-    from snowplow_s3_loader_spark.streaming.stateful import streaming_first_seen
-
-    in_dir = tmp_path / "fs_in"
-    _write(in_dir, "b1.csv", [(1, 10), (1, 20), (2, 30)])
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        def run():
-            src = spark.readStream.schema("user_id int, val int").csv(str(in_dir))
-            got: list = []
-            q = (
-                streaming_first_seen(src, ["user_id"])
-                .writeStream.foreachBatch(lambda df, bid: got.extend(df.collect()))
-                .outputMode("append")
-                .option("checkpointLocation", str(tmp_path / "fs_ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-            return {(r["user_id"], r["val"]) for r in got}
-
-        first = run()
-        assert first == {(1, 10), (2, 30)}  # only first row per user
-
-        # restart with a new file: user 1 already seen -> suppressed forever
-        _write(in_dir, "b2.csv", [(1, 99), (3, 7)])
-        second = run()
-        assert second == {(3, 7)}
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
 def test_running_user_counts_across_batches(spark, tmp_path):
     in_dir = tmp_path / "in"
     ckpt = tmp_path / "ckpt"

@@ -132,41 +132,6 @@ def test_engine_sql_facade(spark, sf_dir):
     )
 
 
-def test_dedup_stream_drops_duplicates_with_bounded_state(spark, tmp_path):
-    """dedup_stream: duplicate keys collapse to one row; state is
-    watermark-bounded (documented contract; Spark evicts on watermark)."""
-    import json as _json
-
-    from snowplow_s3_loader_spark.streaming.stateful import dedup_stream
-
-    src = tmp_path / "in"
-    src.mkdir()
-    rows = [
-        {"event_id": 1, "ts": "2026-01-01T00:00:01"},
-        {"event_id": 1, "ts": "2026-01-01T00:00:02"},  # dup, inside window
-        {"event_id": 2, "ts": "2026-01-01T00:00:03"},
-        {"event_id": 2, "ts": "2026-01-01T00:00:03"},  # exact dup
-        {"event_id": 3, "ts": "2026-01-01T00:00:04"},
-    ]
-    (src / "a.json").write_text("\n".join(_json.dumps(r) for r in rows))
-    stream = (
-        spark.readStream.schema("event_id long, ts string")
-        .json(str(src))
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    deduped = dedup_stream(stream, ["event_id"], "ts", delay="5 minutes")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    got = sorted(r["event_id"] for r in spark.sql("SELECT * FROM dedup_out").collect())
-    assert got == [1, 2, 3]
-
-
 def test_curation_operators_compose_on_documents(spark, sf_dir):
     """The curation operators run end to end on the documents table."""
     from pyspark.sql import functions as F
