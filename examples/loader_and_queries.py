@@ -40,15 +40,16 @@ def main() -> None:
         }
     )
     pipeline = LoaderPipeline(spark, cfg)
-    lines = spark.createDataFrame(
+    # records arrive as a binary `payload` column, the shape every source gives
+    records = spark.createDataFrame(
         [
-            ('{"schema": "iglu:com.example/click/jsonschema/1-0-0", "data": {"x": 1}}',),
-            ('{"schema": "iglu:com.example/view/jsonschema/1-0-0", "data": {"y": 2}}',),
-            ("{not json",),
+            (b'{"schema": "iglu:com.example/click/jsonschema/1-0-0", "data": {"x": 1}}',),
+            (b'{"schema": "iglu:com.example/view/jsonschema/1-0-0", "data": {"y": 2}}',),
+            (b"{not json",),
         ],
-        "value string",
+        "payload binary",
     )
-    pipeline.run_batch(lines)  # streaming: pipeline.run_stream(file_stream(...))
+    pipeline.run_batch(records)  # streaming: pipeline.run_stream(file_stream(...))
     for path in sorted(glob.glob(f"{work}/out/**/*.gz", recursive=True)):
         with gzip.open(path, "rt") as f:
             print("blob", os.path.relpath(path, work), "->", f.read().strip())

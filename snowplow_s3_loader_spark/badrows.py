@@ -11,16 +11,18 @@ Envelopes follow the public Snowplow badrows self-describing-JSON contract
 so downstream bad-row consumers / recovery tooling can parse the dead-letter
 output exactly as they parse the reference's.
 
-Column-expression implementation: build the envelope struct with to_json,
-then apply the size-violation rule — a serialized bad row whose byte length
-is >= maxRecordSize is replaced by a SizeViolation wrapper (with the original
+One column-expression serializer, `bad_row_column`, builds every bad row
+the loader emits: the envelope struct (LoaderParsingError for
+decompression failures, GenericError for parse failures) through to_json,
+then the size-violation rule — a serialized bad row whose byte length is
+>= maxRecordSize is replaced by a SizeViolation wrapper (with the original
 size recorded in actualSizeBytes) whose payload is trimmed to
 maxRecordSize/10 characters (BadRowsSerializer.scala:24-44).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 PROCESSOR_NAME = "snowplow-s3-loader-spark"
@@ -60,7 +62,7 @@ def _iso_instant(timestamp: Column) -> Column:
     )
 
 
-def generic_error(value: Column, message: Column, timestamp: Column) -> Column:
+def _generic_error(value: Column, message: Column, timestamp: Column) -> Column:
     """BadRow.GenericError: processor, Failure.GenericFailure{timestamp,
     errors}, base64 raw payload (Processing.scala:189-204, which base64-encodes
     the buffer into Payload.RawPayload)."""
@@ -77,7 +79,7 @@ def generic_error(value: Column, message: Column, timestamp: Column) -> Column:
     )
 
 
-def loader_parsing_error(value: Column, message: Column, timestamp: Column) -> Column:
+def _loader_parsing_error(value: Column, message: Column, timestamp: Column) -> Column:
     """BadRow.LoaderParsingError — decompression failures wrapped as
     ParsingError.RowDecodingError(UnhandledRowDecodingError(msg)) over the raw
     (NOT base64) payload (Processing.scala:156-165)."""
@@ -99,20 +101,24 @@ def loader_parsing_error(value: Column, message: Column, timestamp: Column) -> C
     )
 
 
-def serialize_with_max_size(bad_row: Column, timestamp: Column, max_record_size: int) -> Column:
-    """Serialized bad row, size-capped (BadRowsSerializer.scala:24-44).
+def bad_row_column(max_record_size: int) -> Column:
+    """The serialized, size-capped bad row of one classified row:
+    decompression failures as LoaderParsingError, parse failures as
+    GenericError (Processing.scala:156-165, 189-204). Reads `value`,
+    `decompress_error` and `bad_message`, and the flush time from the
+    batch's `__now` column."""
+    value, err, now = F.col("value"), F.col("decompress_error"), F.col("__now")
+    serialized = F.when(
+        err.isNotNull(), F.to_json(_loader_parsing_error(value, err, now))
+    ).otherwise(F.to_json(_generic_error(value, F.col("bad_message"), now)))
+    return _cap_serialized_size(serialized, now, max_record_size).alias("row")
 
-    If the JSON serialization is >= max_record_size bytes, emit a
-    SizeViolation envelope instead, recording the original byte size in
-    actualSizeBytes, with the original serialization trimmed to
-    max_record_size/10 characters.
-    """
-    return cap_serialized_size(F.to_json(bad_row), timestamp, max_record_size)
 
-
-def cap_serialized_size(serialized: Column, timestamp: Column, max_record_size: int) -> Column:
-    """The size rule of serialize_with_max_size over an already-serialized
-    bad row, so one capped column can pick between envelope types."""
+def _cap_serialized_size(serialized: Column, timestamp: Column, max_record_size: int) -> Column:
+    """The size rule of BadRowsSerializer.scala:24-44: a serialization of
+    max_record_size bytes or more becomes a SizeViolation envelope that
+    records the original byte size in actualSizeBytes and carries the
+    original serialization trimmed to max_record_size/10 characters."""
     trimmed = F.substring(serialized, 1, max_record_size // 10)
     size_violation = F.to_json(
         F.struct(
@@ -132,21 +138,3 @@ def cap_serialized_size(serialized: Column, timestamp: Column, max_record_size: 
     return F.when(
         F.octet_length(serialized) >= F.lit(max_record_size), size_violation
     ).otherwise(serialized)
-
-
-def build_bad_rows(
-    classified: DataFrame,
-    timestamp: Column,
-    max_record_size: int = 6_900_000,
-    value_col: str = "value",
-) -> DataFrame:
-    """From classified rows (bad_message != NULL) to serialized bad-row lines.
-
-    max_record_size default mirrors the reference's Kinesis output cap
-    (config.aws.reference.hocon `output.bad.maxRecordSize` ~ 6900000).
-    """
-    bad = classified.filter(F.col("bad_message").isNotNull())
-    envelope = generic_error(F.col(value_col), F.col("bad_message"), timestamp)
-    return bad.select(
-        serialize_with_max_size(envelope, timestamp, max_record_size).alias("bad_row_json")
-    )

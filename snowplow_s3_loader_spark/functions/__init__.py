@@ -8,7 +8,6 @@ push/prune/fold them and whole-stage codegen keeps the hot path off Python.
 from snowplow_s3_loader_spark.functions.iglu import (  # noqa: F401
     iglu_schema_key,
     is_valid_iglu_uri,
-    sdj_schema_uri,
 )
 from snowplow_s3_loader_spark.functions.timestamps import (  # noqa: F401
     enriched_collector_tstamp,

@@ -14,15 +14,6 @@ from pyspark.sql import functions as F
 from snowplow_s3_loader_spark.igluschema import IGLU_URI_REGEXP
 
 
-def sdj_schema_uri(value: Column) -> Column:
-    """Extract the `schema` field from a self-describing JSON line.
-
-    NULL when the line is not valid JSON or has no `schema` field — the two
-    bad-row conditions of Processing.scala:181-187 collapse into NULL here.
-    """
-    return F.get_json_object(value, "$.schema")
-
-
 def is_valid_iglu_uri(uri: Column) -> Column:
     return uri.rlike(IGLU_URI_REGEXP)
 

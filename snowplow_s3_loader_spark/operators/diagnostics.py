@@ -8,8 +8,8 @@ straggler task runs for hours) and a join whose per-key output
 multiplies into more rows than either input (the "accidental
 many-to-many"). Both are diagnosable CHEAPLY before running the
 expensive job, from per-key count frames alone; these operators are
-that pre-flight check, the measurement twin of the salting operators
-in `skew.py` (which are the fix).
+that pre-flight check, the measurement twin of the salted join in
+`skew.py` (the fix for a skewed join).
 
 Everything is exact BIGINT arithmetic on aggregated |keys|-sized
 frames — the raw tables are scanned once each and never joined; ratios

@@ -84,11 +84,3 @@ def _classify_sdj(df: DataFrame, value_col: str) -> DataFrame:
         .withColumn("collector_tstamp", F.lit(None).cast("timestamp"))
         .withColumn("bad_message", bad)
     )
-
-
-def good_rows(classified: DataFrame) -> DataFrame:
-    return classified.filter(F.col("bad_message").isNull())
-
-
-def bad_rows(classified: DataFrame) -> DataFrame:
-    return classified.filter(F.col("bad_message").isNotNull())

@@ -1,20 +1,13 @@
-"""Skew-mitigation utilities: salted joins and two-phase salted
-aggregation.
+"""Skew-mitigation utility: the replicate-salted join.
 
 AQE (enabled by session.py) already re-plans most batch skew: it splits
 oversized shuffle partitions and handles skewed sort-merge joins by
-range-splitting the hot partition. These helpers cover the cases AQE
-cannot touch:
-
-- **Structured Streaming** stateful aggregations: micro-batch plans are
-  not adaptively re-planned, and a hot group key funnels every record
-  for that key through one task, batch after batch. Two-phase salted
-  aggregation spreads the hot key over `n_salt` tasks and combines.
-- **Replicate-salted joins** when the skewed side must HASH-join (e.g.
-  the build side is modest but above the broadcast threshold, or the
-  join feeds a co-partitioned downstream stage AQE must not re-shard):
-  the big side salts deterministically, the small side replicates
-  `n_salt` times, and no single task owns a hot key alone.
+range-splitting the hot partition. This helper covers a case AQE
+cannot touch: a skewed side that must HASH-join (e.g. the build side is
+modest but above the broadcast threshold, or the join feeds a
+co-partitioned downstream stage AQE must not re-shard). The big side salts
+deterministically, the small side replicates `n_salt` times, and no single
+task owns a hot key alone.
 
 Salt is content-derived (`xxhash64` over the row), never `rand()`: task
 retries and speculative duplicates recompute identical salts, so
@@ -93,44 +86,3 @@ def salted_join(
         _SALT, F.explode(F.array(*[F.lit(i) for i in range(n_salt)]))
     )
     return big_s.join(small_s, on + [_SALT], how).drop(_SALT)
-
-
-def salted_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    aggs: dict[str, tuple[str, str]],
-    n_salt: int = 16,
-) -> DataFrame:
-    """Two-phase salted aggregation for skewed group keys in plans that
-    can't rely on map-side partial aggregation to absorb the skew
-    (streaming micro-batches; any agg following a cached/pre-shuffled
-    subtree that already co-partitioned the hot key onto one task).
-
-    `aggs` maps output column -> (input column, fn) where fn is one of
-    the algebraic functions 'sum' | 'count' | 'min' | 'max' (those whose
-    partial results combine with the same shape: partial counts SUM,
-    partial min/max MIN/MAX). Phase 1 groups by (keys..., salt), phase 2
-    combines by keys.
-    """
-    combiners = {"sum": "sum", "count": "sum", "min": "min", "max": "max"}
-    bad = [f for _, (_, f) in aggs.items() if f not in combiners]
-    if bad:
-        raise ValueError(f"salted_agg supports {sorted(combiners)}, got {bad}")
-    _check_no_salt_column(df)
-    keys = list(keys)
-    partial = (
-        df.withColumn(_SALT, _salt_of(df, n_salt))
-        .groupBy(*keys, _SALT)
-        .agg(
-            *[
-                getattr(F, fn)(col).alias(out)
-                for out, (col, fn) in aggs.items()
-            ]
-        )
-    )
-    return partial.groupBy(*keys).agg(
-        *[
-            getattr(F, combiners[fn])(out).alias(out)
-            for out, (_, fn) in aggs.items()
-        ]
-    )

@@ -18,9 +18,9 @@ The byte cap mirrors the reference's *soft* maxBytes semantics
 (Processing.scala:249 checks after exceeding; config comment calls it a soft
 limit): we translate maxBytes to a record-count cap using the batch's
 average compressed-line estimate rather than tracking exact compressed bytes.
-Both that estimate and the hot-partition salt plan come from one
-per-partition (rows, bytes) sizing aggregate, which the pipeline supplies
-from its own stats collect.
+Both that estimate and the hot-partition salt plan come from the caller's
+per-partition (rows, bytes) sizes, which the pipeline takes from its own
+stats collect; the sink runs no sizing job of its own.
 """
 
 from __future__ import annotations
@@ -39,10 +39,9 @@ from pyspark.sql import functions as F
 
 from snowplow_s3_loader_spark.dynamic_path import get_filename, normalize_path
 
-# partition column name used during the staged write; '~' replaces '/' so the
-# whole template path stays one partitionBy column
+# partition column name used during the staged write; partitionBy escapes
+# the '/' of a template path as %2F, so the whole path stays one directory
 _PP = "__pp"
-_SLASH = "~"
 
 # assumed gzip ratio for translating maxBytes (compressed) into a row-count
 # soft cap; the reference itself sizes buffers with similar heuristics
@@ -183,8 +182,8 @@ def build_rename_jobs(
 
     Pure string work (scheme-agnostic, works identically for local and
     s3:// paths): strip the staging prefix, decode the __pp= partition
-    segment back into the template path, and number/uuid the files per
-    partition in sorted order."""
+    segment back into the template path (partitionBy's own escaping, e.g.
+    '/' as %2F), and number/uuid the files per partition in sorted order."""
     now = now or datetime.now(timezone.utc)
     by_partition: dict[str, list[str]] = {}
     for src in staged_files:
@@ -192,7 +191,7 @@ def build_rename_jobs(
         segs = rel.split("/")
         partition = ""
         if segs and segs[0].startswith(_PP + "="):
-            partition = unquote(segs[0][len(_PP) + 1 :]).replace(_SLASH, "/")
+            partition = unquote(segs[0][len(_PP) + 1 :])
         if partition == "__HIVE_DEFAULT_PARTITION__":
             partition = ""
         by_partition.setdefault(partition, []).append(src)
@@ -249,12 +248,12 @@ def write_batch(
     df: DataFrame,
     base_dir: str,
     partition_col: str,
+    sizes: dict[str | None, tuple[int, int]],
     value_col: str = "value",
     prefix: str = "",
     max_bytes: int = 67_108_864,
     now: datetime | None = None,
     deterministic_uuids: bool = False,
-    sizes: dict[str | None, tuple[int, int]] | None = None,
     list_fn=None,
     cleanup_fn=None,
     client_factory: str | None = None,
@@ -262,29 +261,24 @@ def write_batch(
     """Write one batch: rows carry their resolved partition path in
     `partition_col` ('' for unpartitioned). Returns the written files.
 
-    `sizes` maps each partition value to its (rows, value bytes). One
-    sizing aggregate decides everything before the write: the byte cap's
-    row estimate and which hot partitions get salted. Callers that already
-    ran it (the pipeline folds it into its stats collect) pass it in, so the
-    write pays no sizing job; otherwise the same aggregate runs here, once.
+    `sizes` maps each partition value to its (rows, value bytes), as the
+    pipeline's stats collect gives them. They decide everything before the
+    write: the byte cap's row estimate and which hot partitions get salted,
+    so the write pays no sizing job.
     """
     now = now or datetime.now(timezone.utc)
     staging = base_dir.rstrip("/") + "/_staging_" + uuid_mod.uuid4().hex[:8]
 
     staged = df.select(
         F.col(value_col).alias("value"),
-        F.regexp_replace(F.coalesce(F.col(partition_col), F.lit("")), "/", _SLASH).alias(_PP),
+        F.coalesce(F.col(partition_col), F.lit("")).alias(_PP),
     )
 
-    if sizes is None:
-        rows = staged.groupBy(_PP).agg(F.count("*"), F.sum(F.octet_length("value")))
-        sizes = {pp: (n, b or 0) for pp, n, b in rows.collect()}
-    # keyed like the staged column: None -> '', '/' -> '~'
+    # keyed like the staged column: None -> ''
     part_counts: dict[str, int] = {}
     n_bytes = 0
     for pp, (n, b) in sizes.items():
-        key = (pp or "").replace("/", _SLASH)
-        part_counts[key] = part_counts.get(key, 0) + n
+        part_counts[pp or ""] = part_counts.get(pp or "", 0) + n
         n_bytes += b
     row_count = sum(part_counts.values())
     if not row_count:

@@ -1,8 +1,8 @@
 """Health probe + app health — O14 (Environment.scala:66-98,
 RuntimeService.scala:15-25, core reference.conf:39-42).
 
-Healthy iff setup succeeded, neither sink has erred, and no batch has been
-in flight longer than unhealthyLatency (2 min default). As in the
+Healthy iff neither sink's last call raised and no batch has been in
+flight longer than unhealthyLatency (2 min default). As in the
 reference, the limit applies to work in flight, so an idle loader on a
 quiet stream stays healthy."""
 
@@ -13,10 +13,12 @@ import threading
 from dataclasses import dataclass
 from time import monotonic
 
+# cumulative metrics of MetricsState.snapshot(); every other value is a gauge
+_COUNTERS = frozenset({"count", "input_rows", "batches"})
+
 
 @dataclass
 class AppHealth:
-    setup_ok: bool = True
     blob_sink_ok: bool = True
     bad_sink_ok: bool = True
     unhealthy_latency_seconds: float = 120.0
@@ -29,7 +31,7 @@ class AppHealth:
         self._batch_started = None
 
     def is_healthy(self) -> bool:
-        if not (self.setup_ok and self.blob_sink_ok and self.bad_sink_ok):
+        if not (self.blob_sink_ok and self.bad_sink_ok):
             return False
         started = self._batch_started
         return started is None or monotonic() - started <= self.unhealthy_latency_seconds
@@ -60,7 +62,8 @@ class HealthProbe:
             def do_GET(self):  # noqa: N802
                 if self.path.rstrip("/") == "/metrics":
                     body = "".join(
-                        f"# TYPE snowplow_loader_{k} gauge\nsnowplow_loader_{k} {v}\n"
+                        f"# TYPE snowplow_loader_{k} {'counter' if k in _COUNTERS else 'gauge'}\n"
+                        f"snowplow_loader_{k} {v}\n"
                         for k, v in (snapshot() if snapshot else {}).items()
                     ).encode()
                     self.send_response(200)

@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import socket
 import threading
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql.streaming import StreamingQueryListener
@@ -26,6 +25,7 @@ class MetricsState:
     batch_latency_ms: float = 0.0
     input_rows: int = 0
     batches: int = 0
+    _absorbed: int = field(default=0, repr=False)  # action-log entries folded in
     _lock: threading.Lock = field(default_factory=threading.Lock, repr=False)
 
     def snapshot(self) -> dict:
@@ -39,11 +39,16 @@ class MetricsState:
             }
 
     def absorb_actions(self, log: ActionLog) -> None:
+        """Fold in the actions appended to `log` since the last call, so a
+        scrape or emit costs the new actions only, not the whole log."""
         with self._lock:
-            self.count = sum(a.detail[0] for a in log.of_kind("AddedCountMetric"))
-            lat = [a.detail[0] for a in log.of_kind("SetE2ELatencyMetric")]
-            if lat:
-                self.e2e_latency_ms = lat[-1]
+            new = log.actions[self._absorbed :]
+            self._absorbed += len(new)
+            for a in new:
+                if a.kind == "AddedCountMetric":
+                    self.count += a.detail[0]
+                elif a.kind == "SetE2ELatencyMetric":
+                    self.e2e_latency_ms = a.detail[0]
 
 
 class LoaderQueryListener(StreamingQueryListener):

@@ -20,12 +20,17 @@ Stage mapping (SURVEY.md SS2.1):
     O12 bad rows                         -> badrows + sinks/bad_sink
     O13 ack/checkpoint                   -> option("checkpointLocation", ...)
 
+Every batch arrives as a binary `payload` column, the shape all sources
+produce, and goes through the decompression stage: envelopes expand into
+lines, plain records pass through unchanged.
+
 Fixed per-batch cost is kept to the work itself: one sizing aggregate over
 the cached classified rows yields the good count, the e2e-latency
 timestamp and the per-partition (rows, bytes) the blob sink sizes its write
 from; the blob sink promotes its files on the driver (no Spark job); and the
 bad-row projection is built once per pipeline, reading the flush time from a
-per-batch `__now` column.
+per-batch `__now` column. Each sink's health flag follows that sink's own
+last call: false when it raised, true once it succeeds again.
 """
 
 from __future__ import annotations
@@ -34,7 +39,7 @@ from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from snowplow_s3_loader_spark import badrows
@@ -74,7 +79,7 @@ class LoaderPipeline:
             )
         elif self.bad_sink is None:
             self.bad_sink = FileBadSink(bad.path or (self.config.good.path.rstrip("/") + "-bad"))
-        self._bad_row = _bad_row_column(bad.max_record_size)
+        self._bad_row = badrows.bad_row_column(bad.max_record_size)
 
     # ---------------- the foreachBatch body (O5..O13) ----------------
 
@@ -82,16 +87,13 @@ class LoaderPipeline:
         cfg = self.config
         now = self.now_fn()
 
-        if "payload" in batch_df.columns and "value" not in batch_df.columns:
-            lines = decompressed_stream(
-                batch_df,
-                limits=DecompressionLimits(
-                    cfg.decompression.max_bytes_in_batch,
-                    cfg.decompression.max_bytes_single_payload,
-                ),
-            )
-        else:
-            lines = batch_df.withColumn("decompress_error", F.lit(None).cast("string"))
+        lines = decompressed_stream(
+            batch_df,
+            limits=DecompressionLimits(
+                cfg.decompression.max_bytes_in_batch,
+                cfg.decompression.max_bytes_single_payload,
+            ),
+        )
 
         # O8: resolve the partition template — schema tokens per row
         # (template stays literal for the atomic schema), time tokens from
@@ -130,19 +132,23 @@ class LoaderPipeline:
 
             # 1) good writes (O7/O10)
             if n_good:
-                result = write_batch(
-                    classified.filter(is_good),
-                    cfg.good.path,
-                    "__partition",
-                    prefix=cfg.good.prefix,
-                    max_bytes=cfg.batching.max_bytes,
-                    now=now,
-                    deterministic_uuids=self.deterministic_uuids,
-                    sizes=sizes,
-                )
+                try:
+                    result = write_batch(
+                        classified.filter(is_good),
+                        cfg.good.path,
+                        "__partition",
+                        sizes,
+                        prefix=cfg.good.prefix,
+                        max_bytes=cfg.batching.max_bytes,
+                        now=now,
+                        deterministic_uuids=self.deterministic_uuids,
+                    )
+                except Exception:
+                    self.health.blob_sink_ok = False
+                    raise
+                self.health.blob_sink_ok = True
                 for wf in result.files:
                     self.actions.record("WroteFile", wf.path, wf.n_bytes)
-                self.health.blob_sink_ok = True
 
             # 2) metrics (O11): count, then e2e latency vs earliest tstamp
             self.actions.record("AddedCountMetric", n_good)
@@ -159,20 +165,21 @@ class LoaderPipeline:
             # materializes driver-side. `__now` is a real instant literal
             # (aware datetime): badrows renders it as ISO-8601 UTC with
             # millis under any session timezone.
-            n_bad, bad_bytes = self.bad_sink.send_df(
-                classified.filter(~is_good)
-                .withColumn("__now", F.lit(now))
-                .select(self._bad_row)
-            )
+            try:
+                n_bad, bad_bytes = self.bad_sink.send_df(
+                    classified.filter(~is_good)
+                    .withColumn("__now", F.lit(now))
+                    .select(self._bad_row)
+                )
+            except Exception:
+                self.health.bad_sink_ok = False
+                raise
+            self.health.bad_sink_ok = True
             if n_bad:
                 self.actions.record("SentToBad", n_bad, bad_bytes)
-                self.health.bad_sink_ok = True
 
             # 4) checkpoint marker: foreachBatch returning = offsets commit
             self.actions.record("Checkpointed", batch_id)
-        except Exception:
-            self.health.blob_sink_ok = False
-            raise
         finally:
             self.health.batch_finished()
             classified.unpersist()
@@ -180,7 +187,9 @@ class LoaderPipeline:
     # ---------------- entry points ----------------
 
     def run_batch(self, df: DataFrame) -> None:
-        """Batch-mode slice (tests, backfills): one load_batch call."""
+        """Batch-mode slice (tests, backfills): one load_batch call on a
+        frame with a binary `payload` column, the shape every source
+        produces (plain records pass through decompression unchanged)."""
         self.load_batch(df, batch_id=0)
 
     def run_stream(self, source: DataFrame, checkpoint: str | None = None):
@@ -201,24 +210,10 @@ class LoaderPipeline:
         ckpt = checkpoint or self.config.checkpoint_location
         if ckpt:
             writer = writer.option("checkpointLocation", ckpt)
-        query = writer.start()
-        self.health.setup_ok = True
-        return query
+        return writer.start()
 
 
 def trigger_interval(max_delay_seconds: float) -> str:
     """maxDelay as a processing-time trigger interval, in milliseconds so a
     sub-second or fractional delay is kept rather than truncated."""
     return f"{round(max_delay_seconds * 1000)} milliseconds"
-
-
-def _bad_row_column(max_record_size: int) -> Column:
-    """One size-capped bad-row column for both failure kinds: decompression
-    failures as LoaderParsingError, parse failures as GenericError
-    (Processing.scala:156-165, 189-204). Reads the flush time from the
-    batch's `__now` column."""
-    value, err, now = F.col("value"), F.col("decompress_error"), F.col("__now")
-    serialized = F.when(
-        err.isNotNull(), F.to_json(badrows.loader_parsing_error(value, err, now))
-    ).otherwise(F.to_json(badrows.generic_error(value, F.col("bad_message"), now)))
-    return badrows.cap_serialized_size(serialized, now, max_record_size).alias("row")

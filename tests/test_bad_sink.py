@@ -215,7 +215,7 @@ def test_majority_bad_batch_stays_off_driver(spark, tmp_path):
     sink = _NoDriverListSink(str(tmp_path / "bad"))
     p = LoaderPipeline(spark, cfg, bad_sink=sink)
     # every row is bad
-    df = spark.createDataFrame([("{not json",)] * 50, "value string")
+    df = spark.createDataFrame([(bytearray(b"{not json"),)] * 50, "payload binary")
     p.run_batch(df)
     sent = [a for a in p.actions.actions if a.kind == "SentToBad"]
     assert len(sent) == 1 and sent[0].detail[0] == 50

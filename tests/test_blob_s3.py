@@ -72,10 +72,19 @@ from snowplow_s3_loader_spark.sinks.blob import (
 from snowplow_s3_loader_spark.testing.fake_s3 import FakeS3Client
 
 
+def _sizes(df, partition_col="pp"):
+    """The per-partition (rows, value bytes) the pipeline's stats collect
+    hands write_batch."""
+    from pyspark.sql import functions as F
+
+    rows = df.groupBy(partition_col).agg(F.count("*"), F.sum(F.octet_length("value")))
+    return {pp: (n, b or 0) for pp, n, b in rows.collect()}
+
+
 def test_build_rename_jobs_s3_uris():
     staged = [
-        "s3://bkt/out/_staging_ab/__pp=com.example.event1~model%3D1/part-00001.gz",
-        "s3://bkt/out/_staging_ab/__pp=com.example.event1~model%3D1/part-00000.gz",
+        "s3://bkt/out/_staging_ab/__pp=com.example.event1%2Fmodel%3D1/part-00001.gz",
+        "s3://bkt/out/_staging_ab/__pp=com.example.event1%2Fmodel%3D1/part-00000.gz",
         "s3://bkt/out/_staging_ab/__pp=__HIVE_DEFAULT_PARTITION__/part-00000.gz",
     ]
     from datetime import datetime, timezone
@@ -90,9 +99,9 @@ def test_build_rename_jobs_s3_uris():
         # files numbered in sorted part order
         ("s3://bkt/out/_staging_ab/__pp=__HIVE_DEFAULT_PARTITION__/part-00000.gz",
          "s3://bkt/out/2026-01-02-030405-0000.gz"),
-        ("s3://bkt/out/_staging_ab/__pp=com.example.event1~model%3D1/part-00000.gz",
+        ("s3://bkt/out/_staging_ab/__pp=com.example.event1%2Fmodel%3D1/part-00000.gz",
          "s3://bkt/out/com.example.event1/model=1/2026-01-02-030405-0000.gz"),
-        ("s3://bkt/out/_staging_ab/__pp=com.example.event1~model%3D1/part-00001.gz",
+        ("s3://bkt/out/_staging_ab/__pp=com.example.event1%2Fmodel%3D1/part-00001.gz",
          "s3://bkt/out/com.example.event1/model=1/2026-01-02-030405-0001.gz"),
     ]
 
@@ -108,7 +117,7 @@ def test_write_batch_end_to_end_over_file_uri(spark, tmp_path):
          ("line-b1", "com.example/event2")],
         "value string, pp string",
     )
-    res = write_batch(df, base, "pp", deterministic_uuids=True)
+    res = write_batch(df, base, "pp", _sizes(df), deterministic_uuids=True)
     assert len(res.files) == 2
     paths = [f.path for f in res.files]
     # _move_one normalizes file:// dsts to plain local paths
@@ -186,7 +195,7 @@ def test_write_batch_hot_partition_salted_no_fragmentation(spark, tmp_path):
 
     per_file = 100
     max_bytes = int(per_file * avg * GZIP_RATIO_ESTIMATE)
-    res = write_batch(df, base, "pp", max_bytes=max_bytes, deterministic_uuids=True)
+    res = write_batch(df, base, "pp", _sizes(df), max_bytes=max_bytes, deterministic_uuids=True)
 
     by_dir: dict = {}
     for f in res.files:
@@ -239,7 +248,7 @@ def test_write_batch_salt_modulus_and_task_spread(spark, tmp_path):
         return captured["staged"]
 
     res = write_batch(
-        df, base, "pp", max_bytes=max_bytes, deterministic_uuids=True,
+        df, base, "pp", _sizes(df), max_bytes=max_bytes, deterministic_uuids=True,
         list_fn=list_local,
     )
 
@@ -267,28 +276,41 @@ def test_write_batch_salt_modulus_and_task_spread(spark, tmp_path):
 
 
 def test_write_batch_with_sizes_runs_no_sizing_job(spark, tmp_path, spark_jobs):
-    """Callers that pass the per-partition (rows, bytes) sizes (the pipeline
-    folds them into its stats collect) pay only the write: no sizing job.
-    Without sizes the same aggregate runs once inside write_batch."""
+    """write_batch sizes its write from the caller's per-partition (rows,
+    bytes), which the pipeline folds into its stats collect: the sink runs
+    no sizing job of its own."""
     df = spark.createDataFrame(
         [("a", "p1"), ("b", "p1"), ("c", "p2")], "value string, pp string"
     )
+    res, jobs = spark_jobs(
+        lambda: write_batch(
+            df, str(tmp_path / "out"), "pp", {"p1": (2, 2), "p2": (1, 1)},
+            deterministic_uuids=True,
+        )
+    )
+    collects = [n for stages in jobs for n in stages if n.startswith("collect at")]
+    assert jobs and not collects, jobs
+    dirs = {os.path.dirname(f.path) for f in res.files}
+    assert len(res.files) == 2 and len(dirs) == 2
 
-    def write(name, sizes):
-        return write_batch(df, str(tmp_path / name), "pp", deterministic_uuids=True, sizes=sizes)
 
-    supplied_res, supplied = spark_jobs(lambda: write("supplied", {"p1": (2, 2), "p2": (1, 1)}))
-    computed_res, computed = spark_jobs(lambda: write("computed", None))
-
-    def collects(jobs):
-        return [n for stages in jobs for n in stages if n.startswith("collect at")]
-
-    assert supplied and not collects(supplied), supplied
-    assert collects(computed), computed
-    assert len(computed) > len(supplied)
-    for res in (supplied_res, computed_res):
-        dirs = {os.path.dirname(f.path) for f in res.files}
-        assert len(res.files) == 2 and len(dirs) == 2
+def test_write_batch_partition_with_tilde_keeps_its_directory(spark, tmp_path):
+    """A partition path survives the staged write through partitionBy's own
+    escaping: '~' is an ordinary character and '/' still nests, so
+    'a~b/c' lands in a~b/c/, as a plain partitionBy would name it."""
+    base = str(tmp_path / "out")
+    df = spark.createDataFrame(
+        [("l1", "a~b/c"), ("l2", "a~b/c"), ("l3", "v.e/model=1")], "value string, pp string"
+    )
+    res = write_batch(df, base, "pp", _sizes(df), deterministic_uuids=True)
+    by_dir = {}
+    for f in res.files:
+        lines = gzip.open(f.path, "rt").read().splitlines()
+        by_dir.setdefault(os.path.relpath(os.path.dirname(f.path), base), []).extend(lines)
+    assert {d: sorted(v) for d, v in by_dir.items()} == {
+        "a~b/c": ["l1", "l2"],
+        "v.e/model=1": ["l3"],
+    }
 
 
 def test_promote_staging_runs_no_spark_job(spark, tmp_path, spark_jobs):

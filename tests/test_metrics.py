@@ -46,15 +46,50 @@ def test_listener_captures_progress(spark, tmp_path):
 
 
 def test_state_absorbs_action_log():
+    """Absorbing is incremental: a second call over the same log adds
+    nothing, and actions appended since the last call are picked up."""
     state = MetricsState()
     log = ActionLog()
     log.record("AddedCountMetric", 5)
     log.record("SetE2ELatencyMetric", 1200)
     log.record("AddedCountMetric", 3)
     state.absorb_actions(log)
+    state.absorb_actions(log)
     snap = state.snapshot()
     assert snap["count"] == 8
     assert snap["e2e_latency_millis"] == 1200
+    log.record("WroteFile", "f.gz", 10)
+    log.record("AddedCountMetric", 4)
+    log.record("SetE2ELatencyMetric", 800)
+    state.absorb_actions(log)
+    snap = state.snapshot()
+    assert snap["count"] == 12
+    assert snap["e2e_latency_millis"] == 800
+
+
+def test_prometheus_exposition_types():
+    """/metrics types the cumulative values as counters, the rest as gauges."""
+    import urllib.request
+
+    from snowplow_s3_loader_spark.streaming.health import AppHealth, HealthProbe
+
+    state = MetricsState()
+    probe = HealthProbe(AppHealth(), port=0, metrics_snapshot=state.snapshot)
+    port = probe.start()
+    try:
+        body = urllib.request.urlopen(f"http://127.0.0.1:{port}/metrics").read().decode()
+    finally:
+        probe.stop()
+    types = dict(
+        line.split()[2:4] for line in body.splitlines() if line.startswith("# TYPE ")
+    )
+    assert types == {
+        "snowplow_loader_count": "counter",
+        "snowplow_loader_input_rows": "counter",
+        "snowplow_loader_batches": "counter",
+        "snowplow_loader_e2e_latency_millis": "gauge",
+        "snowplow_loader_latency_millis": "gauge",
+    }
 
 
 def test_statsd_datagrams():

@@ -14,9 +14,7 @@ from snowplow_s3_loader_spark.operators.parse import (
     MSG_CANT_PARSE_JSON,
     PURPOSE_ENRICHED,
     PURPOSE_SDJ,
-    bad_rows,
     classify,
-    good_rows,
 )
 
 
@@ -60,8 +58,9 @@ def test_sdj_grouping_and_bad_rows(spark):
         '{"schema": "not-iglu", "data": {}}',  # malformed iglu URI
     ]
     df = classify(spark.createDataFrame([(l,) for l in lines], "value string"), PURPOSE_SDJ)
-    good = good_rows(df).orderBy("value").collect()
-    bad = {r["value"]: r["bad_message"] for r in bad_rows(df).collect()}
+    good = df.filter(F.col("bad_message").isNull()).orderBy("value").collect()
+    bad_df = df.filter(F.col("bad_message").isNotNull())
+    bad = {r["value"]: r["bad_message"] for r in bad_df.collect()}
 
     assert len(good) == 2
     k1 = good[0]["schema_key"]
@@ -79,7 +78,7 @@ def test_sdj_grouping_and_bad_rows(spark):
 def test_sdj_data_passthrough(spark):
     line = '{"schema": "iglu:com.example/e/jsonschema/1-0-0", "data": {"nested": {"x": [1, 2]}}}'
     df = classify(spark.createDataFrame([(line,)], "value string"), PURPOSE_SDJ)
-    assert good_rows(df).first()["value"] == line
+    assert df.filter(F.col("bad_message").isNull()).first()["value"] == line
 
 
 def test_schema_key_parse_roundtrip():

@@ -14,7 +14,6 @@ import os
 from datetime import datetime, timezone
 
 import pytest
-from pyspark.sql import functions as F
 
 from snowplow_s3_loader_spark.config import from_dict
 from snowplow_s3_loader_spark.operators.decompression import make_envelope
@@ -58,12 +57,13 @@ def _read_bad_envelopes(bad_dir):
     return rows
 
 
-def _lines_df(spark, lines):
-    return spark.createDataFrame([(l,) for l in lines], "value string")
-
-
 def _payload_df(spark, payloads):
     return spark.createDataFrame([(bytearray(p),) for p in payloads], "payload binary")
+
+
+def _lines_df(spark, lines):
+    """Plain records, one line each, in the source shape (binary payload)."""
+    return _payload_df(spark, [line.encode() for line in lines])
 
 
 def _read_gz_files(base):
@@ -354,6 +354,50 @@ def test_health_probe(spark, tmp_path):
         with pytest.raises(urllib.error.HTTPError) as exc:
             urllib.request.urlopen(f"http://127.0.0.1:{port}/health")
         assert exc.value.code == 503
+    finally:
+        probe.stop()
+
+
+def test_health_blames_the_failing_sink_until_its_next_success(spark, tmp_path):
+    """A failed bad-row send marks the bad sink unhealthy, not the blob
+    sink, and the probe answers 503; the bad sink's next successful send
+    brings it back to 200."""
+    import urllib.error
+    import urllib.request
+
+    from snowplow_s3_loader_spark.sinks.bad_sink import FileBadSink
+    from snowplow_s3_loader_spark.streaming.health import HealthProbe
+
+    class FlakyBadSink(FileBadSink):
+        fail = True
+
+        def send_df(self, df, row_col="row"):
+            if self.fail:
+                raise OSError("bad sink down")
+            return super().send_df(df, row_col)
+
+    cfg = _cfg(tmp_path)
+    sink = FlakyBadSink(str(tmp_path / "bad"))
+    p = LoaderPipeline(spark, cfg, bad_sink=sink, now_fn=lambda: NOW)
+    probe = HealthProbe(p.health, port=0)
+    port = probe.start()
+
+    def status():
+        try:
+            return urllib.request.urlopen(f"http://127.0.0.1:{port}/health").status
+        except urllib.error.HTTPError as e:
+            return e.code
+
+    try:
+        with pytest.raises(OSError, match="bad sink down"):
+            p.run_batch(_lines_df(spark, [_enriched()]))
+        assert p.actions.kinds()[0] == "WroteFile"  # the good write succeeded
+        assert p.health.blob_sink_ok and not p.health.bad_sink_ok
+        assert status() == 503
+        sink.fail = False
+        p.run_batch(_lines_df(spark, [_enriched(app="app2")]))
+        assert p.health.blob_sink_ok and p.health.bad_sink_ok
+        assert status() == 200
     finally:
         probe.stop()
 

@@ -1,12 +1,12 @@
-"""Salted-join / salted-agg skew utilities: result equivalence with the
-plain operators, partitioning spread, and determinism."""
+"""Salted-join skew utility: result equivalence with the plain join,
+partitioning spread, and determinism."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from snowplow_s3_loader_spark.operators.skew import salted_agg, salted_join
+from snowplow_s3_loader_spark.operators.skew import salted_join
 
 
 @pytest.fixture()
@@ -73,52 +73,12 @@ def test_salt_is_deterministic(skewed):
     assert a == b
 
 
-def test_salted_agg_matches_plain(skewed):
-    plain = {
-        (r["k"],): (r["total"], r["n"], r["lo"], r["hi"])
-        for r in skewed.groupBy("k")
-        .agg(
-            F.sum("v").alias("total"),
-            F.count("v").alias("n"),
-            F.min("v").alias("lo"),
-            F.max("v").alias("hi"),
-        )
-        .collect()
-    }
-    salted = {
-        (r["k"],): (r["total"], r["n"], r["lo"], r["hi"])
-        for r in salted_agg(
-            skewed,
-            ["k"],
-            {
-                "total": ("v", "sum"),
-                "n": ("v", "count"),
-                "lo": ("v", "min"),
-                "hi": ("v", "max"),
-            },
-            n_salt=8,
-        ).collect()
-    }
-    assert salted == plain
-
-
-def test_salted_agg_rejects_non_algebraic(skewed):
-    with pytest.raises(ValueError):
-        salted_agg(skewed, ["k"], {"d": ("v", "avg")})
-
-
 def test_skew_helpers_reject_preexisting_salt_column(spark):
     # a caller-owned '__salt' column would silently collide with the
-    # internal working column — both helpers must fail loudly
-    import pytest
-
-    from snowplow_s3_loader_spark.operators.skew import salted_agg, salted_join
-
+    # internal working column — the join must fail loudly on either side
     big = spark.createDataFrame([(1, 0)], "k long, __salt int")
     small = spark.createDataFrame([(1, "x")], "k long, v string")
     with pytest.raises(ValueError, match="__salt"):
         salted_join(big, small, ["k"])
     with pytest.raises(ValueError, match="__salt"):
         salted_join(small, big, ["k"])
-    with pytest.raises(ValueError, match="__salt"):
-        salted_agg(big, ["k"], {"n": ("k", "count")})

@@ -45,7 +45,9 @@ def test_loader_throughput_1m_lines(spark, tmp_path):
             F.lit('/jsonschema/1-0-0", "data": {"n": '),
             F.col("id").cast("string"),
             F.lit("}}"),
-        ).alias("value")
+        )
+        .cast("binary")
+        .alias("payload")
     )
 
     t0 = time.perf_counter()
